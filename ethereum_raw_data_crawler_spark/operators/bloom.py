@@ -1,32 +1,11 @@
-"""Partitioned Bloom prefilter for the URL-seen set.
+"""Bloom kernel of the partitioned URL-seen prefilter.
 
-The reference dedups with a MongoDB unique index plus a
-find-before-insert (reference: mongodb.go:86-92,111-115;
-crawler_service.go:433-457 — a read-modify-write race tolerated via
-duplicate-key-is-success). Set-based recast: new candidates are
-anti-joined against the ``seen`` table BEFORE fetch. At 10^10 URLs that
-anti-join shuffles every candidate against a 10^10-row build side each
-round; the Bloom bitmap kills the common case (candidate definitely
-unseen) map-side with zero shuffle — only maybe-seen candidates reach
-the exact anti-join backstop, so the filter is correctness-neutral
-(no false negatives by construction; FPR only costs extra join work).
-
-Scale design (SURVEY §Phase 3): the bitmap is PARTITIONED by
-``url_hash`` bucket — one immutable bitmap file per bucket beside the
-snapshot manifest, referenced by a versioned meta JSON (same
-atomic-swap protocol as the table manifests). Maintenance is
-executor-side Spark jobs end to end:
-
-  * per-round OR-in of the new seen fragment: repartition the new keys
-    by bucket, each task folds ITS buckets' keys into the prior bitmap
-    file and writes a new immutable file (an LSM-style merge);
-  * growth is per-bucket: a saturated bucket is rebuilt alone, from the
-    seen table filtered to that bucket, at its next size;
-  * probe: small total bitmaps broadcast (exactly the current local
-    regime); past ``BROADCAST_MAX_BYTES`` the candidates repartition by
-    bucket and each task loads only the bitmap files of the buckets it
-    holds — a 10^10-key / ~12 GB seen-set never materializes on the
-    driver and never broadcasts.
+The at-rest protocol — ``pmod`` bucketing, the versioned meta commit,
+the executor-side fold and growth jobs, and the two probe regimes — is
+:class:`~.partitioned_filter.PartitionedFilter`'s; this module supplies
+the per-bucket bitmap. It is the engine's default seen filter: the
+cheapest per key, at the price of never forgetting a key
+(operators/cuckoo.py is the deletable alternative).
 
 Sizing math (why the defaults scale; see ``buckets_for``). At FPR p the
 optimal bitmap spends ``-ln(p)/ln(2)^2`` bits per key — **9.59 bits ≈
@@ -43,28 +22,19 @@ comfortably inside a single task's memory (128 MB target):
 
 ``CrawlEngine.create`` defaults ``bloom_buckets`` from ``expected_keys``
 (seeds × a 16× discovery-growth allowance when not given) via exactly
-this table, so a 10^10-URL deployment starts with ~94 buckets instead
-of 64 oversized ones. The bucket count is FIXED for the store's
-lifetime (the bucket of a key must never change or probes would read
-the wrong bitmap); headroom beyond the estimate comes from per-bucket
-GROWTH — a saturated bucket rebuilds alone at the next power-of-two
-size — so an estimate that is low by even 100× degrades into larger
-per-bucket files (amortized rebuilds), never into false negatives.
-
-Vectorized numpy throughout (Arrow batches in mapInPandas — no per-row
-Python).
+this table, so a 10^10-URL deployment starts with 90 buckets instead of
+64 oversized ones.
 """
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import uuid
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
+
+from ethereum_raw_data_crawler_spark.operators.partitioned_filter import (
+    PartitionedFilter,
+)
 
 
 def _mix(h: np.ndarray, salt: int) -> np.ndarray:
@@ -127,16 +97,21 @@ def _capacity(n_bits: int, k: int) -> int:
 
 class BloomFilter:
     """Plain in-memory bit-array Bloom filter over int64 keys
-    (numpy-vectorized). The single-bitmap building block; the engine's
-    seen-set uses :class:`PartitionedBloom` (one of these per bucket,
-    at rest)."""
+    (numpy-vectorized). The per-bucket kernel of
+    :class:`PartitionedBloom` (one of these per bucket, at rest)."""
 
-    def __init__(self, n_bits: int = 1 << 23, k: int = 5) -> None:
+    def __init__(
+        self,
+        n_bits: int = 1 << 23,
+        k: int = 5,
+        words: np.ndarray | None = None,
+        n_added: int = 0,
+    ) -> None:
         assert n_bits % 64 == 0
         self.n_bits = n_bits
         self.k = k
-        self.words = np.zeros(n_bits // 64, dtype=np.uint64)
-        self.n_added = 0
+        self.words = np.zeros(n_bits // 64, dtype=np.uint64) if words is None else words
+        self.n_added = n_added
 
     @classmethod
     def sized_for(cls, expected_keys: int, fpr: float = 0.01) -> "BloomFilter":
@@ -171,8 +146,7 @@ class BloomFilter:
     @classmethod
     def load(cls, path: str) -> "BloomFilter":
         z = np.load(path)
-        bf = cls(int(z["n_bits"]), int(z["k"]))
-        bf.words = z["words"]
+        bf = cls(int(z["n_bits"]), int(z["k"]), words=z["words"])
         if "n_added" in z:
             bf.n_added = int(z["n_added"])
         else:
@@ -188,419 +162,44 @@ class BloomFilter:
         return bf
 
 
-class PartitionedBloom:
-    """Per-``url_hash``-bucket Bloom bitmaps at rest.
+class PartitionedBloom(PartitionedFilter):
+    """Per-``url_hash``-bucket Bloom bitmaps at rest: immutable
+    ``bloom/b{bucket:05d}-r{rnd}-*.npy`` raw word arrays, meta entries
+    ``{file, n_bits, k, n_added}``. A fold loads a bucket's word array and
+    ORs the new keys into it in place; the broadcast probe ships the word
+    arrays with a few ints each."""
 
-    Layout under ``<store_root>/bloom/``: immutable ``b{bucket}-*.npy``
-    word arrays plus ``meta-{round:06d}.json`` mapping bucket ->
-    (file, n_bits, k, n_added). The meta is the commit point (temp file
-    + ``os.replace``, same as the table manifests): a crash mid-update
-    leaves orphan bitmap files and the previous meta — consistent.
-    A bucket with no meta entry is an empty bitmap (definitely-absent).
+    KERNEL = BloomFilter
+    SUBDIR, FILE_PREFIX, FILE_EXT = "bloom", "b", ".npy"
+    SIZE_FIELDS = ("n_bits", "k")
+    DEFAULT_SIZE = {"n_bits": 1 << 17, "k": 5}
+    #: half the bits set: FPR ≈ 0.5^k, the classic design point
+    DESIGN_FILL = 0.5
+    PARAMS = ("fpr",)
+    BITS_PER_KEY = -math.log(0.01) / (math.log(2) ** 2)
 
-    The bucket of a key is ``pmod(key, n_buckets)`` — computable
-    identically JVM-side (``F.pmod``) and in numpy (``np.mod``), so the
-    add/grow/probe jobs can repartition candidates to colocate each
-    bucket's keys with the one task that touches its bitmap file.
-    """
-
-    #: probe broadcasts the whole bucket dict below this total bitmap size;
-    #: above it, candidates repartition by bucket and tasks load only their
-    #: buckets' files (the 100-TB path — nothing driver-resident)
-    BROADCAST_MAX_BYTES = 64 << 20
-
-    def __init__(self, store_root: str) -> None:
-        self.dir = os.path.join(store_root, "bloom")
-        self.n_buckets: int = 0
-        self.round: int = -1
-        self.fpr: float = 0.01
-        self.default_n_bits: int = 1 << 17
-        self.default_k: int = 5
-        #: bucket -> {"file": str|None, "n_bits": int, "k": int, "n_added": int}
-        self.buckets: dict[int, dict] = {}
-
-    # ---- construction / persistence ----------------------------------------
-    @classmethod
-    def create(
-        cls,
-        store_root: str,
-        n_buckets: int = 64,
-        expected_keys: int | None = None,
-        fpr: float = 0.01,
-        rnd: int = -1,
-        n_bits_per_bucket: int | None = None,
-        k: int | None = None,
-    ) -> "PartitionedBloom":
-        pb = cls(store_root)
-        pb.n_buckets = n_buckets
-        pb.fpr = fpr
-        if n_bits_per_bucket is not None:
-            pb.default_n_bits, pb.default_k = n_bits_per_bucket, k or 5
-        elif expected_keys is not None:
-            pb.default_n_bits, pb.default_k = _optimal_m_k(
-                max(expected_keys // n_buckets, 1024), fpr
-            )
-        os.makedirs(pb.dir, exist_ok=True)
-        pb._write_meta(rnd)
-        return pb
+    def __init__(self, store_root: str, fpr: float = 0.01) -> None:
+        super().__init__(store_root)
+        self.fpr = fpr
 
     @staticmethod
-    def buckets_for(
-        expected_keys: int,
-        fpr: float = 0.01,
-        target_bucket_bytes: int = 128 << 20,
-    ) -> int:
-        """Bucket count for a design capacity: enough buckets that one
-        bucket's bitmap (at ``-ln(fpr)/ln(2)^2`` bits/key) stays within
-        ``target_bucket_bytes`` — one task comfortably holds one bucket —
-        with a floor of 64 for probe/repartition parallelism. See the
-        module docstring's sizing table."""
-        bits_per_key = -math.log(fpr) / (math.log(2) ** 2)
-        total_bytes = expected_keys * bits_per_key / 8
-        return max(64, math.ceil(total_bytes / target_bucket_bytes))
-
-    @classmethod
-    def latest_round(cls, store_root: str) -> int | None:
-        d = os.path.join(store_root, "bloom")
-        best = None
-        if os.path.isdir(d):
-            for f in os.listdir(d):
-                if f.startswith("meta-") and f.endswith(".json"):
-                    v = int(f[len("meta-") : -len(".json")])
-                    best = v if best is None else max(best, v)
-        return best
-
-    @classmethod
-    def load(cls, store_root: str, rnd: int) -> "PartitionedBloom":
-        pb = cls(store_root)
-        with open(os.path.join(pb.dir, f"meta-{rnd:06d}.json")) as fh:
-            meta = json.load(fh)
-        pb.n_buckets = meta["n_buckets"]
-        pb.round = meta["round"]
-        pb.fpr = meta["fpr"]
-        pb.default_n_bits = meta["default_n_bits"]
-        pb.default_k = meta["default_k"]
-        pb.buckets = {int(b): e for b, e in meta["buckets"].items()}
-        return pb
-
-    def _write_meta(self, rnd: int) -> None:
-        meta = {
-            "round": rnd,
-            "n_buckets": self.n_buckets,
-            "fpr": self.fpr,
-            "default_n_bits": self.default_n_bits,
-            "default_k": self.default_k,
-            "buckets": {str(b): e for b, e in self.buckets.items()},
-        }
-        tmp = os.path.join(self.dir, f".meta.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, os.path.join(self.dir, f"meta-{rnd:06d}.json"))
-        self.round = rnd
-        self._gc(keep=2)
-
-    def _gc(self, keep: int = 2) -> None:
-        """Drop meta files past the newest ``keep`` and any bitmap file no
-        surviving meta references (superseded by later OR-ins/rebuilds)."""
-        # numeric sort on the parsed round (the same parse latest_round
-        # uses): lexicographic order breaks once the round number outgrows
-        # the zero padding ("meta-1000000.json" < "meta-999999.json")
-        metas = sorted(
-            (
-                f
-                for f in os.listdir(self.dir)
-                if f.startswith("meta-") and f.endswith(".json")
-            ),
-            key=lambda f: int(f[len("meta-") : -len(".json")]),
-        )
-        live: set[str] = set()
-        for mf in metas[-keep:]:
-            try:
-                with open(os.path.join(self.dir, mf)) as fh:
-                    m = json.load(fh)
-                for e in m["buckets"].values():
-                    if e.get("file"):
-                        live.add(e["file"])
-            except (OSError, json.JSONDecodeError):
-                continue
-        for f in os.listdir(self.dir):
-            if f.startswith("meta-") and f not in metas[-keep:]:
-                os.unlink(os.path.join(self.dir, f))
-            elif f.startswith("b") and f.endswith(".npy") and f not in live:
-                os.unlink(os.path.join(self.dir, f))
-
-    # ---- derived stats -------------------------------------------------------
-    @property
-    def total_bits(self) -> int:
-        """Bits across MATERIALIZED bucket bitmaps — what a broadcast
-        would actually ship (empty buckets have no file)."""
-        return sum(e["n_bits"] for e in self.buckets.values() if e.get("file"))
-
-    @property
-    def n_added_total(self) -> int:
-        return sum(e["n_added"] for e in self.buckets.values())
-
-    def estimated_saturation(self) -> float:
-        """Bitmap-size-weighted mean of the analytic per-bucket set-bit
-        fraction 1 - e^(-k·n/m) — no file IO, the health gauge."""
-        if not self.buckets:
-            return 0.0
-        num = sum(
-            (1.0 - math.exp(-e["k"] * e["n_added"] / e["n_bits"])) * e["n_bits"]
-            for e in self.buckets.values()
-        )
-        return num / self.total_bits
-
-    def saturated_buckets(self) -> list[int]:
-        return [
-            b
-            for b, e in self.buckets.items()
-            if e["n_added"] > _capacity(e["n_bits"], e["k"])
-        ]
-
-    # ---- executor-side maintenance -------------------------------------------
-    def _fold_job(
-        self,
-        keys_df,
-        key_col: str,
-        rnd: int,
-        merge_prior: bool,
-        sizes: dict[int, tuple[int, int]] | None = None,
-        bucket_filter: list[int] | None = None,
-    ) -> list:
-        """Shared Spark job: repartition keys by bucket; each task folds its
-        buckets' keys into a bitmap (ORing into the prior file when
-        ``merge_prior``) and writes a new immutable file. Returns the
-        collected per-bucket stat rows — the only thing that ever reaches
-        the driver."""
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        B = self.n_buckets
-        bloom_dir = self.dir
-        prior = {
-            int(b): (e.get("file"), int(e["n_bits"]), int(e["k"]))
-            for b, e in self.buckets.items()
-        }
-        default_m, default_k = self.default_n_bits, self.default_k
-        sizes = sizes or {}
-
-        out_schema = T.StructType(
-            [
-                T.StructField("bucket", T.IntegerType(), False),
-                T.StructField("file", T.StringType(), False),
-                T.StructField("n_bits", T.LongType(), False),
-                T.StructField("k", T.IntegerType(), False),
-                T.StructField("added", T.LongType(), False),
-            ]
+    def _read(path: str, entry: dict) -> BloomFilter:
+        return BloomFilter(
+            entry["n_bits"], entry["k"], words=np.load(path), n_added=entry["n_added"]
         )
 
-        def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            per_bucket: dict[int, list[np.ndarray]] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keys = pdf["_key"].to_numpy(dtype=np.int64)
-                bks = np.mod(keys, B)
-                for b in np.unique(bks):
-                    per_bucket.setdefault(int(b), []).append(keys[bks == b])
-            rows = []
-            for b, chunks in per_bucket.items():
-                keys = np.concatenate(chunks)
-                if b in sizes:
-                    m, k = sizes[b]
-                    words = np.zeros(m // 64, dtype=np.uint64)
-                else:
-                    file, m, k = prior.get(b, (None, default_m, default_k))
-                    if merge_prior and file is not None:
-                        words = np.load(os.path.join(bloom_dir, file))
-                    else:
-                        words = np.zeros(m // 64, dtype=np.uint64)
-                bitmap_add(words, keys, k, m)
-                fname = f"b{b:05d}-r{rnd}-{uuid.uuid4().hex[:8]}.npy"
-                np.save(os.path.join(bloom_dir, fname), words)
-                rows.append((b, fname, m, k, len(keys)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["bucket", "file", "n_bits", "k", "added"]
-                )
+    @staticmethod
+    def _write(bf: BloomFilter, path: str) -> None:
+        np.save(path, bf.words)
 
-        keyed = keys_df.select(F.col(key_col).cast("long").alias("_key"))
-        if bucket_filter is not None:
-            keyed = keyed.where(
-                F.pmod(F.col("_key"), F.lit(B)).isin([int(b) for b in bucket_filter])
-            )
-        return (
-            keyed.repartition(B, F.pmod(F.col("_key"), F.lit(B)))
-            .mapInPandas(fold, out_schema)
-            .collect()
-        )
+    def _size_for(self, n_keys: int) -> dict:
+        return dict(zip(self.SIZE_FIELDS, _optimal_m_k(n_keys, self.fpr)))
 
-    def add_keys(self, keys_df, key_col: str, rnd: int) -> list[int]:
-        """OR a round's new keys into the bucket bitmaps — one Spark job,
-        nothing but per-bucket stat rows on the driver. Commits a new meta
-        for ``rnd`` and returns the buckets now past design capacity."""
-        stats = self._fold_job(keys_df, key_col, rnd, merge_prior=True)
-        for r in stats:
-            b = int(r["bucket"])
-            old = self.buckets.get(b, {"n_added": 0})
-            self.buckets[b] = {
-                "file": r["file"],
-                "n_bits": int(r["n_bits"]),
-                "k": int(r["k"]),
-                "n_added": old["n_added"] + int(r["added"]),
-            }
-        self._write_meta(rnd)
-        return self.saturated_buckets()
+    @staticmethod
+    def _saturation(entry: dict) -> float:
+        """Analytic set-bit fraction 1 - e^(-k·n/m)."""
+        return 1.0 - math.exp(-entry["k"] * entry["n_added"] / entry["n_bits"])
 
-    def grow_buckets(
-        self, all_keys_df, key_col: str, rnd: int, grow: list[int]
-    ) -> None:
-        """Per-bucket growth: rebuild ONLY the saturated buckets from the
-        full seen set (filtered executor-side to those buckets), each at
-        its next optimal size — the partitioned analogue of the old
-        whole-bitmap rebuild, without touching the other buckets."""
-        sizes = {
-            int(b): _optimal_m_k(2 * self.buckets[b]["n_added"], self.fpr)
-            for b in grow
-        }
-        stats = self._fold_job(
-            all_keys_df, key_col, rnd, merge_prior=False, sizes=sizes,
-            bucket_filter=grow,
-        )
-        for r in stats:
-            b = int(r["bucket"])
-            self.buckets[b] = {
-                "file": r["file"],
-                "n_bits": int(r["n_bits"]),
-                "k": int(r["k"]),
-                "n_added": int(r["added"]),
-            }
-        self._write_meta(rnd)
-
-    # ---- probe -----------------------------------------------------------------
-    def probe_split(self, df, key_col: str, spark, scratch=None):
-        """(definitely_new, maybe_seen) split of ``df`` on ``key_col``.
-
-        Small filters broadcast the whole bucket dict (zero shuffle, the
-        local/bench regime). Past ``BROADCAST_MAX_BYTES`` the candidates
-        repartition by bucket so each task loads ONLY the bitmap files of
-        the buckets it holds — bounded executor memory, zero driver
-        residency (``last_probe_mode`` records which path ran, for the
-        plan-hygiene tests)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        B = self.n_buckets
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField("_maybe_seen", T.BooleanType(), False)]
-        )
-
-        if self.total_bits // 8 <= self.BROADCAST_MAX_BYTES:
-            self.last_probe_mode = "broadcast"
-            blobs = {
-                b: (
-                    np.load(os.path.join(self.dir, e["file"])),
-                    int(e["n_bits"]),
-                    int(e["k"]),
-                )
-                for b, e in self.buckets.items()
-                if e.get("file")
-            }
-            bc = spark.sparkContext.broadcast(blobs)
-
-            def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    keys = pdf[key_col].to_numpy(dtype=np.int64)
-                    bks = np.mod(keys, B)
-                    mask = np.zeros(len(keys), dtype=bool)
-                    for b in np.unique(bks):
-                        entry = bc.value.get(int(b))
-                        if entry is None:
-                            continue  # empty bucket: definitely absent
-                        sel = bks == b
-                        words, m, k = entry
-                        mask[sel] = bitmap_contains(words, keys[sel], k, m)
-                    yield pdf.assign(_maybe_seen=mask)
-
-            tagged = df.mapInPandas(tag, schema).cache()
-        else:
-            self.last_probe_mode = "aligned"
-            bloom_dir = self.dir
-            info = {
-                int(b): (e["file"], int(e["n_bits"]), int(e["k"]))
-                for b, e in self.buckets.items()
-                if e.get("file")
-            }
-
-            def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                cache: dict[int, np.ndarray] = {}
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    keys = pdf[key_col].to_numpy(dtype=np.int64)
-                    bks = np.mod(keys, B)
-                    mask = np.zeros(len(keys), dtype=bool)
-                    for b in np.unique(bks):
-                        entry = info.get(int(b))
-                        if entry is None:
-                            continue
-                        fname, m, k = entry
-                        if int(b) not in cache:
-                            cache[int(b)] = np.load(os.path.join(bloom_dir, fname))
-                        sel = bks == b
-                        mask[sel] = bitmap_contains(cache[int(b)], keys[sel], k, m)
-                    yield pdf.assign(_maybe_seen=mask)
-
-            tagged = (
-                df.repartition(B, F.pmod(F.col(key_col), F.lit(B)))
-                .mapInPandas(tag, schema)
-                .cache()
-            )
-        if scratch is not None:
-            scratch.append(tagged)
-        return (
-            tagged.where(~tagged["_maybe_seen"]).drop("_maybe_seen"),
-            tagged.where(tagged["_maybe_seen"]).drop("_maybe_seen"),
-        )
-
-
-def split_by_bloom(df, key_col: str, bloom, spark, scratch=None):
-    """Split candidates into (definitely_new, maybe_seen) — mapInPandas,
-    no row-Python. Only maybe_seen needs the exact anti-join backstop.
-
-    ``bloom`` is any at-rest partitioned filter exposing ``probe_split``
-    (:class:`PartitionedBloom` or the deletable
-    :class:`~..operators.cuckoo.PartitionedCuckoo`) or a plain in-memory
-    :class:`BloomFilter`/``CuckooFilter`` (broadcast whole — unit tests /
-    ad-hoc use; both expose ``contains_many``). The tagged intermediate is
-    CACHED (owned by ``scratch``): both returned branches read it, and
-    without the cache each branch would re-execute the full upstream
-    candidate pipeline."""
-    if hasattr(bloom, "probe_split"):
-        return bloom.probe_split(df, key_col, spark, scratch=scratch)
-
-    from pyspark.sql import types as T
-
-    bc = spark.sparkContext.broadcast(bloom)
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("_maybe_seen", T.BooleanType(), False)]
-    )
-
-    def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mask = bc.value.contains_many(pdf[key_col].to_numpy(dtype=np.int64))
-            yield pdf.assign(_maybe_seen=mask)
-
-    tagged = df.mapInPandas(tag, schema).cache()
-    if scratch is not None:
-        scratch.append(tagged)
-    return (
-        tagged.where(~tagged["_maybe_seen"]).drop("_maybe_seen"),
-        tagged.where(tagged["_maybe_seen"]).drop("_maybe_seen"),
-    )
+    @staticmethod
+    def _bits(entry: dict) -> int:
+        return entry["n_bits"]

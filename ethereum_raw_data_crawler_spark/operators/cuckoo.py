@@ -18,44 +18,41 @@ block_repository_impl.go:264-268) because its dedup is a MongoDB unique
 index — the index shrinks with the row. A bitmap prefilter loses that
 property; the cuckoo filter restores it at 100-TB scale.
 
+The at-rest protocol — ``pmod`` bucketing, the versioned meta commit,
+the executor-side fold and growth jobs, and the two probe regimes — is
+:class:`~.partitioned_filter.PartitionedFilter`'s, shared with the
+Bloom; this module supplies the per-bucket cuckoo table.
+
 Cost model vs the Bloom (documented trade, not hidden): 16-bit
 fingerprints x 4-slot buckets at a 0.90 design load factor spend
 ~17.8 bits/key (Bloom at FPR 0.01: 9.59) for an FPR of
 ``2·slots/2^16 ≈ 1.2e-4`` — ~80x fewer false positives AND deletability,
-for ~1.9x the bytes. Sizing table (same 128 MB/bucket target as
-``PartitionedBloom.buckets_for``):
+for ~1.9x the bytes. Sizing table (``buckets_for``, the same 128 MB per
+bucket target as the Bloom's):
 
     expected keys   total filter   buckets (>= 64 floor)
-    10^8            223 MB         64
-    10^10           22.3 GB        167
-    10^11           223 GB         1662
+    10^8            222 MB         64
+    10^10           22.2 GB        166
+    10^11           222 GB         1656
 
 Partial-key cuckoo hashing (Fan et al., CoNEXT'14, public): fingerprint
 ``fp = mix(h) -> 1..65535``; candidate buckets ``i1 = mix(h) & (nb-1)``
 and ``i2 = i1 ^ (mix(fp) & (nb-1))`` — the xor makes relocation possible
 knowing only (i, fp). Inserts are batch-vectorized (numpy group-place by
 target bucket, two passes), with a deterministic eviction walk only for
-the rare overflow keys and a bounded stash behind that. Resize cannot be
-done from fingerprints alone (the upper hash bits are gone), so growth =
-per-bucket rebuild from the seen table — the same ground-truth-rebuild
-protocol ``PartitionedBloom.grow_buckets`` uses.
-
-Vectorized numpy throughout; Spark surface is mapInPandas (Arrow
-batches, no per-row Python), mirroring operators/bloom.py.
+the rare overflow keys and a bounded stash behind that.
 """
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import uuid
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from ethereum_raw_data_crawler_spark.operators.bloom import _mix
+from ethereum_raw_data_crawler_spark.operators.partitioned_filter import (
+    PartitionedFilter,
+)
 
 _SLOTS = 4
 _DESIGN_LOAD = 0.90  # rebuild trigger; 4-slot cuckoo fills to ~0.95
@@ -246,345 +243,37 @@ class CuckooFilter:
         return cf
 
 
-class PartitionedCuckoo:
-    """Per-``url_hash``-bucket cuckoo filters at rest — the deletable twin
-    of :class:`~..operators.bloom.PartitionedBloom`, same layout and
-    commit protocol so the engine can swap one for the other via config:
+class PartitionedCuckoo(PartitionedFilter):
+    """Per-``url_hash``-bucket cuckoo filters at rest — the deletable
+    alternative to :class:`~..operators.bloom.PartitionedBloom`, selected
+    by ``seen_filter="cuckoo"``: immutable ``cuckoo/c{bucket:05d}-*.npz``
+    files (table, stash, n_added), meta entries ``{file, nb, n_added}``.
+    :meth:`delete_keys` is the takedown/recrawl unlearn path."""
 
-      * ``<store_root>/cuckoo/c{bucket}-*.npz`` immutable filter files +
-        ``meta-{round:06d}.json`` (temp-file + ``os.replace`` commit, GC
-        keeps the newest 2 metas and only files they reference);
-      * key -> bucket is ``pmod(key, n_buckets)``, identical JVM-side and
-        in numpy, so add/delete/probe jobs colocate each bucket's keys
-        with the one task touching its file;
-      * growth is per-bucket rebuild from the seen TABLE (ground truth) —
-        fingerprints alone cannot be rehashed to a larger table;
-      * NEW vs the Bloom: :meth:`delete_keys` — the takedown/recrawl
-        unlearn path.
-    """
-
-    BROADCAST_MAX_BYTES = 64 << 20
-
-    def __init__(self, store_root: str) -> None:
-        self.dir = os.path.join(store_root, "cuckoo")
-        self.n_buckets: int = 0
-        self.round: int = -1
-        self.default_nb: int = 1 << 12
-        #: bucket -> {"file": str, "nb": int, "n_added": int}
-        self.buckets: dict[int, dict] = {}
-
-    # ---- construction / persistence ----------------------------------------
-    @classmethod
-    def create(
-        cls,
-        store_root: str,
-        n_buckets: int = 64,
-        expected_keys: int | None = None,
-        rnd: int = -1,
-        **_: object,
-    ) -> "PartitionedCuckoo":
-        pc = cls(store_root)
-        pc.n_buckets = n_buckets
-        if expected_keys is not None:
-            pc.default_nb = CuckooFilter.sized_for(
-                max(expected_keys // n_buckets, 1024)
-            ).nb
-        os.makedirs(pc.dir, exist_ok=True)
-        pc._write_meta(rnd)
-        return pc
+    KERNEL = CuckooFilter
+    SUBDIR, FILE_PREFIX, FILE_EXT = "cuckoo", "c", ".npz"
+    SIZE_FIELDS = ("nb",)
+    DEFAULT_SIZE = {"nb": 1 << 12}
+    DESIGN_FILL = _DESIGN_LOAD
+    BITS_PER_KEY = 16 / _DESIGN_LOAD
+    deletable = True
 
     @staticmethod
-    def buckets_for(
-        expected_keys: int, target_bucket_bytes: int = 128 << 20
-    ) -> int:
-        """Bucket count keeping one bucket's filter file inside a task
-        (16-bit x 4-slot at the design load ≈ 17.8 bits/key), floor 64."""
-        total_bytes = expected_keys * (16 / _DESIGN_LOAD) / 8
-        return max(64, math.ceil(total_bytes / target_bucket_bytes))
+    def _read(path: str, entry: dict) -> CuckooFilter:
+        return CuckooFilter.load(path)
 
-    @classmethod
-    def latest_round(cls, store_root: str) -> int | None:
-        d = os.path.join(store_root, "cuckoo")
-        best = None
-        if os.path.isdir(d):
-            for f in os.listdir(d):
-                if f.startswith("meta-") and f.endswith(".json"):
-                    v = int(f[len("meta-") : -len(".json")])
-                    best = v if best is None else max(best, v)
-        return best
+    @staticmethod
+    def _write(cf: CuckooFilter, path: str) -> None:
+        cf.save(path)
 
-    @classmethod
-    def load(cls, store_root: str, rnd: int) -> "PartitionedCuckoo":
-        pc = cls(store_root)
-        with open(os.path.join(pc.dir, f"meta-{rnd:06d}.json")) as fh:
-            meta = json.load(fh)
-        pc.n_buckets = meta["n_buckets"]
-        pc.round = meta["round"]
-        pc.default_nb = meta["default_nb"]
-        pc.buckets = {int(b): e for b, e in meta["buckets"].items()}
-        return pc
+    def _size_for(self, n_keys: int) -> dict:
+        return {"nb": CuckooFilter.sized_for(n_keys).nb}
 
-    def _write_meta(self, rnd: int) -> None:
-        meta = {
-            "round": rnd,
-            "n_buckets": self.n_buckets,
-            "default_nb": self.default_nb,
-            "buckets": {str(b): e for b, e in self.buckets.items()},
-        }
-        tmp = os.path.join(self.dir, f".meta.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, os.path.join(self.dir, f"meta-{rnd:06d}.json"))
-        self.round = rnd
-        self._gc(keep=2)
+    @staticmethod
+    def _saturation(entry: dict) -> float:
+        """Occupied fraction of the slots."""
+        return entry["n_added"] / (entry["nb"] * _SLOTS)
 
-    def _gc(self, keep: int = 2) -> None:
-        metas = sorted(
-            (
-                f
-                for f in os.listdir(self.dir)
-                if f.startswith("meta-") and f.endswith(".json")
-            ),
-            key=lambda f: int(f[len("meta-") : -len(".json")]),
-        )
-        live: set[str] = set()
-        for mf in metas[-keep:]:
-            try:
-                with open(os.path.join(self.dir, mf)) as fh:
-                    m = json.load(fh)
-                for e in m["buckets"].values():
-                    if e.get("file"):
-                        live.add(e["file"])
-            except (OSError, json.JSONDecodeError):
-                continue
-        for f in os.listdir(self.dir):
-            if f.startswith("meta-") and f not in metas[-keep:]:
-                os.unlink(os.path.join(self.dir, f))
-            elif f.startswith("c") and f.endswith(".npz") and f not in live:
-                os.unlink(os.path.join(self.dir, f))
-
-    # ---- derived stats -------------------------------------------------------
-    @property
-    def total_bits(self) -> int:
-        return sum(
-            e["nb"] * _SLOTS * 16 for e in self.buckets.values() if e.get("file")
-        )
-
-    @property
-    def n_added_total(self) -> int:
-        return sum(e["n_added"] for e in self.buckets.values())
-
-    def estimated_saturation(self) -> float:
-        slots = sum(e["nb"] * _SLOTS for e in self.buckets.values())
-        return self.n_added_total / slots if slots else 0.0
-
-    def saturated_buckets(self) -> list[int]:
-        return [
-            b
-            for b, e in self.buckets.items()
-            if e["n_added"] > int(e["nb"] * _SLOTS * _DESIGN_LOAD)
-        ]
-
-    # ---- executor-side maintenance -------------------------------------------
-    def _apply_job(
-        self,
-        keys_df,
-        key_col: str,
-        rnd: int,
-        op: str,
-        sizes: dict[int, int] | None = None,
-        bucket_filter: list[int] | None = None,
-    ) -> list:
-        """Shared Spark job (mirror of PartitionedBloom._fold_job):
-        repartition keys by bucket; each task applies ``op`` ("add" |
-        "delete" | "rebuild") to its buckets' filter and writes a new
-        immutable file. Only per-bucket stat rows reach the driver."""
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        B = self.n_buckets
-        cdir = self.dir
-        prior = {
-            int(b): e.get("file") for b, e in self.buckets.items() if e.get("file")
-        }
-        default_nb = self.default_nb
-        sizes = sizes or {}
-
-        out_schema = T.StructType(
-            [
-                T.StructField("bucket", T.IntegerType(), False),
-                T.StructField("file", T.StringType(), False),
-                T.StructField("nb", T.LongType(), False),
-                T.StructField("n_added", T.LongType(), False),
-                T.StructField("applied", T.LongType(), False),
-            ]
-        )
-
-        def apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            per_bucket: dict[int, list[np.ndarray]] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keys = pdf["_key"].to_numpy(dtype=np.int64)
-                bks = np.mod(keys, B)
-                for b in np.unique(bks):
-                    per_bucket.setdefault(int(b), []).append(keys[bks == b])
-            rows = []
-            for b, chunks in per_bucket.items():
-                keys = np.concatenate(chunks)
-                if op == "rebuild":
-                    cf = CuckooFilter(sizes.get(b, default_nb))
-                    cf.add_many(keys)
-                    applied = len(keys)
-                else:
-                    f = prior.get(b)
-                    cf = (
-                        CuckooFilter.load(os.path.join(cdir, f))
-                        if f is not None
-                        else CuckooFilter(default_nb)
-                    )
-                    if op == "add":
-                        cf.add_many(keys)
-                        applied = len(keys)
-                    else:
-                        applied = cf.delete_many(keys)
-                fname = f"c{b:05d}-r{rnd}-{uuid.uuid4().hex[:8]}.npz"
-                cf.save(os.path.join(cdir, fname))
-                rows.append((b, fname, cf.nb, cf.n_added, applied))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["bucket", "file", "nb", "n_added", "applied"]
-                )
-
-        keyed = keys_df.select(F.col(key_col).cast("long").alias("_key"))
-        if bucket_filter is not None:
-            keyed = keyed.where(
-                F.pmod(F.col("_key"), F.lit(B)).isin([int(b) for b in bucket_filter])
-            )
-        return (
-            keyed.repartition(B, F.pmod(F.col("_key"), F.lit(B)))
-            .mapInPandas(apply, out_schema)
-            .collect()
-        )
-
-    def add_keys(self, keys_df, key_col: str, rnd: int) -> list[int]:
-        stats = self._apply_job(keys_df, key_col, rnd, op="add")
-        for r in stats:
-            self.buckets[int(r["bucket"])] = {
-                "file": r["file"],
-                "nb": int(r["nb"]),
-                "n_added": int(r["n_added"]),
-            }
-        self._write_meta(rnd)
-        return self.saturated_buckets()
-
-    def delete_keys(self, keys_df, key_col: str, rnd: int) -> int:
-        """Unlearn keys (takedown / recrawl-TTL): each task deletes its
-        buckets' fingerprints and writes a new immutable file — the
-        operation the Bloom twin structurally cannot offer."""
-        stats = self._apply_job(keys_df, key_col, rnd, op="delete")
-        removed = 0
-        for r in stats:
-            self.buckets[int(r["bucket"])] = {
-                "file": r["file"],
-                "nb": int(r["nb"]),
-                "n_added": int(r["n_added"]),
-            }
-            removed += int(r["applied"])
-        self._write_meta(rnd)
-        return removed
-
-    def grow_buckets(self, all_keys_df, key_col: str, rnd: int, grow: list[int]) -> None:
-        """Per-bucket growth = rebuild from the seen table at the next
-        power-of-two size (a cuckoo table cannot be resized from
-        fingerprints — the upper hash bits are gone)."""
-        sizes = {
-            int(b): CuckooFilter.sized_for(2 * self.buckets[b]["n_added"]).nb
-            for b in grow
-        }
-        stats = self._apply_job(
-            all_keys_df, key_col, rnd, op="rebuild", sizes=sizes, bucket_filter=grow
-        )
-        for r in stats:
-            self.buckets[int(r["bucket"])] = {
-                "file": r["file"],
-                "nb": int(r["nb"]),
-                "n_added": int(r["n_added"]),
-            }
-        self._write_meta(rnd)
-
-    # ---- probe -----------------------------------------------------------------
-    def probe_split(self, df, key_col: str, spark, scratch=None):
-        """(definitely_new, maybe_seen) split — same two regimes as the
-        Bloom twin: whole-dict broadcast below ``BROADCAST_MAX_BYTES``,
-        bucket-aligned repartition + per-task file loads above it."""
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        B = self.n_buckets
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField("_maybe_seen", T.BooleanType(), False)]
-        )
-
-        if self.total_bits // 8 <= self.BROADCAST_MAX_BYTES:
-            self.last_probe_mode = "broadcast"
-            blobs = {
-                b: CuckooFilter.load(os.path.join(self.dir, e["file"]))
-                for b, e in self.buckets.items()
-                if e.get("file")
-            }
-            bc = spark.sparkContext.broadcast(blobs)
-
-            def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    keys = pdf[key_col].to_numpy(dtype=np.int64)
-                    bks = np.mod(keys, B)
-                    mask = np.zeros(len(keys), dtype=bool)
-                    for b in np.unique(bks):
-                        cf = bc.value.get(int(b))
-                        if cf is None:
-                            continue
-                        sel = bks == b
-                        mask[sel] = cf.contains_many(keys[sel])
-                    yield pdf.assign(_maybe_seen=mask)
-
-            tagged = df.mapInPandas(tag, schema).cache()
-        else:
-            self.last_probe_mode = "aligned"
-            cdir = self.dir
-            info = {
-                int(b): e["file"] for b, e in self.buckets.items() if e.get("file")
-            }
-
-            def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                cache: dict[int, CuckooFilter] = {}
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    keys = pdf[key_col].to_numpy(dtype=np.int64)
-                    bks = np.mod(keys, B)
-                    mask = np.zeros(len(keys), dtype=bool)
-                    for b in np.unique(bks):
-                        f = info.get(int(b))
-                        if f is None:
-                            continue
-                        if int(b) not in cache:
-                            cache[int(b)] = CuckooFilter.load(os.path.join(cdir, f))
-                        sel = bks == b
-                        mask[sel] = cache[int(b)].contains_many(keys[sel])
-                    yield pdf.assign(_maybe_seen=mask)
-
-            tagged = (
-                df.repartition(B, F.pmod(F.col(key_col), F.lit(B)))
-                .mapInPandas(tag, schema)
-                .cache()
-            )
-        if scratch is not None:
-            scratch.append(tagged)
-        return (
-            tagged.where(~tagged["_maybe_seen"]).drop("_maybe_seen"),
-            tagged.where(tagged["_maybe_seen"]).drop("_maybe_seen"),
-        )
+    @staticmethod
+    def _bits(entry: dict) -> int:
+        return entry["nb"] * _SLOTS * 16

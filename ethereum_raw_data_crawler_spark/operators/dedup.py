@@ -83,56 +83,14 @@ def doc_simhash(text: str) -> int:
 # ---------------------------------------------------------------------------
 
 
-def minhash_bands(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  k: int = 64, bands: int = 16) -> DataFrame:
-    """(id, band_idx, band_key, sig) — one row per (doc, band)."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("band_idx", T.IntegerType(), False),
-            T.StructField("band_key", T.LongType(), False),
-            T.StructField("sig", T.ArrayType(T.LongType()), False),
-        ]
-    )
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # whole-batch vectorization: ONE token-hash pass over the
-            # batch's concatenated tokens, global window folding for
-            # shingles, signatures via segmented mins, band keys as one
-            # matrix op — the only per-document Python is the token split
-            tok_lists = [_doc_tokens(t) for t in pdf[text_col]]
-            tok_counts = np.array([len(t) for t in tok_lists], dtype=np.int64)
-            all_hashes = token_hash64_vec(
-                [w for toks in tok_lists for w in toks]
-            )
-            flat, counts = shingle_hashes_concat(all_hashes, tok_counts, 3)
-            sigs = minhash_signature_batch(flat, counts, k)  # (n, k)
-            keys = band_keys_batch(sigs, bands)  # (n, bands)
-            n = len(pdf)
-            sig_signed = sigs.view(np.int64).tolist()
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), bands),
-                    "band_idx": np.tile(np.arange(bands, dtype=np.int32), n),
-                    "band_key": keys.ravel(),
-                    "sig": [s for s in sig_signed for _ in range(bands)],
-                }
-            )
-
-    return _spread(df.select(id_col, text_col)).mapInPandas(compute, out_schema)
-
-
 def minhash_doc_sigs(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", k: int = 64,
                      bands: int = 16) -> DataFrame:
     """(id, sig, band_keys) — ONE row per document across the Arrow
-    boundary. The per-(doc, band) layout of ``minhash_bands`` repeats the
-    k-long signature ``bands`` times (k x bands x 8 bytes of redundant
-    Arrow traffic per doc — ~400 MB at 50k docs); here the signature
-    crosses once and the band explode happens JVM-side."""
+    boundary. A per-(doc, band) layout would repeat the k-long signature
+    ``bands`` times (k x bands x 8 bytes of redundant Arrow traffic per
+    doc — ~400 MB at 50k docs); here the signature crosses once and the
+    band explode happens JVM-side."""
     out_schema = T.StructType(
         [
             T.StructField(id_col, T.LongType(), False),

@@ -211,7 +211,7 @@ class AnnIndex:
     that the scan touches only probed partitions).
 
     Rebuilds follow the same snapshot commit protocol as every table in
-    the store (sources/tablestore.py:143, operators/bloom.py:257): each
+    the store (sources/tablestore.py:143, operators/partitioned_filter.py): each
     build writes a fresh ``v-NNNNNN/`` directory (data + model + meta)
     and only then swaps the ``current.json`` pointer into place with an
     atomic temp + ``os.replace``. A crash anywhere mid-rebuild leaves at
@@ -287,7 +287,7 @@ class AnnIndex:
     def _publish(cls, root: str, version: int) -> None:
         """The commit point: one atomic rename, same as the store's
         manifest swap. GC runs after the swap (same placement as
-        PartitionedBloom.commit -> _gc, bloom.py)."""
+        PartitionedFilter.commit -> _gc, partitioned_filter.py)."""
         import json
         import os
         import uuid
@@ -301,14 +301,15 @@ class AnnIndex:
     @classmethod
     def _gc(cls, root: str, keep: int = 2) -> None:
         """Reclaim version directories nothing can read anymore — the
-        mirror of ``PartitionedBloom._gc`` (operators/bloom.py): keep the
-        newest ``keep`` PUBLISHED versions (pointer + one step of time
-        travel) and drop (a) published versions older than that and
+        mirror of ``PartitionedFilter._gc``
+        (operators/partitioned_filter.py): keep the newest ``keep``
+        PUBLISHED versions (pointer + one step of time travel) and drop
+        (a) published versions older than that and
         (b) unpublished orphans ABOVE the pointer left by a crashed
         build. At 100 TB an index version is the corpus — leaking one per
         crash/rebuild is the difference between bounded and unbounded
         storage. Numeric sort on the parsed version (same rationale as
-        the Bloom meta sort: zero padding eventually overflows)."""
+        the filter meta sort: zero padding eventually overflows)."""
         import json
         import os
         import re

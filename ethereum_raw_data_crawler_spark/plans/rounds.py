@@ -46,11 +46,11 @@ from ethereum_raw_data_crawler_spark.functions.spark_udfs import (
     with_host_and_path,
 )
 from ethereum_raw_data_crawler_spark.functions.urls import CANON_VERSION
-from ethereum_raw_data_crawler_spark.operators.bloom import (
-    PartitionedBloom,
-    split_by_bloom,
-)
+from ethereum_raw_data_crawler_spark.operators.bloom import PartitionedBloom
 from ethereum_raw_data_crawler_spark.operators.cuckoo import PartitionedCuckoo
+from ethereum_raw_data_crawler_spark.operators.partitioned_filter import (
+    PartitionedFilter,
+)
 from ethereum_raw_data_crawler_spark.operators.priority_pop import pop_batch
 from ethereum_raw_data_crawler_spark.schemas import (
     FETCH_FAILURES,
@@ -101,6 +101,13 @@ _TABLES = {
 # partitioning than the session shuffle width.
 SHJ_BUILD_ROWS = int(os.environ.get("SPARK_GRAFT_SHJ_BUILD_ROWS", "1500000"))
 
+#: ``seen_filter`` value -> the partitioned prefilter it selects; ``None``
+#: runs with no prefilter (every candidate takes the exact anti-join)
+SEEN_FILTERS: dict[str, type[PartitionedFilter]] = {
+    "bloom": PartitionedBloom,
+    "cuckoo": PartitionedCuckoo,
+}
+
 
 def shj_width(n_build_rows: int, conf_width: int) -> int:
     """Partition count for a shuffled-hash join exchange: at least the
@@ -118,14 +125,13 @@ class CrawlEngine:
         store_root: str,
         cfg: CrawlConfig,
         n_buckets: int = 32,
-        use_bloom: bool = True,
         prune_pop: bool = True,
         compact_every: int = 8,
         egress_dir: str | None = None,
         bloom_buckets: int = 64,
         compact_debt_frac: float = 0.15,
         track_host_graph: bool = False,
-        seen_filter: str = "bloom",
+        seen_filter: str | None = "bloom",
     ) -> None:
         from ethereum_raw_data_crawler_spark.deploy import ship_package
 
@@ -134,7 +140,6 @@ class CrawlEngine:
         self.store = SnapshotStore(store_root)
         self.cfg = cfg
         self.n_buckets = n_buckets
-        self.use_bloom = use_bloom
         self.prune_pop = prune_pop
         self.compact_every = compact_every
         self.bloom_buckets = bloom_buckets
@@ -159,15 +164,18 @@ class CrawlEngine:
         # cache the corpus-join hit set (html included) below this popped
         # count; recompute slim branches above it (see run_round)
         self.HITS_CACHE_MAX: int = 2_000_000
-        # seen-set prefilter family: "bloom" (default, 9.6 bits/URL) or
+        # seen-set prefilter family: "bloom" (default, 9.6 bits/URL),
         # "cuckoo" (~17.8 bits/URL, ~80x lower FPR, and DELETABLE — the
         # forget_urls unlearn path stays on the fast probe; see
-        # operators/cuckoo.py for the full trade)
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {seen_filter!r}")
+        # operators/cuckoo.py for the full trade) or None (no prefilter)
+        if seen_filter is not None and seen_filter not in SEEN_FILTERS:
+            raise ValueError(
+                f"seen_filter must be one of {sorted(SEEN_FILTERS)} or None, "
+                f"got {seen_filter!r}"
+            )
         self.seen_filter = seen_filter
-        self._filter_cls = PartitionedBloom if seen_filter == "bloom" else PartitionedCuckoo
-        self._bloom: PartitionedBloom | PartitionedCuckoo | None = None
+        self._filter_cls = SEEN_FILTERS.get(seen_filter)
+        self._bloom: PartitionedFilter | None = None
         self._dims: dict[str, DataFrame] = {}
         self._scratch: list[DataFrame] = []
         self._egress = None
@@ -197,7 +205,7 @@ class CrawlEngine:
         auto_buckets = "bloom_buckets" not in kw
         SnapshotStore.create(store_root, _TABLES)
         eng = cls(spark, store_root, cfg, **kw)
-        if eng.use_bloom:
+        if eng._filter_cls is not None:
             if expected_keys is None:
                 # design capacity of the seen-set: seeds × a discovery
                 # growth allowance. Per-bucket growth absorbs overshoot;
@@ -210,7 +218,6 @@ class CrawlEngine:
                 {
                     "cfg": asdict(cfg),
                     "n_buckets": eng.n_buckets,
-                    "use_bloom": eng.use_bloom,
                     "prune_pop": eng.prune_pop,
                     "compact_every": eng.compact_every,
                     "egress_dir": kw.get("egress_dir"),
@@ -222,7 +229,7 @@ class CrawlEngine:
                 },
                 fh,
             )
-        if eng.use_bloom:
+        if eng._filter_cls is not None:
             eng._bloom = eng._filter_cls.create(
                 store_root,
                 n_buckets=eng.bloom_buckets,
@@ -295,25 +302,29 @@ class CrawlEngine:
                 f"re-canonicalizes frontier/seen/corpus url_canon columns."
             )
         cfg = CrawlConfig(**saved["cfg"])
+        # stores created before seen_filter took None carry a separate
+        # use_bloom flag; use_bloom=false meant no prefilter at all
+        seen_filter = (
+            saved.get("seen_filter", "bloom") if saved.get("use_bloom", True) else None
+        )
         eng = cls(
             spark,
             store_root,
             cfg,
             n_buckets=saved["n_buckets"],
-            use_bloom=saved["use_bloom"],
             prune_pop=saved["prune_pop"],
             compact_every=saved["compact_every"],
             egress_dir=saved.get("egress_dir"),
             bloom_buckets=saved.get("bloom_buckets", 64),
             compact_debt_frac=saved.get("compact_debt_frac", 0.15),
             track_host_graph=saved.get("track_host_graph", False),
-            seen_filter=saved.get("seen_filter", "bloom"),
+            seen_filter=seen_filter,
         )
         if eng._egress is not None:
             # publish-after-commit redelivery: any round committed before
             # the crash but never published goes out now (at-least-once)
             eng._egress.catch_up(spark, eng.store)
-        if eng.use_bloom:
+        if eng._filter_cls is not None:
             bloom_rnd = eng._filter_cls.latest_round(store_root)
             if bloom_rnd is None:
                 # bitmaps lost entirely: rebuild from the seen table
@@ -339,7 +350,7 @@ class CrawlEngine:
                         ).select("url_hash")
                         eng._bloom.add_keys(keys, "url_hash", eng.store.round)
                     else:
-                        eng._bloom._write_meta(eng.store.round)
+                        eng._bloom.commit(eng.store.round)
         return eng
 
     # ------------------------------------------------------------ table reads
@@ -413,7 +424,7 @@ class CrawlEngine:
         n = self.store.delete_where(
             self.spark, "seen", SEEN, pred, self.store.round
         )
-        if self._bloom is not None and hasattr(self._bloom, "delete_keys"):
+        if self._bloom is not None and self._bloom.deletable:
             keys_df = self.spark.createDataFrame(
                 [(h,) for h in hashes], "url_hash long"
             )
@@ -509,13 +520,9 @@ class CrawlEngine:
         candidates_for_seen = gated.where(F.col("pass_cap") & F.col("pass_robots"))
         skipped_rows = gated.where(~(F.col("pass_cap") & F.col("pass_robots")))
         seen_keys = seen.select("url_hash").withColumn("seen_hit", F.lit(True))
-        if self.use_bloom and self._bloom is not None:
-            new_def, maybe = split_by_bloom(
-                candidates_for_seen,
-                "url_hash",
-                self._bloom,
-                self.spark,
-                scratch=self._scratch,
+        if self._bloom is not None:
+            new_def, maybe = self._bloom.probe_split(
+                candidates_for_seen, "url_hash", self.spark, scratch=self._scratch
             )
             checked = maybe.join(seen_keys, "url_hash", "left").withColumn(
                 "seen_hit", F.coalesce(F.col("seen_hit"), F.lit(False))
@@ -625,7 +632,7 @@ class CrawlEngine:
 
     def _bloom_rebuild_spark(
         self, expected_keys: int | None = None
-    ) -> "PartitionedBloom | PartitionedCuckoo":
+    ) -> PartitionedFilter:
         """Rebuild the partitioned bitmaps from the seen table — one Spark
         job (repartition keys by bucket, each task writes its buckets'
         bitmap files); the driver only sees per-bucket stat rows. Sized
@@ -650,7 +657,7 @@ class CrawlEngine:
         only per-bucket counters reach the driver). Buckets past their
         design capacity (saturation -> FPR collapse) are rebuilt alone at
         their next size from the seen table."""
-        if not self.use_bloom or self._bloom is None:
+        if self._bloom is None:
             return
         frags = [
             f
@@ -661,7 +668,7 @@ class CrawlEngine:
             # nothing discovered this round: keep the bloom meta's round in
             # step with the table (crash catch-up compares the two) without
             # paying an empty fold job
-            self._bloom._write_meta(rnd)
+            self._bloom.commit(rnd)
             return
         keys = self.store._read_fragments(self.spark, frags, SEEN).select("url_hash")
         saturated = self._bloom.add_keys(keys, "url_hash", rnd)

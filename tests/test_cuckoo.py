@@ -125,15 +125,6 @@ def test_partitioned_add_probe_split(spark, tmp_path, pc_store):
     assert len(new_keys & set(absent[:5000])) >= 4995
 
 
-def test_partitioned_aligned_probe_mode(spark, tmp_path, pc_store, monkeypatch):
-    pc, keys, _ = pc_store
-    monkeypatch.setattr(PartitionedCuckoo, "BROADCAST_MAX_BYTES", 0)
-    cand = spark.createDataFrame(pd.DataFrame({"url_hash": keys[:4000]}))
-    new, maybe = pc.probe_split(cand, "url_hash", spark)
-    assert maybe.count() == 4000 and new.count() == 0
-    assert pc.last_probe_mode == "aligned"
-
-
 def test_partitioned_delete_keys(spark, tmp_path, pc_store):
     pc, keys, _ = pc_store
     victims = keys[:10_000]
@@ -164,26 +155,6 @@ def test_partitioned_grow_rebuilds_from_ground_truth(spark, tmp_path):
         assert pc.buckets[b]["nb"] > before[b]
     _, maybe = pc.probe_split(kdf, "url_hash", spark)
     assert maybe.count() == len(keys), "membership lost across growth"
-
-
-def test_partitioned_meta_round_trip_and_gc(spark, tmp_path, pc_store):
-    import os
-
-    pc, keys, kdf = pc_store
-    pc.add_keys(kdf, "url_hash", rnd=2)
-    pc.add_keys(kdf, "url_hash", rnd=3)
-    d = pc.dir
-    metas = [f for f in os.listdir(d) if f.startswith("meta-")]
-    assert len(metas) == 2, "GC must keep exactly the newest 2 metas"
-    live = {
-        e["file"] for e in pc.buckets.values() if e.get("file")
-    }
-    files = {f for f in os.listdir(d) if f.endswith(".npz")}
-    assert live <= files
-    back = PartitionedCuckoo.load(
-        str(tmp_path), PartitionedCuckoo.latest_round(str(tmp_path))
-    )
-    assert back.buckets == pc.buckets and back.round == 3
 
 
 # ------------------------------------------------------------ engine level

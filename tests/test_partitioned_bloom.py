@@ -1,7 +1,8 @@
-"""Partitioned Bloom seen-set (round-3 scale rework): executor-side
-build/OR-in/growth as Spark jobs, bucket-aligned probe past the broadcast
-threshold with ZERO driver bitmap residency, crash catch-up of the bloom
-meta, and the NULL-predicate DELETE WHERE fix."""
+"""Partitioned seen filter, run over both kernels (Bloom and cuckoo):
+executor-side build/fold/growth as Spark jobs, bucket-aligned probe past
+the broadcast threshold with ZERO driver filter residency, atomic meta
+commit + GC, crash catch-up of the filter meta, and the NULL-predicate
+DELETE WHERE fix."""
 
 import glob
 import os
@@ -12,40 +13,43 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from ethereum_raw_data_crawler_spark.config import CrawlConfig
-from ethereum_raw_data_crawler_spark.operators.bloom import (
-    BloomFilter,
-    PartitionedBloom,
-)
+from ethereum_raw_data_crawler_spark.operators.bloom import BloomFilter
 from ethereum_raw_data_crawler_spark.plans.oracle import run_oracle
-from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
+from ethereum_raw_data_crawler_spark.plans.rounds import SEEN_FILTERS, CrawlEngine
 from ethereum_raw_data_crawler_spark.sources.tablestore import SnapshotStore
 
+KINDS = sorted(SEEN_FILTERS)
 
-# ------------------------------------------------ 10M keys, aligned probe
+
+# ------------------------------------------------ aligned probe
 
 
-def test_partitioned_bloom_10m_keys_aligned_probe(spark, tmp_path):
-    """Build the seen filter from 10M keys entirely executor-side, then
+@pytest.mark.parametrize(
+    "kind,n", [("bloom", 10_000_000), ("cuckoo", 200_000)], ids=KINDS
+)
+def test_partitioned_filter_aligned_probe(spark, tmp_path, kind, n):
+    """Build the seen filter from n keys entirely executor-side (10M for
+    the Bloom; the cuckoo insert is costlier, so it runs small), then
     probe with the broadcast path disabled: the candidates repartition by
-    bucket, each task loads only its buckets' bitmap files, and the DRIVER
-    process never loads a bitmap at all (numpy.load is poisoned driver-side
-    for the duration — Python workers are separate processes and re-import
-    numpy, so only a driver-side load would trip it)."""
-    n = 10_000_000
+    bucket, each task loads only its buckets' files, and the DRIVER
+    process never loads a filter file at all (numpy.load is poisoned
+    driver-side for the duration — Python workers are separate processes
+    and re-import numpy, so only a driver-side load would trip it)."""
     keys = spark.range(n).select(F.xxhash64("id").alias("url_hash"))
-    pb = PartitionedBloom.create(
+    pf = SEEN_FILTERS[kind].create(
         str(tmp_path), n_buckets=64, expected_keys=2 * n, rnd=-1
     )
-    saturated = pb.add_keys(keys, "url_hash", 0)
-    assert not saturated  # sized for 20M, holds 10M comfortably
-    assert pb.n_added_total == n
-    assert 0.0 < pb.estimated_saturation() < 0.5
+    saturated = pf.add_keys(keys, "url_hash", 0)
+    assert not saturated  # sized for 2n, holds n comfortably
+    assert pf.n_added_total == n
+    assert 0.0 < pf.estimated_saturation() < 0.5
 
-    pb.BROADCAST_MAX_BYTES = 0  # force the 100-TB path
-    present = spark.range(0, 50_000).select(
+    pf.BROADCAST_MAX_BYTES = 0  # force the 100-TB path
+    m = min(n, 50_000)
+    present = spark.range(0, m).select(
         F.xxhash64("id").alias("url_hash"), F.lit("p").alias("tag")
     )
-    absent = spark.range(n, n + 50_000).select(
+    absent = spark.range(n, n + m).select(
         F.xxhash64("id").alias("url_hash"), F.lit("a").alias("tag")
     )
     cands = present.unionByName(absent)
@@ -53,67 +57,77 @@ def test_partitioned_bloom_10m_keys_aligned_probe(spark, tmp_path):
     real_load = np.load
 
     def poisoned(*a, **kw):  # pragma: no cover - failure path
-        raise AssertionError("driver loaded a bloom bitmap on the aligned path")
+        raise AssertionError("driver loaded a filter file on the aligned path")
 
     np.load = poisoned
     try:
-        new_def, maybe = pb.probe_split(cands, "url_hash", spark)
+        new_def, maybe = pf.probe_split(cands, "url_hash", spark)
         got_maybe = {r["tag"] for r in maybe.select("tag").distinct().collect()}
         n_new_present = new_def.where(F.col("tag") == "p").count()
         n_maybe_absent = maybe.where(F.col("tag") == "a").count()
     finally:
         np.load = real_load
-    assert pb.last_probe_mode == "aligned"
+    assert pf.last_probe_mode == "aligned"
     assert n_new_present == 0  # no false negatives, ever
     assert "p" in got_maybe
-    assert n_maybe_absent / 50_000 < 0.05  # FPR at the design point
+    assert n_maybe_absent / m < 0.05  # FPR at the design point
 
 
-def test_partitioned_bloom_per_bucket_growth(spark, tmp_path):
+#: starting bucket sizes whose design capacity 1,000 keys overrun
+TINY = {"bloom": {"n_bits": 256, "k": 3}, "cuckoo": {"nb": 256}}
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_partitioned_filter_per_bucket_growth(spark, tmp_path, kind):
     """A bucket pushed past design capacity is rebuilt ALONE at its next
     size; untouched buckets keep their files."""
-    pb = PartitionedBloom.create(
-        str(tmp_path), n_buckets=4, n_bits_per_bucket=256, k=3, rnd=-1
+    pf = SEEN_FILTERS[kind].create(
+        str(tmp_path), n_buckets=4, size=TINY[kind], rnd=-1
     )
     # keys all land in bucket 0: pmod(4k, 4) == 0
-    keys = spark.range(2_000).select((F.col("id") * 4).alias("url_hash"))
-    saturated = pb.add_keys(keys, "url_hash", 0)
+    keys = spark.range(1_000).select((F.col("id") * 4).alias("url_hash"))
+    saturated = pf.add_keys(keys, "url_hash", 0)
     assert saturated == [0]
-    before = {b: e["file"] for b, e in pb.buckets.items()}
-    pb.grow_buckets(keys, "url_hash", 0, saturated)
-    assert pb.buckets[0]["n_bits"] > 256
-    assert pb.buckets[0]["file"] != before[0]
-    assert not pb.saturated_buckets()
+    before = {b: e["file"] for b, e in pf.buckets.items()}
+    pf.grow_buckets(keys, "url_hash", 0, saturated)
+    assert pf._bits(pf.buckets[0]) > pf._bits(TINY[kind])
+    assert pf.buckets[0]["file"] != before[0]
+    assert not pf.saturated_buckets()
     # growth preserved membership: every key still maybe-present
-    new_def, maybe = pb.probe_split(keys, "url_hash", spark)
+    new_def, maybe = pf.probe_split(keys, "url_hash", spark)
     assert new_def.count() == 0
 
 
-def test_partitioned_bloom_meta_is_atomic_and_gcd(spark, tmp_path):
-    pb = PartitionedBloom.create(str(tmp_path), n_buckets=4, rnd=-1)
+@pytest.mark.parametrize("kind", KINDS)
+def test_partitioned_filter_meta_is_atomic_and_gcd(spark, tmp_path, kind):
+    cls = SEEN_FILTERS[kind]
+    pf = cls.create(str(tmp_path), n_buckets=4, rnd=-1)
     for rnd in range(5):
         keys = spark.range(rnd * 100, rnd * 100 + 100).select(
             F.col("id").alias("url_hash")
         )
-        pb.add_keys(keys, "url_hash", rnd)
-    metas = sorted(glob.glob(os.path.join(str(tmp_path), "bloom", "meta-*.json")))
+        pf.add_keys(keys, "url_hash", rnd)
+    metas = sorted(glob.glob(os.path.join(pf.dir, "meta-*.json")))
     assert len(metas) == 2  # keep=2
     assert metas[-1].endswith("meta-000004.json")
-    # every surviving bitmap file is referenced by a surviving meta
-    pb2 = PartitionedBloom.load(str(tmp_path), 4)
-    live = {e["file"] for e in pb2.buckets.values()}
+    assert not glob.glob(os.path.join(pf.dir, ".meta.*.tmp"))
+    # every surviving bucket file is referenced by a surviving meta
+    assert cls.latest_round(str(tmp_path)) == 4
+    pf2 = cls.load(str(tmp_path), 4)
+    assert pf2.buckets == pf.buckets and pf2.round == 4
+    live = {e["file"] for e in pf2.buckets.values()}
     on_disk = {
         os.path.basename(f)
-        for f in glob.glob(os.path.join(str(tmp_path), "bloom", "b*.npy"))
+        for f in glob.glob(os.path.join(pf.dir, pf.FILE_PREFIX + "*" + pf.FILE_EXT))
     }
     assert live <= on_disk
-    assert pb2.n_added_total == 500
+    assert pf2.n_added_total == 500
 
 
 # ------------------------------------------------ engine crash catch-up
 
 
-def _mk_engine(spark, tmp_path, tabs, cfg, politeness):
+def _mk_engine(spark, tmp_path, tabs, cfg, politeness, **kw):
     return CrawlEngine.create(
         spark,
         str(tmp_path / "store"),
@@ -123,13 +137,15 @@ def _mk_engine(spark, tmp_path, tabs, cfg, politeness):
         spark.createDataFrame(politeness),
         spark.createDataFrame(tabs["fetch_failures"]),
         cfg,
+        **kw,
     )
 
 
-def test_bloom_meta_catchup_on_resume(spark, t1_tables, tmp_path):
-    """A crash between the table commit and the bloom meta write leaves
-    the bitmaps one round behind; resume must fold in the missed seen
-    fragment (NOT a full rebuild, NOT a silent skip — a stale bitmap means
+@pytest.mark.parametrize("kind", KINDS)
+def test_filter_meta_catchup_on_resume(spark, t1_tables, tmp_path, kind):
+    """A crash between the table commit and the filter meta write leaves
+    the filter one round behind; resume must fold in the missed seen
+    fragment (NOT a full rebuild, NOT a silent skip — a stale filter means
     false negatives = duplicate URLs) and stay oracle-equivalent."""
     tabs = t1_tables
     relaxed = tabs["politeness"].copy()
@@ -139,15 +155,18 @@ def test_bloom_meta_catchup_on_resume(spark, t1_tables, tmp_path):
         tabs["pages"], tabs["seeds"], tabs["robots"], relaxed,
         tabs["fetch_failures"], cfg,
     )
-    eng = _mk_engine(spark, tmp_path, tabs, cfg, relaxed)
+    eng = _mk_engine(spark, tmp_path, tabs, cfg, relaxed, seen_filter=kind)
     eng.run(max_rounds=2)
     last = eng.store.round
+    fdir = eng._bloom.dir
     del eng
-    # simulate the crash: drop the newest bloom meta only
-    os.unlink(str(tmp_path / "store" / "bloom" / f"meta-{last:06d}.json"))
-    assert PartitionedBloom.latest_round(str(tmp_path / "store")) == last - 1
+    # simulate the crash: drop the newest filter meta only
+    os.unlink(os.path.join(fdir, f"meta-{last:06d}.json"))
+    cls = SEEN_FILTERS[kind]
+    assert cls.latest_round(str(tmp_path / "store")) == last - 1
 
     resumed = CrawlEngine.resume(spark, str(tmp_path / "store"))
+    assert type(resumed._bloom) is cls
     assert resumed._bloom.round == last  # caught up, not stale
     # no false negatives after catch-up: every seen key is maybe-present
     new_def, _ = resumed._bloom.probe_split(
@@ -265,20 +284,24 @@ def test_bloom_load_estimates_n_added_for_legacy_snapshot(tmp_path):
 # ------------------------------------------------ capacity-driven sizing
 
 
-def test_buckets_for_scales_with_expected_keys():
-    """The bucket-count default follows the module docstring's sizing
-    table: ~1.2 bytes/URL at fpr 0.01, one bucket's bitmap capped at a
-    single task's working size, floor 64."""
-    from ethereum_raw_data_crawler_spark.operators.bloom import PartitionedBloom
-
-    assert PartitionedBloom.buckets_for(10**6) == 64
-    assert PartitionedBloom.buckets_for(10**9) == 64
-    assert PartitionedBloom.buckets_for(10**10) == 90
-    assert PartitionedBloom.buckets_for(10**11) == 893
+@pytest.mark.parametrize(
+    "kind,bits_per_key,table",
+    [
+        ("bloom", 9.585, {10**6: 64, 10**9: 64, 10**10: 90, 10**11: 893}),
+        ("cuckoo", 16 / 0.9, {10**8: 64, 10**10: 166, 10**11: 1656}),
+    ],
+    ids=KINDS,
+)
+def test_buckets_for_scales_with_expected_keys(kind, bits_per_key, table):
+    """The bucket-count default follows each kernel module's docstring
+    sizing table: one bucket's file capped at a single task's working
+    size, floor 64."""
+    cls = SEEN_FILTERS[kind]
+    assert {n: cls.buckets_for(n) for n in table} == table
     # a bucket file never exceeds the target
     for n in (10**9, 10**10, 10**11):
-        b = PartitionedBloom.buckets_for(n)
-        per_bucket_bytes = n * 9.585 / 8 / b
+        b = cls.buckets_for(n)
+        per_bucket_bytes = n * bits_per_key / 8 / b
         assert per_bucket_bytes <= (128 << 20) + 1
 
 

@@ -238,6 +238,22 @@ def test_shj_width_bounds_build_partition():
             assert parts >= w
 
 
+def test_default_driver_memory_fits_the_host(tmp_path):
+    """The driver heap default is 60% of physical memory, capped at 48g:
+    a fixed 48g heap let the local-mode JVM outgrow a 15 GB host and be
+    OOM-killed, which took every later test's session down with it."""
+    from ethereum_raw_data_crawler_spark.session import default_driver_memory
+
+    def on(kib: int) -> str:
+        p = tmp_path / "meminfo"
+        p.write_text(f"MemFree:         1024 kB\nMemTotal:       {kib} kB\n")
+        return default_driver_memory(str(p))
+
+    assert on(16_479_424) == "9655m"  # a 15.7 GiB host
+    assert on(128 << 20) == "49152m"  # a 128 GiB host hits the 48g cap
+    assert default_driver_memory(str(tmp_path / "missing")) == "48g"
+
+
 def test_large_pop_fetch_join_is_shj_with_widened_exchange(spark):
     """Build the fetch join exactly as the engine's large-pop branch does
     and assert (a) the physical join is ShuffledHashJoin with the slim

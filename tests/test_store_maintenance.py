@@ -185,7 +185,7 @@ def test_engine_bloom_grows_mid_crawl(spark, t1_tables, tmp_path):
     # keys/bucket), pre-folded with the already-seen seed keys so the
     # prefilter stays free of false negatives
     tiny = PartitionedBloom.create(
-        str(tmp_path / "store"), n_buckets=2, n_bits_per_bucket=128, k=3, rnd=0
+        str(tmp_path / "store"), n_buckets=2, size={"n_bits": 128, "k": 3}, rnd=0
     )
     tiny.add_keys(eng.seen().select("url_hash"), "url_hash", 0)
     eng._bloom = tiny

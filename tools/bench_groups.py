@@ -32,10 +32,7 @@ def main() -> None:
     spark = get_spark(cores=cpus, shuffle_partitions=cpus, app_name="bench_groups")
     sc = spark.sparkContext
 
-    from ethereum_raw_data_crawler_spark.operators.dedup import (
-        minhash_bands,
-        minhash_lsh_pairs,
-    )
+    from ethereum_raw_data_crawler_spark.operators.dedup import minhash_lsh_pairs
     from ethereum_raw_data_crawler_spark.queries import REGISTRY, _load_all, _t
     from ethereum_raw_data_crawler_spark.queries_pipeline import (
         _grams_col,
@@ -45,9 +42,6 @@ def main() -> None:
     _load_all()
     docs = _t(spark, sf_dir, "documents")
     print("docs:", docs.count())
-
-    sc.setJobDescription("bands noop")
-    print("minhash_bands noop:", round(noop(minhash_bands(docs)), 2), "s")
 
     sc.setJobDescription("lsh pairs noop")
     pairs = minhash_lsh_pairs(docs, threshold=0.5).select("id_a", "id_b")
