@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ethereum_raw_data_crawler_spark.functions.extract import (
-    extract_links,
     extract_page,
     extract_text,
 )
@@ -35,13 +34,6 @@ def url_hash_udf(canon: pd.Series) -> pd.Series:
 @F.pandas_udf(T.StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_links_udf(html: pd.Series, base: pd.Series) -> pd.Series:
-    return pd.Series(
-        [extract_links(h, b) for h, b in zip(html, base)], index=html.index
-    )
 
 
 @F.pandas_udf(

@@ -178,20 +178,23 @@ def connected_components(
     ``(node, component)`` where ``component`` is the smallest node id in
     the node's connected component (roots map to themselves).
 
-    ``max_iterations`` is a runaway guard: large-star/small-star provably
-    converges in O(log n) rounds, so 50 covers any graph that fits on a
-    cluster; hitting the cap raises rather than returning partial groups.
+    ``max_iterations`` is a runaway guard on the distributed path only,
+    above ``small_graph_max_edges`` (the single-task kernel runs to its
+    fixpoint): large-star/small-star provably converges in O(log n)
+    rounds, so 50 covers any graph that fits on a cluster; hitting the
+    cap raises rather than returning partial groups.
 
     ``small_graph_max_edges`` gates the single-task path
     (``_single_task_components``): at or below it the O(log n) machinery
     costs more in fixed per-iteration job overhead than the whole
-    problem; above it the distributed star alternation runs exactly as
-    before. The 8M default is measured, not guessed: at 8M edges the
-    vectorized single task labels in 5.3 s where the 32-core star
-    alternation takes 50.8 s (tools/bench_components.py ladder), and its
-    transient memory is bounded (~80 bytes/edge ≈ 650 MB at the gate —
-    an ordinary large task, per guide §5). Pass 0 to force the
-    distributed path (tests do)."""
+    problem; above it the distributed star alternation runs. The 8M
+    default is the measured wash point (tools/bench_components.py
+    ladder, 32 cores, OPTIMIZATION_r06.md): at 4M edges the vectorized
+    single task labels in 12.9 s where the star alternation takes
+    93.7 s; at 8M the two take ~55 s vs ~51 s. Its transient memory is
+    bounded (~80 bytes/edge ≈ 650 MB at the gate — an ordinary large
+    task, per guide §5). Pass 0 to force the distributed path (tests
+    do)."""
     # materialize the caller's edge pipeline ONCE: pairs, nodes and the
     # edge count below all read this checkpoint instead of re-running an
     # arbitrarily expensive upstream (for dedup_groups that upstream is

@@ -42,7 +42,11 @@ def pagerank(
 ) -> DataFrame:
     """Run ``iterations`` damped power-iteration steps over the edge list.
 
-    Returns (node, rank) for every node that appears in ``edges``.
+    Returns (node, rank) for every node that appears in ``edges``. The
+    result is lazy past the last checkpoint: checkpoints fall after every
+    4th iteration except the final one, so the last 1 to 4 iterations are
+    recomputed by every action on the returned frame. A caller that runs
+    several actions on it should cache or checkpoint it.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = (

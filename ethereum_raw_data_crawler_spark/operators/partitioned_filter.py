@@ -41,7 +41,7 @@ operators/bloom.py, the deletable cuckoo table in operators/cuckoo.py):
     fingerprints have lost the key). An estimate that is low by even 100×
     degrades into larger per-bucket files, never into false negatives.
   * Probe: small filters broadcast the whole bucket dict; past
-    ``BROADCAST_MAX_BYTES`` the candidates repartition by bucket and each
+    ``gates.FILTER_BROADCAST_MAX`` bytes the candidates repartition by bucket and each
     task loads only the files of the buckets it holds — a 10^10-key seen
     set never materializes on the driver and never broadcasts.
 
@@ -59,6 +59,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+
+from ethereum_raw_data_crawler_spark import gates
 
 
 def _meta_round(fname: str) -> int | None:
@@ -102,8 +104,6 @@ class PartitionedFilter:
     BITS_PER_KEY: float
     #: whether ``delete_keys`` can unlearn keys
     deletable = False
-    #: largest total filter size the probe broadcasts (module docstring)
-    BROADCAST_MAX_BYTES = 64 << 20
 
     def __init__(self, store_root: str) -> None:
         self.dir = os.path.join(store_root, self.SUBDIR)
@@ -370,7 +370,7 @@ class PartitionedFilter:
             + [T.StructField("_maybe_seen", T.BooleanType(), False)]
         )
 
-        if self.total_bits // 8 <= self.BROADCAST_MAX_BYTES:
+        if self.total_bits // 8 <= gates.FILTER_BROADCAST_MAX:
             self.last_probe_mode = "broadcast"
             bc = spark.sparkContext.broadcast(
                 {b: read(path, e) for b, (path, e) in files.items()}

@@ -36,6 +36,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ethereum_raw_data_crawler_spark import gates
+
 #: total order of the pop (SURVEY.md §7 known-hard #1)
 POP_ORDER = ["priority", "host", "discovery_ts", "url_canon"]
 HOST_ORDER = ["priority", "discovery_ts", "url_canon"]
@@ -76,7 +78,9 @@ def pop_batch(
 
     ``eligible`` must carry POP_ORDER columns; ``politeness`` is the small
     (host, budget_per_round) dim — broadcast, never shuffled.
-    Returns the popped rows with a dense ``pop_seq``.
+    Returns the popped rows with a dense ``pop_seq``. Frames cached here
+    (the small-k output, the large-k range sort) are appended to
+    ``scratch``; the caller unpersists them once the pop is consumed.
     """
     with_budget = eligible.join(
         F.broadcast(politeness), "host", "left"
@@ -94,16 +98,22 @@ def pop_batch(
         .where(F.col("_host_rank") <= F.col("budget"))
         .drop("_host_rank", "budget")
     )
-    if batch_size <= 100_000:
+    if batch_size <= gates.SMALL_BATCH_MAX:
         # small k: Spark plans orderBy+limit as TakeOrdered — per-partition
-        # top-k merged on the driver, cheap at this size
+        # top-k merged on the driver, cheap at this size. Nothing upstream
+        # is cached, so cache the output the round reads several times.
         popped = budgeted.orderBy(*[F.col(c) for c in POP_ORDER]).limit(batch_size)
-        return assign_global_seq(
+        popped = assign_global_seq(
             popped, POP_ORDER, "pop_seq", approx_count=batch_size, scratch=scratch
-        )
+        ).cache()
+        if scratch is not None:
+            scratch.append(popped)
+        return popped
     # large k: TakeOrdered would stream k rows/partition through the DRIVER.
     # Instead: distributed range-sort, dense global seq, then filter — every
-    # stage stays on executors.
+    # stage stays on executors. The output is a cheap map over the range
+    # sort assign_global_seq caches, so a second 10^7-row materialization
+    # here would only burn memory.
     seqd = assign_global_seq(budgeted, POP_ORDER, "pop_seq", scratch=scratch)
     return seqd.where(F.col("pop_seq") < batch_size)
 
@@ -124,7 +134,7 @@ def assign_global_seq(
     When the caller already knows the input is small (``approx_count``),
     skip the range-sampling + count passes and sort in one partition —
     zero extra jobs."""
-    if approx_count is not None and approx_count <= 200_000:
+    if approx_count is not None and approx_count <= gates.DRIVER_COLLECT_MAX:
         from pyspark.sql import types as T
 
         schema = T.StructType(

@@ -31,27 +31,41 @@ and local[32] produce identical traces.
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
-from dataclasses import asdict
+from contextlib import contextmanager
+from dataclasses import asdict, dataclass
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
+from ethereum_raw_data_crawler_spark import gates
 from ethereum_raw_data_crawler_spark.config import CrawlConfig
+from ethereum_raw_data_crawler_spark.deploy import ship_package
 from ethereum_raw_data_crawler_spark.functions.spark_udfs import (
     canonicalize_udf,
     extract_page_udf,
     with_host_and_path,
 )
-from ethereum_raw_data_crawler_spark.functions.urls import CANON_VERSION
+from ethereum_raw_data_crawler_spark.functions.urls import (
+    CANON_VERSION,
+    canonicalize_url,
+    url_hash64,
+)
 from ethereum_raw_data_crawler_spark.operators.bloom import PartitionedBloom
 from ethereum_raw_data_crawler_spark.operators.cuckoo import PartitionedCuckoo
+from ethereum_raw_data_crawler_spark.operators.linkrank import pagerank
 from ethereum_raw_data_crawler_spark.operators.partitioned_filter import (
     PartitionedFilter,
 )
-from ethereum_raw_data_crawler_spark.operators.priority_pop import pop_batch
+from ethereum_raw_data_crawler_spark.operators.priority_pop import (
+    assign_global_seq,
+    pop_batch,
+)
 from ethereum_raw_data_crawler_spark.schemas import (
     FETCH_FAILURES,
     FRONTIER,
@@ -66,6 +80,7 @@ from ethereum_raw_data_crawler_spark.schemas import (
     STATUS_FETCHED,
     STATUS_PENDING,
 )
+from ethereum_raw_data_crawler_spark.sources.egress import EgressWriter
 from ethereum_raw_data_crawler_spark.sources.tablestore import SnapshotStore
 
 CORPUS = T.StructType(
@@ -92,15 +107,6 @@ _TABLES = {
     "frontier": "mor",
 }
 
-# max slim popped rows per shuffled-hash build task (~100-200 MB of
-# hash map at frontier-row width); the fetch join widens its exchange
-# past the session shuffle width whenever batch/width would exceed it.
-# Deploy-time override: SPARK_GRAFT_SHJ_BUILD_ROWS — lower it to give the
-# fetch join (and therefore the cached fetch+parse result, whose
-# partition layout every downstream per-page stage inherits) a finer
-# partitioning than the session shuffle width.
-SHJ_BUILD_ROWS = int(os.environ.get("SPARK_GRAFT_SHJ_BUILD_ROWS", "1500000"))
-
 #: ``seen_filter`` value -> the partitioned prefilter it selects; ``None``
 #: runs with no prefilter (every candidate takes the exact anti-join)
 SEEN_FILTERS: dict[str, type[PartitionedFilter]] = {
@@ -109,13 +115,47 @@ SEEN_FILTERS: dict[str, type[PartitionedFilter]] = {
 }
 
 
-def shj_width(n_build_rows: int, conf_width: int) -> int:
-    """Partition count for a shuffled-hash join exchange: at least the
-    session's shuffle width (wide clusters keep their parallelism), but
-    never fewer partitions than it takes to hold <= SHJ_BUILD_ROWS build
-    rows each — the invariant that makes a hash build safe at any
-    (batch size, cluster width) combination."""
-    return max(conf_width, -(-n_build_rows // SHJ_BUILD_ROWS))
+class _PhaseClock:
+    """Wall-clock milliseconds per round phase. ``lap`` closes the phase
+    that ran since the previous lap, so the laps tile the round (the
+    benchmark attributes Spark jobs to phases by these intervals);
+    ``span`` times a step inside a phase without closing it."""
+
+    def __init__(self) -> None:
+        self.ms: dict[str, int] = {}
+        self.start = self._last = time.monotonic()
+
+    def lap(self, name: str) -> None:
+        now = time.monotonic()
+        self.ms[name] = int((now - self._last) * 1000)
+        self._last = now
+
+    @contextmanager
+    def span(self, name: str):
+        t = time.monotonic()
+        yield
+        self.ms[name] = int((time.monotonic() - t) * 1000)
+
+    def elapsed_ms(self) -> int:
+        return int((time.monotonic() - self.start) * 1000)
+
+
+# Phase records. A frame a phase caches is registered in the engine's
+# scratch list, which the round drains (unpersists) when it ends.
+@dataclass
+class _Pop:
+    rows: DataFrame  # popped frontier rows with a dense pop_seq
+    n: int
+    buckets: list[int]  # the corpus buckets the batch hashes into
+
+
+@dataclass
+class _Fetch:
+    fetched: DataFrame  # fetched rows with their parse result ``ext``
+    failed: DataFrame  # failed + missed rows: FRONTIER, error_class, pop_seq
+    partition_counts: list  # (partition_id, fetched) rows of the fetch job
+    n_fetched: int
+    n_errors: int
 
 
 class CrawlEngine:
@@ -133,8 +173,6 @@ class CrawlEngine:
         track_host_graph: bool = False,
         seen_filter: str | None = "bloom",
     ) -> None:
-        from ethereum_raw_data_crawler_spark.deploy import ship_package
-
         ship_package(spark)
         self.spark = spark
         self.store = SnapshotStore(store_root)
@@ -161,9 +199,6 @@ class CrawlEngine:
         # O(outlinks) map-side-combined aggregation per round that a
         # crawl which never rescores shouldn't pay.
         self.track_host_graph: bool = track_host_graph
-        # cache the corpus-join hit set (html included) below this popped
-        # count; recompute slim branches above it (see run_round)
-        self.HITS_CACHE_MAX: int = 2_000_000
         # seen-set prefilter family: "bloom" (default, 9.6 bits/URL),
         # "cuckoo" (~17.8 bits/URL, ~80x lower FPR, and DELETABLE — the
         # forget_urls unlearn path stays on the fast probe; see
@@ -178,11 +213,7 @@ class CrawlEngine:
         self._bloom: PartitionedFilter | None = None
         self._dims: dict[str, DataFrame] = {}
         self._scratch: list[DataFrame] = []
-        self._egress = None
-        if egress_dir:
-            from ethereum_raw_data_crawler_spark.sources.egress import EgressWriter
-
-            self._egress = EgressWriter(egress_dir)
+        self._egress = EgressWriter(egress_dir) if egress_dir else None
 
     # ------------------------------------------------------------------ setup
     @classmethod
@@ -276,7 +307,9 @@ class CrawlEngine:
             ),
         )
         txn.commit()
-        eng._seed(seeds)
+        # round-0 discovery of the seed list (reference: StartBlock
+        # seeding, crawler_service.go:206-223)
+        eng.admit(seeds.select("url", F.col("priority").cast("int")), 0)
         return eng
 
     @classmethod
@@ -334,23 +367,8 @@ class CrawlEngine:
                 eng._bloom = eng._filter_cls.load(store_root, bloom_rnd)
                 if bloom_rnd < eng.store.round:
                     # a crash between the manifest swap and the bloom meta
-                    # write leaves the bitmaps behind the table — catch up
-                    # by folding in the missed seen fragments (never skip:
-                    # a stale bitmap means false negatives = duplicates)
-                    missed = [
-                        f
-                        for f in eng.store.manifest()["tables"]["seen"][
-                            "fragments"
-                        ]
-                        if f["seq"] > bloom_rnd
-                    ]
-                    if missed:
-                        keys = eng.store._read_fragments(
-                            spark, missed, SEEN
-                        ).select("url_hash")
-                        eng._bloom.add_keys(keys, "url_hash", eng.store.round)
-                    else:
-                        eng._bloom.commit(eng.store.round)
+                    # write leaves the bitmaps behind the table: catch up
+                    eng._fold_seen(eng.store.round)
         return eng
 
     # ------------------------------------------------------------ table reads
@@ -406,11 +424,6 @@ class CrawlEngine:
         driver-side with the SAME pinned pure functions the engine's
         UDFs use (functions/urls.py — xxh64 JVM-equivalence is
         pytest-pinned). Returns the number of seen rows deleted."""
-        from ethereum_raw_data_crawler_spark.functions.urls import (
-            canonicalize_url,
-            url_hash64,
-        )
-
         hashes = sorted(
             {
                 url_hash64(c)
@@ -466,22 +479,8 @@ class CrawlEngine:
         version of the reference's in-memory counters
         (crawler_service.go:910-921)."""
         cfg = self.cfg
-        import time as _time
-
-        _dbg = os.environ.get("SPARK_GRAFT_PHASE_DEBUG") == "1"
-
-        def _probe(name: str, frame: DataFrame) -> None:
-            if _dbg:
-                t0 = _time.monotonic()
-                n = frame.count()
-                print(
-                    f"  [probe] {name}: {n} rows, {int((_time.monotonic()-t0)*1000)} ms",
-                    flush=True,
-                )
-
         if "url_canon" not in candidates.columns:
             candidates = candidates.withColumn("url_canon", canonicalize_udf("url"))
-        _probe("candidates", candidates)
         grouped = (
             candidates.where(F.col("url_canon").isNotNull())
             .groupBy("url_canon")
@@ -496,7 +495,6 @@ class CrawlEngine:
                 "dups",
             )
         )
-        _probe("grouped", grouped)
         robots = self._dim("robots", ROBOTS)
         gated = (
             with_host_and_path(grouped)
@@ -534,11 +532,10 @@ class CrawlEngine:
             flagged = candidates_for_seen.join(
                 seen_keys, "url_hash", "left"
             ).withColumn("seen_hit", F.coalesce(F.col("seen_hit"), F.lit(False)))
-        _probe("gated", gated)
         annotated = flagged.unionByName(
             skipped_rows.withColumn("seen_hit", F.lit(False))
         ).cache()
-        _probe("annotated", annotated)
+        self._scratch.append(annotated)
 
         stats_row = annotated.agg(
             F.coalesce(F.sum("dups"), F.lit(0)).alias("n_valid"),
@@ -567,10 +564,6 @@ class CrawlEngine:
         n_gated = int(stats_row["n_gated"])
         n_admitted = int(stats_row["n_admitted"])
 
-        from ethereum_raw_data_crawler_spark.operators.priority_pop import (
-            assign_global_seq,
-        )
-
         admitted = assign_global_seq(
             annotated.where(
                 F.col("pass_cap") & F.col("pass_robots") & ~F.col("seen_hit")
@@ -595,7 +588,8 @@ class CrawlEngine:
             F.lit(None).cast("int").alias("skip_until"),
             F.lit(rnd).cast("int").alias("round"),
             F.lit(None).cast("int").alias("partition_id"),
-        )
+        ).cache()  # read by the frontier write and the seen append
+        self._scratch.append(rows)
         stats = {
             "discovered": n_admitted,
             "robots_filtered": n_capped - n_gated,
@@ -603,7 +597,6 @@ class CrawlEngine:
             + (n_groups - n_capped)
             + (n_gated - n_admitted),
         }
-        self._scratch.append(annotated)
         return rows, stats
 
     def _drain_scratch(self) -> None:
@@ -611,63 +604,71 @@ class CrawlEngine:
             df.unpersist()
         self._scratch.clear()
 
-    def _seed(self, seeds: DataFrame) -> None:
-        """Round-0 discovery of the seed list (reference: StartBlock seeding,
-        crawler_service.go:206-223)."""
-        empty_seen = self.spark.createDataFrame([], SEEN)
-        rows, stats = self._discover(
-            seeds.select("url", F.col("priority").cast("int")), 0, empty_seen
+    def admit(self, candidates: DataFrame, rnd: int) -> dict:
+        """Discovery-only commit of ``candidates`` (url, priority) as round
+        ``rnd``: the outlink path of a crawl round without the pop — the
+        discover gates, then the new rows' frontier insert and seen append
+        in one commit, then the filter fold. Round 0 seeds the frontier
+        (``create``); realtime mode admits each pushed batch at
+        ``store.round + 1`` (streaming/realtime.py). Already-seen
+        candidates are dropped, so a re-push is a no-op. Returns the
+        discovery counters."""
+        rows, stats = self._discover(candidates, rnd, self.seen())
+        txn = self.store.transaction(rnd)
+        # insert-only upsert: an empty delete set writes no delete
+        # fragment, so later reads never join one
+        txn.upsert("frontier", "url_canon", rows, pd.DataFrame({"url_canon": []}))
+        txn.append(
+            "seen",
+            rows.select(
+                "url_hash",
+                "url_canon",
+                F.lit(rnd).cast("int").alias("first_seen_round"),
+            ),
         )
-        rows = rows.cache()
-        txn = self.store.transaction(0)
-        txn.overwrite("frontier", rows)
-        new_seen = rows.select(
-            "url_hash", "url_canon", F.lit(0).cast("int").alias("first_seen_round")
-        )
-        txn.append("seen", new_seen)
         txn.commit()
-        self._bloom_add_from_seen_fragment(0)
-        rows.unpersist()
+        self._fold_seen(rnd)
         self._drain_scratch()
+        return stats
 
-    def _bloom_rebuild_spark(
-        self, expected_keys: int | None = None
-    ) -> PartitionedFilter:
+    def _bloom_rebuild_spark(self) -> PartitionedFilter:
         """Rebuild the partitioned bitmaps from the seen table — one Spark
         job (repartition keys by bucket, each task writes its buckets'
         bitmap files); the driver only sees per-bucket stat rows. Sized
         from the actual seen cardinality (parquet footer row counts, no
         data read) with 2x headroom."""
         frags = self.store.manifest()["tables"]["seen"]["fragments"]
-        if expected_keys is None:
-            expected_keys = 2 * max(self.store.fragment_rows(frags), 1)
         pb = self._filter_cls.create(
             self.store.root,
             n_buckets=self.bloom_buckets,
-            expected_keys=expected_keys,
+            expected_keys=2 * max(self.store.fragment_rows(frags), 1),
             rnd=self.store.round if frags else -1,
         )
         if frags:
             pb.add_keys(self.seen().select("url_hash"), "url_hash", self.store.round)
         return pb
 
-    def _bloom_add_from_seen_fragment(self, rnd: int) -> None:
-        """OR the just-committed seen fragment into the bucket bitmaps —
-        a Spark job over the fragment's keys (executor-side file folds,
-        only per-bucket counters reach the driver). Buckets past their
-        design capacity (saturation -> FPR collapse) are rebuilt alone at
-        their next size from the seen table."""
+    def _fold_seen(self, rnd: int) -> None:
+        """Bring the seen filter up to committed round ``rnd``: OR every
+        seen fragment committed after the filter's own round into the
+        bucket bitmaps — the round's new fragment, or on resume every one
+        a crash made it miss (never skip: a stale bitmap means false
+        negatives = duplicates). A Spark job over the fragments' keys
+        (executor-side file folds, only per-bucket counters reach the
+        driver). Buckets past their design capacity (saturation -> FPR
+        collapse) are rebuilt alone at their next size from the seen
+        table."""
         if self._bloom is None:
             return
         frags = [
             f
             for f in self.store.manifest()["tables"]["seen"]["fragments"]
-            if f["seq"] == rnd
+            if f["seq"] > self._bloom.round
         ]
         if not frags or self.store.fragment_rows(frags) == 0:
-            # nothing discovered this round: keep the bloom meta's round in
-            # step with the table (crash catch-up compares the two) without
-            # paying an empty fold job
+            # nothing discovered: keep the bloom meta's round in step with
+            # the table (crash catch-up compares the two) without paying an
+            # empty fold job
             self._bloom.commit(rnd)
             return
         keys = self.store._read_fragments(self.spark, frags, SEEN).select("url_hash")
@@ -679,55 +680,98 @@ class CrawlEngine:
 
     # ------------------------------------------------------------- one round
     def run_round(self, rnd: int) -> dict:
-        cfg = self.cfg
-        t0 = time.monotonic()
-        phases: dict[str, int] = {}
-        _last = [t0]
+        """One crawl round as one bounded batch (reference: the polling
+        round pop -> fetch -> convert -> save -> publish,
+        crawler_service.go:229-370). ``phases_ms`` holds each phase's wall
+        time in execution order, and the phases tile the round;
+        ``commit_*`` split the commit by sink. ``wall_ms`` is the whole
+        round."""
+        clock = _PhaseClock()
+        self._precompact(rnd)
+        clock.lap("precompact")
+        pop = self._pop(rnd)
+        clock.lap("pop")
+        fetch = self._fetch(pop)
+        clock.lap("fetch")
 
-        def tick(name: str) -> None:
-            now = time.monotonic()
-            phases[name] = int((now - _last[0]) * 1000)
-            _last[0] = now
+        # fetch_seq numbering is timed with discovery, so the fetch phase
+        # is exactly the fetch+parse materialization
+        pages = self._number_fetched(fetch)
+        # ---- outlink discovery (links arrive canonical + per-doc deduped) --
+        outlinks = pages.select(
+            F.explode("ext.links").alias("url_canon"),
+            (F.col("priority") + 1).cast("int").alias("priority"),
+        ).withColumn("url", F.col("url_canon"))
+        discovered, disc_stats = self._discover(outlinks, rnd, self.seen())
+        clock.lap("discover")
 
-        # health-ACTED recovery, applied LAZILY at the next round start
-        # (reference: performHealthCheck observes, the recovery acts on the
-        # next cycle, crawler_service.go:820-907): if the delete debt the
-        # previous round's gauge recorded is a sizable fraction of the base
-        # rows, rewrite the frontier NOW — the rewrite immediately pays for
-        # itself in this round's pop read, and a crawl that ENDED on a
-        # debt-heavy round never pays an O(frontier) rewrite it would never
-        # benefit from. The transaction commits under the LAST completed
-        # round so a crash between this compaction and this round's commit
-        # resumes at this round, not past it. Footer row counts only — no
-        # Spark job when the debt is below threshold.
+        self._commit(rnd, pop, fetch, pages, discovered, disc_stats, clock)
+        clock.lap("commit")
+        if self._egress is not None:
+            # strictly after the manifest swap (publish-after-save,
+            # crawler_service.go:592-607): reads the COMMITTED snapshot
+            self._egress.emit_round(self.spark, self.store, rnd)
+            clock.lap("egress")
+
+        # scheduled compaction only (rnd % compact_every). The
+        # health-triggered compaction is handled lazily at the start of
+        # the NEXT round (_precompact) so a crawl's final round — or a
+        # benchmark's only round — never pays an O(frontier) rewrite
+        # whose benefit nobody reads.
+        if self.compact_every and rnd % self.compact_every == 0:
+            self.store.compact(self.spark, "frontier", FRONTIER, rnd)
+        clock.lap("compact")
+
+        self._drain_scratch()
+        return {
+            "round": rnd,
+            "popped": pop.n,
+            "fetched": fetch.n_fetched,
+            "errors": fetch.n_errors,
+            **disc_stats,
+            "wall_ms": clock.elapsed_ms(),
+            "phases_ms": clock.ms,
+        }
+
+    def _precompact(self, rnd: int) -> None:
+        """Health-ACTED recovery, applied LAZILY at the next round start
+        (reference: performHealthCheck observes, the recovery acts on the
+        next cycle, crawler_service.go:820-907): if the delete debt the
+        previous round's gauge recorded is a sizable fraction of the base
+        rows, rewrite the frontier NOW — the rewrite immediately pays for
+        itself in this round's pop read, and a crawl that ENDED on a
+        debt-heavy round never pays an O(frontier) rewrite it would never
+        benefit from. The transaction commits under the LAST completed
+        round so a crash between this compaction and this round's commit
+        resumes at this round, not past it. Footer row counts only — no
+        Spark job when the debt is below threshold."""
         t_frontier = self.store.manifest()["tables"]["frontier"]
         if t_frontier["deletes"]:
             base_rows = self.store.fragment_rows(t_frontier["fragments"])
             debt_rows = self.store.fragment_rows(t_frontier["deletes"])
             if base_rows and debt_rows >= self.compact_debt_frac * base_rows:
                 self.store.compact(self.spark, "frontier", FRONTIER, rnd - 1)
-        tick("precompact")
 
-        frontier = self.frontier()
-        eligible = frontier.where(
+    def _eligible(self, rnd: int) -> DataFrame:
+        """Pending rows round ``rnd`` may pop: the retry/skip gate
+        (scheduler_service.go:291-303)."""
+        return self.frontier().where(
             (F.col("status") == STATUS_PENDING)
             & (F.col("skip_until").isNull() | (F.col("skip_until") <= F.lit(rnd)))
         )
-        politeness = self._dim("politeness", POLITENESS)
+
+    def _pop(self, rnd: int) -> _Pop:
+        """Per-host politeness budgets + the (priority, host,
+        discovery_ts, url) priority pop (crawler_service.go:251-307
+        recast), counted per corpus bucket in one job."""
         popped = pop_batch(
-            eligible,
-            politeness,
-            cfg.batch_size,
-            cfg.default_budget,
+            self._eligible(rnd),
+            self._dim("politeness", POLITENESS),
+            self.cfg.batch_size,
+            self.cfg.default_budget,
             prune=self.prune_pop,
             scratch=self._scratch,
         )
-        # small-k pops come off a driver TakeOrdered (no upstream cache) —
-        # cache them; large-k pops are a cheap map over the range-sorted
-        # partitioning assign_global_seq already cached in scratch, so a
-        # second 10^7-row materialization here would only burn memory
-        if cfg.batch_size <= 100_000:
-            popped = popped.cache()
         # one job: popped count + the corpus buckets it hashes into
         bucket_counts = (
             popped.groupBy(
@@ -736,118 +780,96 @@ class CrawlEngine:
             .count()
             .collect()
         )
-        n_popped = int(sum(r["count"] for r in bucket_counts))
-        tick("pop")
+        return _Pop(
+            popped,
+            int(sum(r["count"] for r in bucket_counts)),
+            sorted(r["bucket"] for r in bucket_counts),
+        )
 
-        # ---- fetch: partition-pruned corpus join + failure injection ------
-        if n_popped:
-            buckets = sorted(r["bucket"] for r in bucket_counts)
-            corpus_sel = self.store.read(
-                self.spark,
-                "corpus",
-                CORPUS,
-                partition_filter=f"bucket in ({','.join(map(str, buckets))})",
-            ).select("url_canon", "warc_ts", "html", "lang")
-            failures = self._dim("fetch_failures", FETCH_FAILURES)
-            # small pops broadcast (no corpus shuffle); large pops would
-            # serialize on the driver-side broadcast build — shuffle both
-            # sides, but pin the physical strategy to a SHUFFLED HASH join
-            # with the slim popped batch as build side: the default
-            # sort-merge plan SORTS the corpus side, and at 20M rows that
-            # side carries the html payload (~40 GB through sort buffers).
-            # Hashing the slim side instead skips that entirely — measured
-            # on the 20M fetch-join shape, 16 alternating legs in one
-            # session: SHJ wins 6/8 adjacent pairs, min 10.8 s vs 15.6 s,
-            # median 24.9 s vs 33.4 s (BENCH/BASELINE.md round 5). The
-            # build side must stay bounded by DATA volume, not cluster
-            # width: at the configured shuffle width alone a narrow
-            # cluster (or local[2]) gets batch/width-row hash builds —
-            # measured 4x+ round blowup at 20M popped / 2 partitions
-            # (10M-row builds thrash GC). Widening the exchange so each
-            # build holds <= SHJ_BUILD_ROWS slim rows keeps every
-            # executor's hash map at low hundreds of MB no matter how
-            # many executors the job happens to get; the explicit
-            # repartition IS the join's exchange (it satisfies the hash
-            # distribution), so wide clusters pay nothing extra.
-            # SPARK_GRAFT_FETCH_JOIN=smj restores the optimizer-chosen
-            # sort-merge plan — a deploy-time escape hatch (and the A/B
-            # instrument used to adjudicate the hint's interaction with
-            # the parse cache under memory pressure).
-            if n_popped <= 100_000:
-                popped_side = F.broadcast(popped)
-            elif os.environ.get("SPARK_GRAFT_FETCH_JOIN", "shj") == "smj":
-                popped_side = popped
-            else:
-                width = shj_width(
-                    n_popped,
-                    int(self.spark.conf.get("spark.sql.shuffle.partitions")),
-                )
-                popped_side = popped.repartition(width, "url_canon").hint(
-                    "shuffle_hash"
-                )
-            hits = (
-                corpus_sel.join(popped_side, "url_canon", "inner")
-                .join(F.broadcast(failures), "url_canon", "left")
-                .withColumn("attempt", F.col("retry_count") + 1)
-                .withColumn(
-                    "fetch_failed",
-                    F.coalesce(
-                        F.array_contains(F.col("fail_attempts"), F.col("attempt")),
-                        F.lit(False),
-                    ),
-                )
-                .withColumn("partition_id", F.spark_partition_id())
-            )
-            # batch-size-gated materialization strategy: below ~2M popped
-            # rows the html of the hit set fits executor memory twice, and
-            # caching hits means the failed/miss branches and the parse
-            # all reuse one corpus join (the fast small-batch plan). Above
-            # that, a second multi-GB html cache is what made 32
-            # concurrent tasks spill where 8 did not — leave hits lazy and
-            # let the failed/miss branches recompute SLIM (column pruning
-            # keeps html out of those scans).
-            if n_popped <= self.HITS_CACHE_MAX:
-                hits = hits.cache()
-            hit_keys = hits.select("url_canon")
-            if n_popped <= 100_000:
-                hit_keys = F.broadcast(hit_keys)
-            misses = popped.join(hit_keys, "url_canon", "left_anti").withColumn(
-                "fetch_failed", F.lit(True)
-            )
-            fetched = hits.where(~F.col("fetch_failed"))
-            # error_class rides along for the class-specific backoff;
-            # misses (URL absent from the corpus) have no class -> default
-            failed = (
-                hits.where(F.col("fetch_failed"))
-                .select(*[f.name for f in FRONTIER.fields], "error_class")
-                .unionByName(
-                    misses.select(
-                        *[f.name for f in FRONTIER.fields]
-                    ).withColumn("error_class", F.lit(None).cast("string"))
-                )
-            )
+    def _fetch(self, pop: _Pop) -> _Fetch:
+        """Fetch = partition-pruned corpus join + failure injection
+        (GetBlockByNumber, ethereum_service.go:142-185 recast), then the
+        parse (convertBlock, ethereum_service.go:421-456) of the fetched
+        rows, materialized in one job."""
+        # an empty pop reads no bucket and runs the same plan over no rows
+        buckets = ",".join(map(str, pop.buckets))
+        corpus_sel = self.store.read(
+            self.spark,
+            "corpus",
+            CORPUS,
+            partition_filter=f"bucket in ({buckets})" if buckets else "false",
+        ).select("url_canon", "warc_ts", "html", "lang")
+        failures = self._dim("fetch_failures", FETCH_FAILURES)
+        popped = pop.rows
+        small = pop.n <= gates.SMALL_BATCH_MAX
+        # small pops broadcast (no corpus shuffle); large pops would
+        # serialize on the driver-side broadcast build — shuffle both
+        # sides, but pin the physical strategy to a SHUFFLED HASH join
+        # with the slim popped batch as build side: the default
+        # sort-merge plan SORTS the corpus side, and at 20M rows that
+        # side carries the html payload (~40 GB through sort buffers).
+        # Hashing the slim side instead skips that entirely — measured
+        # on the 20M fetch-join shape, 16 alternating legs in one
+        # session: SHJ wins 6/8 adjacent pairs, min 10.8 s vs 15.6 s,
+        # median 24.9 s vs 33.4 s (BENCH/BASELINE.md round 5). The
+        # build side must stay bounded by DATA volume, not cluster
+        # width: at the configured shuffle width alone a narrow
+        # cluster (or local[2]) gets batch/width-row hash builds —
+        # measured 4x+ round blowup at 20M popped / 2 partitions
+        # (10M-row builds thrash GC). Widening the exchange so each
+        # build holds <= gates.SHJ_BUILD_ROWS slim rows keeps every
+        # executor's hash map at low hundreds of MB no matter how
+        # many executors the job happens to get; the explicit
+        # repartition IS the join's exchange (it satisfies the hash
+        # distribution), so wide clusters pay nothing extra.
+        if small:
+            popped_side = F.broadcast(popped)
         else:
-            hits = self.spark.createDataFrame(
-                [],
-                T.StructType(
-                    list(FRONTIER.fields)
-                    + [
-                        T.StructField("pop_seq", T.LongType(), False),
-                        T.StructField("warc_ts", T.TimestampType(), True),
-                        T.StructField("html", T.BinaryType(), True),
-                        T.StructField("lang", T.StringType(), True),
-                        T.StructField("fetch_failed", T.BooleanType(), False),
-                    ]
+            width = gates.shj_width(
+                pop.n, int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            )
+            popped_side = popped.repartition(width, "url_canon").hint("shuffle_hash")
+        hits = (
+            corpus_sel.join(popped_side, "url_canon", "inner")
+            .join(F.broadcast(failures), "url_canon", "left")
+            .withColumn("attempt", F.col("retry_count") + 1)
+            .withColumn(
+                "fetch_failed",
+                F.coalesce(
+                    F.array_contains(F.col("fail_attempts"), F.col("attempt")),
+                    F.lit(False),
                 ),
             )
-            fetched = hits.where(~F.col("fetch_failed"))
-            failed = self.spark.createDataFrame(
-                [],
-                T.StructType(
-                    list(FRONTIER.fields)
-                    + [T.StructField("error_class", T.StringType(), True)]
-                ),
+            .withColumn("partition_id", F.spark_partition_id())
+        )
+        # batch-size-gated materialization strategy: below ~2M popped
+        # rows the html of the hit set fits executor memory twice, and
+        # caching hits means the failed/miss branches and the parse
+        # all reuse one corpus join (the fast small-batch plan). Above
+        # that, a second multi-GB html cache is what made 32
+        # concurrent tasks spill where 8 did not — leave hits lazy and
+        # let the failed/miss branches recompute SLIM (column pruning
+        # keeps html out of those scans).
+        if pop.n <= gates.HITS_CACHE_MAX:
+            hits = hits.cache()
+            self._scratch.append(hits)
+        hit_keys = hits.select("url_canon")
+        if small:
+            hit_keys = F.broadcast(hit_keys)
+        misses = popped.join(hit_keys, "url_canon", "left_anti")
+        # error_class rides along for the class-specific backoff;
+        # misses (URL absent from the corpus) have no class -> default.
+        # pop_seq rides along for fetch_seq numbering.
+        frontier_cols = [f.name for f in FRONTIER.fields]
+        failed = (
+            hits.where(F.col("fetch_failed"))
+            .select(*frontier_cols, "error_class", "pop_seq")
+            .unionByName(
+                misses.select(*frontier_cols, "pop_seq").withColumn(
+                    "error_class", F.lit(None).cast("string")
+                )
             )
+        )
 
         # the round's heavy materialization: the fetched rows with their
         # parse results. html crosses the Arrow socket once and is cached
@@ -855,42 +877,39 @@ class CrawlEngine:
         # above: small batches reuse one corpus join everywhere, large
         # batches recompute the slim branches instead of spilling a second
         # 10^7-row html cache.
-        extracted_base = fetched.withColumn(
-            "ext", extract_page_udf("html", "url_canon")
-        ).cache()
+        fetched = (
+            hits.where(~F.col("fetch_failed"))
+            .withColumn("ext", extract_page_udf("html", "url_canon"))
+            .cache()
+        )
+        self._scratch.append(fetched)
         # one job: materialize fetch+parse AND the per-partition lineage
         part_counts = (
-            extracted_base.groupBy("partition_id")
-            .agg(F.count("*").alias("fetched"))
-            .collect()
+            fetched.groupBy("partition_id").agg(F.count("*").alias("fetched")).collect()
         )
         n_fetched = int(sum(r["fetched"] for r in part_counts))
-        n_errors = n_popped - n_fetched
-        tick("fetch")
+        return _Fetch(fetched, failed, part_counts, n_fetched, pop.n - n_fetched)
 
-        from ethereum_raw_data_crawler_spark.operators.priority_pop import (
-            assign_global_seq,
-        )
+    def _number_fetched(self, fetch: _Fetch) -> DataFrame:
+        """The fetched rows with ``seq`` = fetch_seq: the dense rank of
+        pop_seq among fetched rows. pop_seq is already a dense
+        0..n_popped-1 sequence, so the rank of a fetched row is pop_seq
+        minus the number of FAILED rows popped before it:
 
-        # fetch_seq = dense rank of pop_seq among fetched rows. pop_seq is
-        # already a dense 0..n_popped-1 sequence, so the rank of a fetched
-        # row is pop_seq minus the number of FAILED rows popped before it:
-        #   * no errors (the production common case): fetch_seq = pop_seq,
-        #     zero extra jobs, zero driver bytes;
-        #   * few errors: collect only the failed pop_seqs (bounded by the
-        #     error count, not the batch) and subtract map-side via
-        #     searchsorted — html never moves, the broadcast is tiny;
-        #   * degenerate (>2M errors AND >2M fetched): fully distributed
-        #     two-pass numbering (one slim-column range sort, cached).
-        if n_fetched and n_errors == 0:
-            extracted = extracted_base.withColumn("seq", F.col("pop_seq"))
-        elif n_fetched and n_errors <= 2_000_000:
-            import numpy as np
-
+        * no errors (the production common case): fetch_seq = pop_seq,
+          zero extra jobs, zero driver bytes;
+        * up to ``gates.ERROR_COLLECT_MAX`` errors: collect only the
+          failed pop_seqs (bounded by the error count, not the batch) and
+          subtract map-side via searchsorted — html never moves, the
+          broadcast is tiny;
+        * more errors: fully distributed two-pass numbering (one
+          slim-column range sort, cached)."""
+        fetched = fetch.fetched
+        if not fetch.n_errors or not fetch.n_fetched:
+            return fetched.withColumn("seq", F.col("pop_seq"))
+        if fetch.n_errors <= gates.ERROR_COLLECT_MAX:
             failed_seqs = np.sort(
-                hits.where(F.col("fetch_failed"))
-                .select("pop_seq")
-                .unionByName(misses.select("pop_seq"))
+                fetch.failed.select("pop_seq")
                 .toPandas()["pop_seq"]  # Arrow path: one slim int64 column
                 .to_numpy(dtype=np.int64)
             )
@@ -898,44 +917,28 @@ class CrawlEngine:
 
             # scalar pandas UDF: ONLY pop_seq crosses the Arrow socket
             # (a mapInPandas here would ship html+text along for the ride)
-            from pyspark.sql.functions import pandas_udf
-
             @pandas_udf("long")
             def _rank(p: pd.Series) -> pd.Series:
                 pv = p.to_numpy(dtype=np.int64)
                 return pd.Series(pv - np.searchsorted(bc_seqs.value, pv))
 
-            extracted = extracted_base.withColumn("seq", _rank("pop_seq"))
-        else:
-            extracted = assign_global_seq(
-                extracted_base,
-                ["pop_seq"],
-                "seq",
-                approx_count=n_fetched if n_fetched <= 200_000 else None,
-                scratch=self._scratch,
-            )
-        pages_out = extracted.select(
-            F.col("url_canon").alias("url"),
-            "warc_ts",
-            "html",
-            F.col("ext.text").alias("text"),
-            "lang",
-            F.lit(rnd).cast("int").alias("fetch_round"),
-            F.col("seq").alias("fetch_seq"),
+            return fetched.withColumn("seq", _rank("pop_seq"))
+        return assign_global_seq(
+            fetched,
+            ["pop_seq"],
+            "seq",
+            approx_count=fetch.n_fetched,
+            scratch=self._scratch,
         )
 
-        # ---- outlink discovery (links arrive canonical + per-doc deduped) --
-        seen_now = self.seen()
-        outlinks = extracted.select(
-            F.explode("ext.links").alias("url_canon"),
-            (F.col("priority") + 1).cast("int").alias("priority"),
-        ).withColumn("url", F.col("url_canon"))
-        discovered, disc_stats = self._discover(outlinks, rnd, seen_now)
-        discovered = discovered.cache()
-        tick("discover")
-
-        # ---- frontier bookkeeping (scheduler_service.go:324-357) ----------
-        fetched_upd = extracted.select(
+    def _frontier_delta(
+        self, rnd: int, fetch: _Fetch, pages: DataFrame, discovered: DataFrame
+    ) -> DataFrame:
+        """Frontier bookkeeping (scheduler_service.go:324-357): the
+        round's new frontier rows — fetched, failed/missed with their
+        backoff, and discovered."""
+        cfg = self.cfg
+        fetched_upd = pages.select(
             "url",
             "url_canon",
             "url_hash",
@@ -948,6 +951,13 @@ class CrawlEngine:
             F.lit(rnd).cast("int").alias("round"),
             F.col("partition_id").cast("int").alias("partition_id"),
         )
+        # zero-error rounds (the production common case, and provable here
+        # from counts already in hand): the failed/miss branches are empty,
+        # and UNIONing them anyway would re-evaluate the corpus join twice
+        # (slim, but ~20-30 s each at 20M popped) just to append no rows —
+        # measured as the bulk of a 70 s commit_frontier phase at 20M.
+        if not fetch.n_errors:
+            return fetched_upd.unionByName(discovered)
         # class-specific backoff (reference: isRetryableError +
         # per-class schedules, ethereum_service.go:100-124,594-624):
         #   non_retryable -> failed immediately (no retry budget burned on
@@ -961,7 +971,7 @@ class CrawlEngine:
         is_rl = F.col("error_class") == F.lit("rate_limit")
         is_nr = F.col("error_class") == F.lit("non_retryable")
         dead = is_nr | (new_rc >= cfg.hard_fail_retries)
-        failed_upd = failed.select(
+        failed_upd = fetch.failed.select(
             "url",
             "url_canon",
             "url_hash",
@@ -991,26 +1001,86 @@ class CrawlEngine:
             # lineage under AQE; misses would carry a stale prior-round id.)
             F.lit(None).cast("int").alias("partition_id"),
         )
-        # zero-error rounds (the production common case, and provable here
-        # from counts already in hand): the failed/miss branches are empty,
-        # and UNIONing them anyway would re-evaluate the corpus join twice
-        # (slim, but ~20-30 s each at 20M popped) just to append no rows —
-        # measured as the bulk of a 70 s commit_frontier phase at 20M.
-        if n_errors:
-            frontier_new = fetched_upd.unionByName(failed_upd).unionByName(
-                discovered
+        return fetched_upd.unionByName(failed_upd).unionByName(discovered)
+
+    def _health_rows(
+        self, rnd: int, n_popped: int, n_errors: int, n_discovered: int, wall_ms: int
+    ) -> pd.DataFrame:
+        """Component-health snapshot (reference: performHealthCheck,
+        crawler_service.go:666-907) — gauges already in hand, no job."""
+        err_frac = (n_errors / n_popped) if n_popped else 0.0
+        sat = (
+            self._bloom.estimated_saturation() if self._bloom is not None else 0.0
+        )
+        # frontier delete DEBT RATIO after this commit: (debt before + this
+        # round's delete fragment) / (base rows after this commit), both
+        # sides from parquet footers + counts already in hand — no job.
+        # This gauge is ACTED on at the START of the next round
+        # (_precompact): past compact_debt_frac the frontier is rewritten
+        # before the next pop reads it. Relative, so a round's debt only
+        # triggers an O(frontier) rewrite when it is actually worth
+        # O(frontier) — never every round at production scale.
+        tf = self.store.manifest()["tables"]["frontier"]
+        debt_rows = self.store.fragment_rows(tf["deletes"]) + n_popped
+        base_rows = self.store.fragment_rows(tf["fragments"]) + n_popped + n_discovered
+        debt_ratio = (debt_rows / base_rows) if base_rows else 0.0
+        rows = [
+            (rnd, "store", True, float(self.store.manifest()["version"]), "manifest version"),
+            (rnd, "bloom", sat < 0.5, float(sat), "bitmap saturation"),
+            (rnd, "fetch", err_frac < 0.5, float(err_frac), "error fraction"),
+            (rnd, "scheduler", True, float(wall_ms), "round wall ms"),
+            (rnd, "frontier", debt_ratio < self.compact_debt_frac,
+             float(debt_ratio), "frontier delete debt / base rows"),
+        ]
+        return pd.DataFrame(rows, columns=[f.name for f in HEALTH.fields])
+
+    def _host_edges(self, pages: DataFrame, rnd: int) -> DataFrame:
+        """Host-level link-graph delta for this round: O(outlinks) with
+        map-side combine (host pairs repeat heavily within a partition),
+        grouped down to ~|hosts|^epsilon rows before the shuffle. Only
+        host + links are read back out of the cached parse — html never
+        moves. Self-host edges carry no authority signal and are dropped
+        (standard host-graph practice)."""
+        return (
+            pages.select(
+                F.col("host").alias("src_host"),
+                F.explode("ext.links").alias("dst"),
             )
-        else:
-            frontier_new = fetched_upd.unionByName(discovered)
+            .withColumn("dst_host", F.regexp_extract("dst", r"^https?://([^/]+)/", 1))
+            .where((F.col("dst_host") != "") & (F.col("dst_host") != F.col("src_host")))
+            .groupBy("src_host", "dst_host")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select("src_host", "dst_host", "n", F.lit(rnd).cast("int").alias("round"))
+        )
+
+    def _commit(
+        self,
+        rnd: int,
+        pop: _Pop,
+        fetch: _Fetch,
+        pages: DataFrame,
+        discovered: DataFrame,
+        disc_stats: dict,
+        clock: _PhaseClock,
+    ) -> None:
+        """Single atomic commit (publish-after-save ordering,
+        crawler_service.go:592-607): every sink is written eagerly, the
+        manifest swap is last, then the seen delta folds into the filter.
+        ``clock`` times each sink as ``commit_<sink>`` so a slow commit is
+        attributable to a sink, not guessed at."""
+        n_popped, n_fetched = pop.n, fetch.n_fetched
+        n_discovered = disc_stats["discovered"]
+        frontier_new = self._frontier_delta(rnd, fetch, pages, discovered)
         # small pops: collect delete keys driver-side (no Spark write job);
         # large pops: keep them distributed
-        if n_popped <= 200_000:
-            delete_keys = popped.select("url_canon").toPandas()
-        else:
-            delete_keys = popped.select("url_canon")
+        delete_keys = pop.rows.select("url_canon")
+        if n_popped <= gates.DRIVER_COLLECT_MAX:
+            delete_keys = delete_keys.toPandas()
 
         # ---- per-(round, partition) lineage metrics ------------------------
-        wall_ms = int((time.monotonic() - t0) * 1000)
+        # metrics.wall_ms and the scheduler health gauge are written by this
+        # commit, so they cover the round up to here
+        wall_ms = clock.elapsed_ms()
         metrics_rows = [
             (
                 rnd,
@@ -1022,7 +1092,7 @@ class CrawlEngine:
                 0,
                 0,
             )
-            for r in part_counts
+            for r in fetch.partition_counts
         ]
         # round-level aggregates ride on partition_id = -1
         metrics_rows.append(
@@ -1033,77 +1103,41 @@ class CrawlEngine:
                 n_fetched,
                 disc_stats["deduped"],
                 disc_stats["robots_filtered"],
-                n_errors,
+                fetch.n_errors,
                 wall_ms,
             )
         )
         metrics_pdf = pd.DataFrame(
             metrics_rows, columns=[f.name for f in METRICS.fields]
         )
-
-        # ---- single atomic commit (publish-after-save ordering) -----------
-        new_seen = discovered.select(
-            "url_hash", "url_canon", F.lit(rnd).cast("int").alias("first_seen_round")
+        health_pdf = self._health_rows(
+            rnd, n_popped, fetch.n_errors, n_discovered, wall_ms
         )
 
         # cheap per-round deltas are O(batch_size); size their output files
         # accordingly. pages_out is NOT coalesced: its write stage computes
         # the text extraction, and narrowing it below the core count would
         # serialize the hottest stage of the round.
-        def parts(n: int, per: int = 100_000) -> int:
-            return max(1, min(64, n // per + 1))
-
-        # component-health snapshot (reference: performHealthCheck,
-        # crawler_service.go:666-907) — gauges already in hand, no extra job
-        err_frac = (n_errors / n_popped) if n_popped else 0.0
-        sat = (
-            self._bloom.estimated_saturation() if self._bloom is not None else 0.0
+        pages_out = pages.select(
+            F.col("url_canon").alias("url"),
+            "warc_ts",
+            "html",
+            F.col("ext.text").alias("text"),
+            "lang",
+            F.lit(rnd).cast("int").alias("fetch_round"),
+            F.col("seq").alias("fetch_seq"),
         )
-        # frontier delete DEBT RATIO after this commit: (debt before + this
-        # round's delete fragment) / (base rows after this commit), both
-        # sides from parquet footers + counts already in hand — no job.
-        # This gauge is ACTED on at the START of the next round (see
-        # run_round's precompact): past compact_debt_frac the frontier is
-        # rewritten before the next pop reads it. Relative, so a round's
-        # debt only triggers an O(frontier) rewrite when it is actually
-        # worth O(frontier) — never every round at production scale.
-        tf = self.store.manifest()["tables"]["frontier"]
-        debt_rows = self.store.fragment_rows(tf["deletes"]) + n_popped
-        base_rows = (
-            self.store.fragment_rows(tf["fragments"])
-            + n_popped
-            + disc_stats["discovered"]
-        )
-        debt_ratio = (debt_rows / base_rows) if base_rows else 0.0
-        health_rows = [
-            (rnd, "store", True, float(self.store.manifest()["version"]), "manifest version"),
-            (rnd, "bloom", sat < 0.5, float(sat), "bitmap saturation"),
-            (rnd, "fetch", err_frac < 0.5, float(err_frac), "error fraction"),
-            (rnd, "scheduler", True, float(wall_ms), "round wall ms"),
-            (rnd, "frontier", debt_ratio < self.compact_debt_frac,
-             float(debt_ratio), "frontier delete debt / base rows"),
-        ]
-        health_pdf = pd.DataFrame(health_rows, columns=[f.name for f in HEALTH.fields])
-
-        # per-sink timers inside the commit phase (writes are eager, the
-        # manifest swap is last): phases_ms carries the split so a slow
-        # commit is attributable to a sink, not guessed at
-        def timed(name: str, fn) -> None:
-            t = time.monotonic()
-            fn()
-            phases[f"commit_{name}"] = int((time.monotonic() - t) * 1000)
-
         txn = self.store.transaction(rnd)
-        timed("pages", lambda: txn.append("pages_out", pages_out))
-        if disc_stats["discovered"]:
+        with clock.span("commit_pages"):
+            txn.append("pages_out", pages_out)
+        if n_discovered:
             # a discovery-free round (fully-seeded production shape) skips
             # the empty fragment AND its write job
-            timed(
-                "seen",
-                lambda: txn.append(
-                    "seen", new_seen.coalesce(parts(disc_stats["discovered"]))
-                ),
+            new_seen = discovered.select(
+                "url_hash", "url_canon", F.lit(rnd).cast("int").alias("first_seen_round")
             )
+            with clock.span("commit_seen"):
+                txn.append("seen", new_seen.coalesce(gates.output_files(n_discovered)))
         txn.append_pandas("metrics", metrics_pdf, METRICS)
         if "health" in txn.manifest["tables"]:  # stores created pre-§10
             txn.append_pandas("health", health_pdf, HEALTH)
@@ -1112,80 +1146,19 @@ class CrawlEngine:
             and n_fetched
             and "host_edges" in txn.manifest["tables"]  # stores pre-§11
         ):
-            # host-level link-graph delta for this round: O(outlinks) with
-            # map-side combine (host pairs repeat heavily within a
-            # partition), grouped down to ~|hosts|^epsilon rows before the
-            # shuffle. Only host + links are read back out of the cached
-            # parse — html never moves. Self-host edges carry no authority
-            # signal and are dropped (standard host-graph practice).
-            edges_rnd = (
-                extracted.select(
-                    F.col("host").alias("src_host"),
-                    F.explode("ext.links").alias("dst"),
-                )
-                .withColumn(
-                    "dst_host",
-                    F.regexp_extract("dst", r"^https?://([^/]+)/", 1),
-                )
-                .where(
-                    (F.col("dst_host") != "")
-                    & (F.col("dst_host") != F.col("src_host"))
-                )
-                .groupBy("src_host", "dst_host")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(
-                    "src_host",
-                    "dst_host",
-                    "n",
-                    F.lit(rnd).cast("int").alias("round"),
-                )
-            )
-            timed(
-                "host_graph",
-                lambda: txn.append(
-                    "host_edges", edges_rnd.coalesce(parts(n_fetched))
-                ),
-            )
-        timed(
-            "frontier",
-            lambda: txn.upsert(
+            edges = self._host_edges(pages, rnd)
+            with clock.span("commit_host_graph"):
+                txn.append("host_edges", edges.coalesce(gates.output_files(n_fetched)))
+        with clock.span("commit_frontier"):
+            txn.upsert(
                 "frontier",
                 "url_canon",
-                frontier_new.coalesce(parts(n_popped + disc_stats["discovered"])),
+                frontier_new.coalesce(gates.output_files(n_popped + n_discovered)),
                 delete_keys,
-            ),
-        )
+            )
         txn.commit()
-        timed("bloom", lambda: self._bloom_add_from_seen_fragment(rnd))
-        tick("commit")
-        if self._egress is not None:
-            # strictly after the manifest swap (publish-after-save,
-            # crawler_service.go:592-607): reads the COMMITTED snapshot
-            self._egress.emit_round(self.spark, self.store, rnd)
-            tick("egress")
-
-        # scheduled compaction only (rnd % compact_every). The
-        # health-triggered compaction is handled lazily at the start of
-        # the NEXT round (precompact above) so a crawl's final round — or
-        # a benchmark's only round — never pays an O(frontier) rewrite
-        # whose benefit nobody reads.
-        if self.compact_every and rnd % self.compact_every == 0:
-            self.store.compact(self.spark, "frontier", FRONTIER, rnd)
-        tick("compact")
-
-        for df in (popped, hits, extracted_base, discovered):
-            df.unpersist()  # no-op for never-cached frames (large-k popped,
-            # large-batch hits)
-        self._drain_scratch()
-        return {
-            "round": rnd,
-            "popped": n_popped,
-            "fetched": n_fetched,
-            "errors": n_errors,
-            **disc_stats,
-            "wall_ms": wall_ms,
-            "phases_ms": phases,
-        }
+        with clock.span("commit_bloom"):
+            self._fold_seen(rnd)
 
     def cleanup_metrics(self, keep_last_rounds: int = 100) -> int:
         """Metrics retention (reference: CleanupOldMetrics,
@@ -1228,13 +1201,6 @@ class CrawlEngine:
         partitionings, so all ordering happens on parts-per-billion
         integers (the same discipline as the link_pagerank query oracle).
         """
-        import math
-
-        from ethereum_raw_data_crawler_spark.operators.linkrank import pagerank
-        from ethereum_raw_data_crawler_spark.operators.priority_pop import (
-            assign_global_seq,
-        )
-
         # unweighted host graph: one edge per distinct (src, dst) pair —
         # per-round fragments re-observe the same pair, distinct folds them
         edges = self.host_edges().select("src_host", "dst_host").distinct()
@@ -1260,7 +1226,7 @@ class CrawlEngine:
             .where(F.col("pos") < F.lit(k))
             .select(F.col("node").alias("host"))
         )
-        if k <= 1_000_000:
+        if k <= gates.RESCORE_BROADCAST_MAX:
             top = F.broadcast(top)
 
         boosted = (
@@ -1285,7 +1251,7 @@ class CrawlEngine:
             txn.upsert(
                 "frontier",
                 "url_canon",
-                boosted.coalesce(max(1, min(64, n_boosted // 100_000 + 1))),
+                boosted.coalesce(gates.output_files(n_boosted)),
                 boosted.select("url_canon"),
             )
             txn.commit()
@@ -1301,17 +1267,7 @@ class CrawlEngine:
         """Pending rows that round ``rnd`` would actually pop — the
         pending count minus rows inside a retry-skip window
         (scheduler_service.go:291-303's eligibility gate)."""
-        return (
-            self.frontier()
-            .where(
-                (F.col("status") == STATUS_PENDING)
-                & (
-                    F.col("skip_until").isNull()
-                    | (F.col("skip_until") <= F.lit(rnd))
-                )
-            )
-            .count()
-        )
+        return self._eligible(rnd).count()
 
     def run(self, max_rounds: int | None = None) -> list[dict]:
         """Round loop (reference: crawlerWorker ticker, crawler_service.go:

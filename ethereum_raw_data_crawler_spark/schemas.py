@@ -105,7 +105,10 @@ TRACE = T.StructType(
 
 # §8 metrics — per-(round, partition) lineage counters. Analogue of the
 # crawler_metrics snapshots (reference: crawler_metrics.go:10-43;
-# crawler_service.go:645-724) at round granularity.
+# crawler_service.go:645-724) at round granularity. ``wall_ms`` is the
+# round's wall time up to its commit (the row is written by that commit),
+# so it leaves out the commit, egress and compaction; the whole-round wall
+# is ``run_round``'s returned ``wall_ms`` and ``phases_ms``.
 METRICS = T.StructType(
     [
         T.StructField("round", T.IntegerType(), False),

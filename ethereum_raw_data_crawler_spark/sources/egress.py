@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from ethereum_raw_data_crawler_spark import gates
+
 EVENT = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -73,7 +75,7 @@ class EgressWriter:
             "url", "fetch_round", "fetch_seq", "warc_ts", "lang"
         )
         out = os.path.join(self.egress_dir, f"round-{rnd}")
-        nparts = max(1, min(64, n // 1_000_000 + 1))
+        nparts = gates.output_files(n, gates.EGRESS_FILE_ROWS)
         events.coalesce(nparts).write.mode("overwrite").parquet(out)
         open(self._marker(rnd), "w").close()
         return n

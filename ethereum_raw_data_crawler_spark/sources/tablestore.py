@@ -36,17 +36,30 @@ import json
 import os
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from ethereum_raw_data_crawler_spark import gates
+
 SEQ_COL = "_seq"
+#: a MOR table's delete fragments: rows keyed ``key`` die below ``del_seq``
+_DELETES = T.StructType(
+    [
+        T.StructField("key", T.StringType(), False),
+        T.StructField("del_seq", T.IntegerType(), False),
+    ]
+)
 
 
-def _arrow_type(dt: T.DataType):
-    """Spark type -> arrow type for the small driver-side writes."""
+def _write_pandas(absdir: str, pdf, spark_schema: T.StructType) -> None:
+    """Write a SMALL pandas frame as one parquet file driver-side (no
+    Spark job). The arrow schema is derived from the Spark schema so the
+    file reads back identically."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    return {
+    arrow_type = {
         T.IntegerType(): pa.int32(),
         T.LongType(): pa.int64(),
         T.StringType(): pa.string(),
@@ -54,7 +67,13 @@ def _arrow_type(dt: T.DataType):
         T.DoubleType(): pa.float64(),
         T.TimestampType(): pa.timestamp("us", tz="UTC"),
         T.BinaryType(): pa.binary(),
-    }[dt]
+    }
+    schema = pa.schema(
+        [pa.field(f.name, arrow_type[f.dataType], f.nullable) for f in spark_schema.fields]
+    )
+    os.makedirs(absdir, exist_ok=True)
+    table = pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
+    pq.write_table(table, os.path.join(absdir, "part-00000.parquet"))
 
 
 def _empty(spark: SparkSession, schema: T.StructType) -> DataFrame:
@@ -62,12 +81,6 @@ def _empty(spark: SparkSession, schema: T.StructType) -> DataFrame:
 
 
 class SnapshotStore:
-    # Above this many accumulated delete-set rows a MOR read stops hinting
-    # F.broadcast on the delete side (a multi-GB broadcast at production
-    # pop sizes is a driver/executor OOM) and lets the planner/AQE pick a
-    # shuffle join from the real sizes instead.
-    BROADCAST_DELETE_MAX = 1_000_000
-
     def __init__(self, root: str) -> None:
         self.root = root
         self._manifest: dict | None = None
@@ -192,21 +205,15 @@ class SnapshotStore:
             rows = rows.where(partition_filter)
         if not t["deletes"]:
             return rows.drop(SEQ_COL)
-        del_schema = T.StructType(
-            [
-                T.StructField("key", T.StringType(), False),
-                T.StructField("del_seq", T.IntegerType(), False),
-            ]
-        )
         dels = (
-            self._read_fragments(spark, t["deletes"], del_schema)
+            self._read_fragments(spark, t["deletes"], _DELETES)
             .groupBy("key")
             .agg(F.max("del_seq").alias("del_seq"))
         )
         # broadcast only while the accumulated delete set is genuinely
         # small (footer row counts, no job); past the threshold the hint
         # would OOM the driver — shuffle instead and let AQE choose.
-        if self.fragment_rows(t["deletes"]) <= self.BROADCAST_DELETE_MAX:
+        if self.fragment_rows(t["deletes"]) <= gates.DELETE_BROADCAST_MAX:
             dels = F.broadcast(dels)
         key = t["key"]
         return (
@@ -361,22 +368,10 @@ class Transaction:
     def append_pandas(self, name: str, pdf, spark_schema: T.StructType):
         """Driver-side append of a SMALL pandas frame via pyarrow — no Spark
         job. Used for per-round metadata rows (metrics) where a distributed
-        write is all overhead. The arrow schema is derived from the Spark
-        schema so the files read back identically."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+        write is all overhead."""
         t = self.manifest["tables"][name]
         rel, absdir = self.store._new_dir(name, f"r{self.rnd}")
-        os.makedirs(absdir, exist_ok=True)
-        arrow_schema = pa.schema(
-            [
-                pa.field(f.name, _arrow_type(f.dataType), f.nullable)
-                for f in spark_schema.fields
-            ]
-        )
-        table = pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-        pq.write_table(table, os.path.join(absdir, "part-00000.parquet"))
+        _write_pandas(absdir, pdf, spark_schema)
         t["fragments"].append({"dir": rel, "seq": self.rnd, "partition_by": []})
         return self
 
@@ -387,43 +382,24 @@ class Transaction:
         t = self.manifest["tables"][name]
         assert t["type"] == "mor"
         t["key"] = key
-        if not isinstance(delete_keys, DataFrame) and len(delete_keys) == 0:
-            # insert-only commit (e.g. streaming discovery batches): an
-            # empty delete fragment would still be broadcast-joined by
-            # every subsequent read until compaction — skip it entirely
-            rel_a, abs_a = self.store._new_dir(name, f"r{self.rnd}-add")
-            new_rows.withColumn(SEQ_COL, F.lit(self.rnd).cast("int")).write.mode(
-                "overwrite"
-            ).parquet(abs_a)
-            t["fragments"].append(
-                {"dir": rel_a, "seq": self.rnd, "partition_by": []}
-            )
-            return self
-        rel_d, abs_d = self.store._new_dir(name, f"r{self.rnd}-del")
-        if isinstance(delete_keys, DataFrame):
-            delete_keys.select(
-                F.col(key).alias("key"), F.lit(self.rnd).cast("int").alias("del_seq")
-            ).write.mode("overwrite").parquet(abs_d)
-        else:  # pandas
-            import pandas as pd
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            os.makedirs(abs_d, exist_ok=True)
-            pdf = pd.DataFrame(
-                {
-                    "key": delete_keys[key].astype(str),
-                    "del_seq": self.rnd,
-                }
-            )
-            schema = pa.schema(
-                [pa.field("key", pa.string(), False), pa.field("del_seq", pa.int32(), False)]
-            )
-            pq.write_table(
-                pa.Table.from_pandas(pdf, schema=schema, preserve_index=False),
-                os.path.join(abs_d, "part-00000.parquet"),
-            )
-        t["deletes"].append({"dir": rel_d, "seq": self.rnd})
+        # an insert-only commit (e.g. admitted discovery batches) writes no
+        # delete fragment: an empty one would still be joined by every
+        # subsequent read until compaction
+        if isinstance(delete_keys, DataFrame) or len(delete_keys):
+            rel_d, abs_d = self.store._new_dir(name, f"r{self.rnd}-del")
+            if isinstance(delete_keys, DataFrame):
+                delete_keys.select(
+                    F.col(key).alias("key"), F.lit(self.rnd).cast("int").alias("del_seq")
+                ).write.mode("overwrite").parquet(abs_d)
+            else:  # pandas
+                pdf = pd.DataFrame(
+                    {
+                        "key": delete_keys[key].astype(str),
+                        "del_seq": self.rnd,
+                    }
+                )
+                _write_pandas(abs_d, pdf, _DELETES)
+            t["deletes"].append({"dir": rel_d, "seq": self.rnd})
         rel_a, abs_a = self.store._new_dir(name, f"r{self.rnd}-add")
         new_rows.withColumn(SEQ_COL, F.lit(self.rnd).cast("int")).write.mode(
             "overwrite"

@@ -50,27 +50,7 @@ def run_streaming_ingest(
             .dropDuplicates(["url"])
             .select("url", F.col("priority").cast("int"))
         )
-        rnd = engine.store.round + 1
-        rows, _ = engine._discover(pushed, rnd, engine.seen())
-        rows = rows.cache()
-        import pandas as pd
-
-        txn = engine.store.transaction(rnd)
-        # discovery-only commit: empty delete set (upsert writes no delete
-        # fragment for it, so reads never join an ever-growing empty list)
-        txn.upsert("frontier", "url_canon", rows, pd.DataFrame({"url_canon": []}))
-        txn.append(
-            "seen",
-            rows.select(
-                "url_hash",
-                "url_canon",
-                F.lit(rnd).cast("int").alias("first_seen_round"),
-            ),
-        )
-        txn.commit()
-        engine._bloom_add_from_seen_fragment(rnd)
-        rows.unpersist()
-        engine._drain_scratch()
+        engine.admit(pushed, engine.store.round + 1)
         for _ in range(rounds_per_batch):
             stats.append(engine.run_round(engine.store.round + 1))
 

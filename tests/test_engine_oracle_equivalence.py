@@ -6,6 +6,7 @@ politeness budget — the north_rule equality criteria."""
 import pandas as pd
 import pytest
 
+from ethereum_raw_data_crawler_spark import gates
 from ethereum_raw_data_crawler_spark.config import CrawlConfig
 from ethereum_raw_data_crawler_spark.plans.oracle import run_oracle
 from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
@@ -75,10 +76,33 @@ def test_full_crawl_equivalence_relaxed_budget(spark, t1_tables, tmp_path):
     }
 
 
-def test_prefix_equivalence_fixture_politeness(spark, t1_tables, tmp_path):
+@pytest.fixture(params=["default", "all-large"])
+def gate_side(request, monkeypatch, spark):
+    """``all-large`` puts every crawl-path size gate on its large side
+    (each ``gates.*_MAX`` -> 0). Size-based broadcast is off too, so the
+    joins a gate leaves unhinted (the MOR delete join) really shuffle."""
+    if request.param == "default":
+        yield request.param
+        return
+    for name in dir(gates):
+        if name.endswith("_MAX"):
+            monkeypatch.setattr(gates, name, 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield request.param
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_prefix_equivalence_fixture_politeness(spark, t1_tables, tmp_path, gate_side):
     """First 6 rounds under the FIXTURE politeness budgets (2 for hot
     hosts / 5 otherwise) + failure injection: trace prefix and per-round
-    lineage counters equal."""
+    lineage counters equal — on the default side of every size gate and
+    on the large side of all of them (range-sort pop, shuffled-hash fetch
+    join, lazy hits, distributed fetch_seq numbering and delete keys,
+    shuffled MOR delete join, bucket-aligned seen-filter probe)."""
     tabs = t1_tables
     cfg = CrawlConfig(batch_size=50)
     res = run_oracle(
@@ -95,6 +119,10 @@ def test_prefix_equivalence_fixture_politeness(spark, t1_tables, tmp_path):
         for k in ("popped", "fetched", "errors", "discovered", "deduped",
                   "robots_filtered"):
             assert s[k] == om[s["round"]][k], (s["round"], k, s, om[s["round"]])
+    # the error-only branches (fetch_seq numbering, failed backoff) ran
+    assert any(s["errors"] for s in stats)
+    want_probe = "aligned" if gate_side == "all-large" else "broadcast"
+    assert eng._bloom.last_probe_mode == want_probe
 
 
 def test_retry_skip_equivalence(spark, t1_tables, tmp_path):

@@ -12,6 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from ethereum_raw_data_crawler_spark import gates
 from ethereum_raw_data_crawler_spark.config import CrawlConfig
 from ethereum_raw_data_crawler_spark.operators.bloom import BloomFilter
 from ethereum_raw_data_crawler_spark.plans.oracle import run_oracle
@@ -27,7 +28,7 @@ KINDS = sorted(SEEN_FILTERS)
 @pytest.mark.parametrize(
     "kind,n", [("bloom", 10_000_000), ("cuckoo", 200_000)], ids=KINDS
 )
-def test_partitioned_filter_aligned_probe(spark, tmp_path, kind, n):
+def test_partitioned_filter_aligned_probe(spark, tmp_path, monkeypatch, kind, n):
     """Build the seen filter from n keys entirely executor-side (10M for
     the Bloom; the cuckoo insert is costlier, so it runs small), then
     probe with the broadcast path disabled: the candidates repartition by
@@ -44,7 +45,7 @@ def test_partitioned_filter_aligned_probe(spark, tmp_path, kind, n):
     assert pf.n_added_total == n
     assert 0.0 < pf.estimated_saturation() < 0.5
 
-    pf.BROADCAST_MAX_BYTES = 0  # force the 100-TB path
+    monkeypatch.setattr(gates, "FILTER_BROADCAST_MAX", 0)  # the 100-TB path
     m = min(n, 50_000)
     present = spark.range(0, m).select(
         F.xxhash64("id").alias("url_hash"), F.lit("p").alias("tag")

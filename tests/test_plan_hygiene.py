@@ -224,7 +224,7 @@ def test_shj_width_bounds_build_partition():
     volume, not cluster width: at any (n_popped, conf_width) combination
     no partition may hold more than SHJ_BUILD_ROWS build rows, and wide
     sessions must keep their configured parallelism."""
-    from ethereum_raw_data_crawler_spark.plans.rounds import SHJ_BUILD_ROWS, shj_width
+    from ethereum_raw_data_crawler_spark.gates import SHJ_BUILD_ROWS, shj_width
 
     # narrow session, huge batch: width comes from the data
     assert shj_width(20_000_000, 2) == -(-20_000_000 // SHJ_BUILD_ROWS)
@@ -254,34 +254,40 @@ def test_default_driver_memory_fits_the_host(tmp_path):
     assert default_driver_memory(str(tmp_path / "missing")) == "48g"
 
 
-def test_large_pop_fetch_join_is_shj_with_widened_exchange(spark):
-    """Build the fetch join exactly as the engine's large-pop branch does
-    and assert (a) the physical join is ShuffledHashJoin with the slim
-    side as build, (b) the exchange is hash-partitioned wider than the
-    session shuffle width when the batch demands it."""
+def test_large_pop_fetch_join_is_shj_with_widened_exchange(spark, t1_tables, tmp_path):
+    """Plan the fetch join the engine's ``_fetch`` builds, on both sides of
+    the small-batch gate: (a) a small pop broadcasts the popped side;
+    (b) a large one is a ShuffledHashJoin with the slim popped side as
+    build, and its exchange is hash-partitioned wider than the session
+    shuffle width when the batch demands it."""
+    import dataclasses
     import re
 
-    from ethereum_raw_data_crawler_spark.plans.rounds import shj_width
+    from ethereum_raw_data_crawler_spark import gates
+    from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
 
+    tabs = t1_tables
+    eng = CrawlEngine.create(
+        spark,
+        str(tmp_path / "store"),
+        *[
+            spark.createDataFrame(tabs[k])
+            for k in ("pages", "seeds", "robots", "politeness", "fetch_failures")
+        ],
+        CrawlConfig(batch_size=50),
+        seen_filter=None,
+    )
+    pop = eng._pop(1)
+    small = _plan(eng._fetch(pop).failed)
+    assert "BroadcastHashJoin" in small and "ShuffledHashJoin" not in small, small
+
+    # the same rows counted as a 20M-row pop on this 8-wide session:
+    # the exchange must widen to hold <= SHJ_BUILD_ROWS build rows each
     conf_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # pretend a 20M-row pop on a narrow session: widths must widen
-    want = shj_width(20_000_000, 2)
-    assert want > 2
-
-    corpus = spark.range(1000).select(
-        F.concat(F.lit("https://h.example/p/"), F.col("id")).alias("url_canon"),
-        F.lit(b"<html>").alias("html"),
-    )
-    popped = spark.range(500).select(
-        F.concat(F.lit("https://h.example/p/"), F.col("id")).alias("url_canon"),
-        F.lit(1).alias("priority"),
-    )
-    joined = corpus.join(
-        popped.repartition(want, "url_canon").hint("shuffle_hash"),
-        "url_canon",
-        "inner",
-    )
-    plan = _plan(joined)
-    assert "ShuffledHashJoin" in plan, plan
-    m = re.search(r"hashpartitioning\(url_canon[^,]*, (\d+)\)", plan)
-    assert m and int(m.group(1)) == want, plan
+    want = gates.shj_width(20_000_000, conf_width)
+    assert want > conf_width
+    large = _plan(eng._fetch(dataclasses.replace(pop, n=20_000_000)).failed)
+    eng._drain_scratch()
+    assert "ShuffledHashJoin" in large, large
+    widths = re.findall(r"hashpartitioning\(url_canon[^,]*, (\d+)\)", large)
+    assert str(want) in widths, large

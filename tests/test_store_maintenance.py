@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F, types as T
 
+from ethereum_raw_data_crawler_spark import gates
 from ethereum_raw_data_crawler_spark.config import CrawlConfig
 from ethereum_raw_data_crawler_spark.operators.bloom import (
     BloomFilter,
@@ -100,7 +101,7 @@ def test_engine_delete_pages_takedown(spark, t1_tables, tmp_path):
 # ------------------------------------------------- size-aware MOR delete join
 
 
-def test_mor_large_delete_set_not_broadcast(spark, tmp_path):
+def test_mor_large_delete_set_not_broadcast(spark, tmp_path, monkeypatch):
     store = SnapshotStore.create(str(tmp_path / "s"), {"t": "mor"})
     txn = store.transaction(1)
     txn.overwrite("t", _df(spark, [(f"k{i}", 1) for i in range(20)]))
@@ -118,7 +119,7 @@ def test_mor_large_delete_set_not_broadcast(spark, tmp_path):
     assert "Broadcast" in plan_small
     # force the threshold below the delete-set size -> no broadcast hint;
     # the optimizer plans from real sizes instead
-    store.BROADCAST_DELETE_MAX = 5
+    monkeypatch.setattr(gates, "DELETE_BROADCAST_MAX", 5)
     resolved = store.read(spark, "t", SCHEMA)
     got = {(r["k"], r["v"]) for r in resolved.collect()}
     assert got == {("k0", 2)} | {(f"k{i}", 1) for i in range(10, 20)}
