@@ -14,3 +14,7 @@ loop.
 """
 
 __version__ = "0.1.0"
+
+from ethereum_raw_data_crawler_spark import pyworker as _pyworker
+
+_pyworker.tune()

@@ -328,7 +328,10 @@ def test_engine_create_defaults_buckets_from_expected_keys(
     )
     assert eng.bloom_buckets == 90
     assert eng._bloom.n_buckets == 90
-    # an explicit bloom_buckets always wins over the derivation
+    # an explicit bloom_buckets always wins over the derivation (64 here).
+    # 10^8 keys, not 10^10: 8 buckets sized for 10^10 keys are 1.8 GB
+    # bitmaps each, all built at once in RAM and written at create
+    assert eng._filter_cls.buckets_for(10**8) == 64
     eng2 = CrawlEngine.create(
         spark,
         str(tmp_path / "store2"),
@@ -338,7 +341,7 @@ def test_engine_create_defaults_buckets_from_expected_keys(
         spark.createDataFrame(tabs["politeness"]),
         None,
         CrawlConfig(batch_size=10),
-        expected_keys=10**10,
+        expected_keys=10**8,
         bloom_buckets=8,
     )
     assert eng2._bloom.n_buckets == 8
