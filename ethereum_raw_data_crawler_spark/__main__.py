@@ -101,7 +101,7 @@ def cmd_hybrid(args) -> int:
 
 def cmd_status(args) -> int:
     from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
-    from ethereum_raw_data_crawler_spark.schemas import METRICS, SEEN
+    from ethereum_raw_data_crawler_spark.schemas import METRICS
 
     spark = _spark(args)
     eng = CrawlEngine.resume(spark, args.store)

@@ -1,21 +1,13 @@
-"""Stable hash primitives shared by the dedup/similarity operators and
-their pure-Python test oracles. Everything is deterministic (fixed seeds,
-no wall clock) and numpy-vectorized where it runs on the executor path.
+"""Stable hash primitives shared by the dedup/similarity operators.
+Everything is deterministic (fixed seeds, no wall clock) and
+numpy-vectorized where it runs on the executor path.
 """
 
 from __future__ import annotations
 
-import hashlib
-import struct
-
 import numpy as np
 
 _MASK64 = (1 << 64) - 1
-
-
-def token_hash64(token: str) -> int:
-    """Stable unsigned 64-bit hash of a token (first 8 bytes of sha256)."""
-    return struct.unpack(">Q", hashlib.sha256(token.encode("utf-8")).digest()[:8])[0]
 
 
 def splitmix64(x: np.ndarray) -> np.ndarray:
@@ -185,20 +177,6 @@ def simhash64_batch(token_hashes: np.ndarray, counts: np.ndarray) -> np.ndarray:
     return out
 
 
-def minhash_signature(shingle_hashes: np.ndarray, k: int = 64) -> np.ndarray:
-    """k-permutation MinHash signature of a set of uint64 shingle hashes.
-
-    Permutation i is splitmix64(x ^ seed_i); the signature entry is the
-    minimum over the set. Empty input -> all MAX_UINT64.
-    """
-    if len(shingle_hashes) == 0:
-        return np.full(k, _MASK64, dtype=np.uint64)
-    h = np.asarray(shingle_hashes, dtype=np.uint64)
-    seeds = splitmix64(np.arange(1, k + 1, dtype=np.uint64))
-    # (k, n) matrix of permuted hashes; min along n
-    return splitmix64(h[None, :] ^ seeds[:, None]).min(axis=1)
-
-
 def band_keys(sig: np.ndarray, bands: int = 16) -> list[int]:
     """LSH banding: split the signature into ``bands`` equal bands and hash
     each band to a 63-bit bucket key (signed-long friendly)."""
@@ -215,32 +193,5 @@ def band_keys(sig: np.ndarray, bands: int = 16) -> list[int]:
     return keys
 
 
-def simhash64(token_hashes: np.ndarray, weights: np.ndarray | None = None) -> int:
-    """64-bit SimHash: weighted bit votes over token hashes."""
-    if len(token_hashes) == 0:
-        return 0
-    h = np.asarray(token_hashes, dtype=np.uint64)
-    if weights is None:
-        weights = np.ones(len(h))
-    bits = ((h[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(
-        np.int64
-    )
-    votes = ((bits * 2 - 1) * weights[:, None].astype(np.int64)).sum(axis=0)
-    out = np.uint64(0)
-    for i in range(64):
-        if votes[i] > 0:
-            out |= np.uint64(1) << np.uint64(i)
-    return int(out & np.uint64(0x7FFFFFFFFFFFFFFF))  # signed-long friendly
-
-
 def hamming64(a: int, b: int) -> int:
     return bin(a ^ b).count("1")
-
-
-def word_shingles(text: str, n: int = 3) -> list[str]:
-    """Distinct word n-gram shingles, document order of first occurrence
-    irrelevant (sets)."""
-    w = text.split(" ")
-    if len(w) < n:
-        return [" ".join(w)] if w and w != [""] else []
-    return sorted({" ".join(w[i : i + n]) for i in range(len(w) - n + 1)})

@@ -101,12 +101,14 @@ def pop_batch(
     if batch_size <= gates.SMALL_BATCH_MAX:
         # small k: Spark plans orderBy+limit as TakeOrdered — per-partition
         # top-k merged on the driver, cheap at this size. Nothing upstream
-        # is cached, so cache the output the round reads several times.
+        # is cached, so a caller that owns a scratch list (the round, which
+        # reads the output several times) gets it cached there.
         popped = budgeted.orderBy(*[F.col(c) for c in POP_ORDER]).limit(batch_size)
         popped = assign_global_seq(
             popped, POP_ORDER, "pop_seq", approx_count=batch_size, scratch=scratch
-        ).cache()
+        )
         if scratch is not None:
+            popped = popped.cache()
             scratch.append(popped)
         return popped
     # large k: TakeOrdered would stream k rows/partition through the DRIVER.

@@ -8,37 +8,24 @@ only once debt crosses ``compact_debt_frac`` of the base rows.
 The corpus is empty, so every popped URL is a miss: rounds exercise the
 exact pop -> frontier-MOR-upsert -> delete-debt machinery at full batch
 size with zero fetch/parse cost, keeping the test minutes, not hours.
-
-The shape is sized by the box: the full 1M batch over a 7M frontier from
-32 cores (``SPARK_GRAFT_CPUS``) up, scaled down in proportion below that
-(at most 4x). Every crawl-path size gate and sizing is scaled by the same
-factor, so each round takes the same side of every gate, and writes the
-same number of files, as the full shape does.
 """
-
-import os
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ethereum_raw_data_crawler_spark import gates
 from ethereum_raw_data_crawler_spark.config import CrawlConfig
 from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
 
-SCALE = min(32, max(8, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))) / 32
-N_SEEDS = int(7_000_000 * SCALE)
-BATCH = int(1_000_000 * SCALE)
-N_HOSTS = int(100_000 * SCALE)
+N_SEEDS = 7_000_000
+BATCH = 1_000_000
+N_HOSTS = 100_000
 
 
 @pytest.mark.slow
 def test_large_batch_crawl_compacts_at_most_once_in_three_rounds(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
-    for name in dir(gates):
-        if name.endswith(("_MAX", "_ROWS")):
-            monkeypatch.setattr(gates, name, int(getattr(gates, name) * SCALE))
     seeds = spark.range(N_SEEDS).select(
         F.concat(
             F.lit("https://h"),
@@ -90,9 +77,9 @@ def test_large_batch_crawl_compacts_at_most_once_in_three_rounds(
     t = eng.store.manifest()["tables"]["frontier"]
     frag_seqs = [f["seq"] for f in t["fragments"]]
     del_seqs = [f["seq"] for f in t["deletes"]]
-    # debt path, in batches: r1 ends 1/8, r2 starts below frac (no
-    # compact), r2 ends 2/9, r3 starts above frac -> ONE compact; r3 adds
-    # one more round of debt. At most one rewrite in three rounds:
+    # debt path: r1 ends 1M/8M, r2 starts below frac (no compact), r2 ends
+    # 2M/9M, r3 starts above frac -> ONE compact; r3 adds one more round
+    # of debt. At most one rewrite in three production-size rounds:
     assert del_seqs == [3], del_seqs
     assert frag_seqs == [2, 3], frag_seqs
     # the precompact phase is metered; rounds 1-2 must not have paid it
