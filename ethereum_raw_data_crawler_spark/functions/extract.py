@@ -165,41 +165,30 @@ class _Parsed:
         self.links = links
 
 
-def _parse(html: bytes | str | None) -> _Parsed:
+def _text(html: bytes | str | None) -> str:
     if html is None:
-        return _Parsed([], [])
+        return ""
     if isinstance(html, (bytes, bytearray, memoryview)):
-        text = bytes(html).decode("utf-8", errors="replace")
-    else:
-        text = html
-    if not _REFERENCE_PARSER:
-        fast = _fast_parse(text)
-        if fast is not None:
-            return _Parsed(*fast)
-    parser = _TextAndLinks()
-    try:
-        parser.feed(text)
-        parser.close()
-    except Exception:
-        # Total function: malformed input yields whatever was parsed so far.
-        pass
-    return _Parsed(parser.chunks, parser.links)
+        return bytes(html).decode("utf-8", errors="replace")
+    return html
+
+
+def _parse(html: bytes | str | None) -> _Parsed:
+    text = _text(html)
+    fast = None if _REFERENCE_PARSER else _fast_parse(text)
+    return _Parsed(*fast) if fast is not None else _parse_reference(text)
 
 
 def _parse_reference(html: bytes | str | None) -> _Parsed:
     """HTMLParser-only path — the behavioral reference the fast scanner is
-    pinned against (tests/test_fast_extract_equivalence.py)."""
-    if html is None:
-        return _Parsed([], [])
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        text = bytes(html).decode("utf-8", errors="replace")
-    else:
-        text = html
+    pinned against (tests/test_fast_extract_equivalence.py), and the
+    fallback for input outside its subset."""
     parser = _TextAndLinks()
     try:
-        parser.feed(text)
+        parser.feed(_text(html))
         parser.close()
     except Exception:
+        # Total function: malformed input yields whatever was parsed so far.
         pass
     return _Parsed(parser.chunks, parser.links)
 

@@ -10,30 +10,33 @@ global top-``batch_size`` under the total order
 (priority, host, discovery_ts, url_canon).
 
 Scale design: the naive plan shuffles the ENTIRE pending set through a
-host-partitioned window every round. We pre-prune map-side with a bounded
-per-partition top-k (``_local_host_topk`` via mapInPandas, memory ≤
-hosts-in-partition × budget), so the exact window only sees
-≤ partitions × hosts × budget rows — the same partial-aggregation trick
-a map-side combiner does for sums.
+host-partitioned window every round. No host pops more than its budget or
+more than ``batch_size`` rows, so the host-rank filter also carries the
+literal bound ``cap = min(batch_size, max(default_budget,
+max(budget_per_round)))``. From that literal, Spark's InferWindowGroupLimit
+rule plans a ``WindowGroupLimit ... Partial`` (a per-partition, per-host
+top-``cap``) below ``Exchange hashpartitioning(host)``, so the exact window
+only sees <= partitions x hosts x cap rows — the same partial-aggregation
+trick a map-side combiner does for sums. Spark applies the rule only while
+``cap`` is at most ``spark.sql.optimizer.windowGroupLimitThreshold`` (1000
+by default); at larger budgets the per-partition top-k would keep nearly
+every row, and the unpruned plan runs.
 
 This IS the salted-host repartition for hot-domain skew, in its exact
-two-phase form: phase 1 takes the per-(salt, host) top-``budget`` where
-the salt is the physical partition id (rows of one host are already
-spread across partitions by the frontier's hash layout, so no extra
-shuffle is spent planting an explicit salt column); phase 2 re-ranks the
-per-salt winners exactly. A host with 10^7 pending rows therefore
-contributes at most ``budget`` rows per partition to the shuffle instead
-of 10^7 rows into one window task; AQE skew-join splitting
-(spark.sql.adaptive.skewJoin) backstops any residual imbalance.
-Correctness-neutral: the global per-host top-k is contained in the union
-of per-salt top-ks; tests cross-check pruned vs unpruned pops.
+two-phase form: phase 1 takes the per-(salt, host) top-``cap`` where the
+salt is the physical partition id (rows of one host are already spread
+across partitions by the frontier's hash layout, so no extra shuffle is
+spent planting an explicit salt column); phase 2 re-ranks the per-salt
+winners exactly. A host with 10^7 pending rows therefore contributes at
+most ``cap`` rows per partition to the shuffle instead of 10^7 rows into
+one window task; AQE skew-join splitting (spark.sql.adaptive.skewJoin)
+backstops any residual imbalance. Correctness-neutral: the global per-host
+top-k is contained in the union of per-salt top-ks; tests cross-check the
+pop against the same plan with the rule disabled.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ethereum_raw_data_crawler_spark import gates
@@ -43,35 +46,11 @@ POP_ORDER = ["priority", "host", "discovery_ts", "url_canon"]
 HOST_ORDER = ["priority", "discovery_ts", "url_canon"]
 
 
-def _local_host_topk(df: DataFrame) -> DataFrame:
-    """Per-partition, per-host top-``budget`` rows (bounded-memory
-    map-side pre-prune). Expects a ``budget`` column."""
-    schema = df.schema
-
-    def prune(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: pd.DataFrame | None = None
-        for pdf in batches:
-            combined = pdf if state is None else pd.concat([state, pdf])
-            combined = combined.sort_values(
-                ["host", "priority", "discovery_ts", "url_canon"],
-                kind="mergesort",
-            )
-            keep = combined.groupby("host", sort=False).cumcount() < combined[
-                "budget"
-            ].to_numpy()
-            state = combined[keep]
-        if state is not None and len(state):
-            yield state
-
-    return df.mapInPandas(prune, schema)
-
-
 def pop_batch(
     eligible: DataFrame,
     politeness: DataFrame,
     batch_size: int,
     default_budget: int,
-    prune: bool = True,
     scratch: list | None = None,
 ) -> DataFrame:
     """Pop the next fetch batch from the eligible pending set.
@@ -88,14 +67,20 @@ def pop_batch(
         "budget",
         F.coalesce(F.col("budget_per_round"), F.lit(default_budget)).cast("int"),
     ).drop("budget_per_round")
-
-    if prune:
-        with_budget = _local_host_topk(with_budget)
+    # the literal rank bound Spark pre-prunes by (module docstring);
+    # greatest() skips the NULL max of an empty dim
+    cap = min(
+        batch_size,
+        politeness.agg(
+            F.greatest(F.lit(default_budget), F.max("budget_per_round"))
+        ).first()[0],
+    )
 
     w = Window.partitionBy("host").orderBy(*[F.col(c) for c in HOST_ORDER])
+    rank = F.col("_host_rank")
     budgeted = (
         with_budget.withColumn("_host_rank", F.row_number().over(w))
-        .where(F.col("_host_rank") <= F.col("budget"))
+        .where((rank <= F.lit(cap)) & (rank <= F.col("budget")))
         .drop("_host_rank", "budget")
     )
     if batch_size <= gates.SMALL_BATCH_MAX:
@@ -134,29 +119,14 @@ def assign_global_seq(
     both scalable (the classic distributed zipWithIndex).
 
     When the caller already knows the input is small (``approx_count``),
-    skip the range-sampling + count passes and sort in one partition —
-    zero extra jobs."""
+    skip the range-sampling + count passes and number it with a
+    ``row_number`` window in one partition — zero extra jobs."""
     if approx_count is not None and approx_count <= gates.DRIVER_COLLECT_MAX:
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            list(df.schema.fields) + [T.StructField(seq_col, T.LongType(), False)]
-        )
-
-        def number_small(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            i = 0
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                pdf = pdf.copy()
-                pdf[seq_col] = range(i, i + len(pdf))
-                i += len(pdf)
-                yield pdf
-
-        return (
-            df.coalesce(1)
-            .sortWithinPartitions(*[F.col(c) for c in order_cols])
-            .mapInPandas(number_small, schema)
+        # one partition already satisfies the unpartitioned window, so no
+        # exchange is planned
+        w = Window.orderBy(*[F.col(c) for c in order_cols])
+        return df.coalesce(1).withColumn(
+            seq_col, (F.row_number().over(w) - 1).cast("long")
         )
 
     spark = df.sparkSession

@@ -165,7 +165,6 @@ class CrawlEngine:
         store_root: str,
         cfg: CrawlConfig,
         n_buckets: int = 32,
-        prune_pop: bool = True,
         compact_every: int = 8,
         egress_dir: str | None = None,
         bloom_buckets: int = 64,
@@ -178,7 +177,6 @@ class CrawlEngine:
         self.store = SnapshotStore(store_root)
         self.cfg = cfg
         self.n_buckets = n_buckets
-        self.prune_pop = prune_pop
         self.compact_every = compact_every
         self.bloom_buckets = bloom_buckets
         # health-ACTED threshold, RELATIVE: the frontier is compacted when
@@ -233,6 +231,9 @@ class CrawlEngine:
         create tables, land the corpus + dims, seed the frontier (round 0)."""
         cfg = cfg or CrawlConfig()
         expected_keys = kw.pop("expected_keys", None)
+        # accepted and ignored: Spark plans the pop's pre-prune
+        # (operators/priority_pop.py), and bench.py still passes prune_pop
+        kw.pop("prune_pop", None)
         auto_buckets = "bloom_buckets" not in kw
         SnapshotStore.create(store_root, _TABLES)
         eng = cls(spark, store_root, cfg, **kw)
@@ -249,7 +250,6 @@ class CrawlEngine:
                 {
                     "cfg": asdict(cfg),
                     "n_buckets": eng.n_buckets,
-                    "prune_pop": eng.prune_pop,
                     "compact_every": eng.compact_every,
                     "egress_dir": kw.get("egress_dir"),
                     "bloom_buckets": eng.bloom_buckets,
@@ -345,7 +345,6 @@ class CrawlEngine:
             store_root,
             cfg,
             n_buckets=saved["n_buckets"],
-            prune_pop=saved["prune_pop"],
             compact_every=saved["compact_every"],
             egress_dir=saved.get("egress_dir"),
             bloom_buckets=saved.get("bloom_buckets", 64),
@@ -515,23 +514,24 @@ class CrawlEngine:
         self._scratch.append(gated)
         # seen-membership flag: Bloom kills the definitely-new rows map-side;
         # only maybe-seen rows reach the exact join against the seen table
+        # (with no filter every candidate is maybe-seen)
         candidates_for_seen = gated.where(F.col("pass_cap") & F.col("pass_robots"))
         skipped_rows = gated.where(~(F.col("pass_cap") & F.col("pass_robots")))
         seen_keys = seen.select("url_hash").withColumn("seen_hit", F.lit(True))
-        if self._bloom is not None:
-            new_def, maybe = self._bloom.probe_split(
+        new_def, maybe = (
+            self._bloom.probe_split(
                 candidates_for_seen, "url_hash", self.spark, scratch=self._scratch
             )
-            checked = maybe.join(seen_keys, "url_hash", "left").withColumn(
-                "seen_hit", F.coalesce(F.col("seen_hit"), F.lit(False))
-            )
+            if self._bloom is not None
+            else (None, candidates_for_seen)
+        )
+        flagged = maybe.join(seen_keys, "url_hash", "left").withColumn(
+            "seen_hit", F.coalesce(F.col("seen_hit"), F.lit(False))
+        )
+        if new_def is not None:
             flagged = new_def.withColumn("seen_hit", F.lit(False)).unionByName(
-                checked
+                flagged
             )
-        else:
-            flagged = candidates_for_seen.join(
-                seen_keys, "url_hash", "left"
-            ).withColumn("seen_hit", F.coalesce(F.col("seen_hit"), F.lit(False)))
         annotated = flagged.unionByName(
             skipped_rows.withColumn("seen_hit", F.lit(False))
         ).cache()
@@ -769,7 +769,6 @@ class CrawlEngine:
             self._dim("politeness", POLITENESS),
             self.cfg.batch_size,
             self.cfg.default_budget,
-            prune=self.prune_pop,
             scratch=self._scratch,
         )
         # one job: popped count + the corpus buckets it hashes into

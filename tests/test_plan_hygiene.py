@@ -22,6 +22,23 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _pop_with_and_without_pre_prune(spark, eligible, politeness, batch, budget):
+    """(rows, executed plan) of a pop, plus the rows of the same pop planned
+    with Spark's per-host pre-prune (InferWindowGroupLimit) disabled."""
+    popped = pop_batch(eligible, politeness, batch, budget)
+    rows = popped.collect()
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        unpruned = pop_batch(eligible, politeness, batch, budget)
+        unpruned_rows = unpruned.collect()
+        assert "WindowGroupLimit" not in _plan(unpruned)
+    finally:
+        spark.conf.set(key, saved)
+    return rows, _plan(popped), unpruned_rows
+
+
 def test_no_row_at_a_time_python_in_udf_path(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"url": [f"https://h{i}.example/p/{i}" for i in range(10)]})
@@ -54,13 +71,21 @@ def test_pop_politeness_is_broadcast_join(spark, t1_tables):
     plan = _plan(popped)
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan
-    # the pre-prune (map-side per-host top-k) is in the plan
-    assert "MapInPandas" in plan
+    # the pre-prune (per-partition, per-host top-cap) runs before the
+    # host shuffle: its Partial WindowGroupLimit is the Exchange's child
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    ex = next(
+        i for i, line in enumerate(lines) if "Exchange hashpartitioning(host" in line
+    )
+    assert "WindowGroupLimit" in lines[ex + 1]
+    assert lines[ex + 1].rstrip().endswith("Partial")
 
 
 def test_pop_respects_budget_and_order(spark, t1_tables):
-    """pop_batch semantics, pruned vs unpruned cross-check (the pre-prune
-    must be correctness-neutral)."""
+    """pop_batch semantics, cross-checked against the same pop with the
+    pre-prune disabled (it must be correctness-neutral). Budgets up to
+    Spark's windowGroupLimitThreshold (1000) plan the pre-prune; budgets
+    above it plan none, and both return the rule-disabled rows."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -78,10 +103,17 @@ def test_pop_respects_budget_and_order(spark, t1_tables):
     )
     eligible = spark.createDataFrame(pdf)
     politeness = spark.createDataFrame(t1_tables["politeness"])
-    a = pop_batch(eligible, politeness, 40, 5, prune=True).collect()
-    b = pop_batch(eligible, politeness, 40, 5, prune=False).collect()
     key = lambda r: (r["pop_seq"], r["url_canon"])
+    a, plan, b = _pop_with_and_without_pre_prune(spark, eligible, politeness, 40, 5)
+    assert "WindowGroupLimit" in plan
     assert sorted(map(key, a)) == sorted(map(key, b))
+    # every listed budget above the threshold (the default below it): no
+    # pre-prune, the whole pending set pops
+    large = politeness.withColumn("budget_per_round", F.lit(1001))
+    c, plan, d = _pop_with_and_without_pre_prune(spark, eligible, large, 2000, 5)
+    assert "WindowGroupLimit" not in plan
+    assert sorted(map(key, c)) == sorted(map(key, d))
+    assert len(c) == n
     # hosts 1-5 have budget 2, hosts 6-8 budget 5 -> 5*2 + 3*5 = 25 < batch
     assert len(a) == 25
     budgets = dict(
@@ -121,14 +153,12 @@ def test_pop_large_k_distributed_path_matches_small_k(spark, t1_tables):
     eligible = spark.createDataFrame(pdf)
     politeness = spark.createDataFrame(t1_tables["politeness"])
     scratch = []
-    big = pop_batch(
-        eligible, politeness, 200_000, 5, prune=False, scratch=scratch
-    )
+    big = pop_batch(eligible, politeness, 200_000, 5, scratch=scratch)
     key = lambda r: (r["pop_seq"], r["url_canon"])
     got1 = sorted(map(key, big.collect()))
     got2 = sorted(map(key, big.collect()))  # second action: same numbering
     assert got1 == got2
-    small = pop_batch(eligible, politeness, 100_000, 5, prune=False)
+    small = pop_batch(eligible, politeness, 100_000, 5)
     want = sorted(map(key, small.collect()))
     assert got1 == want
     seqs = [s for s, _ in got1]

@@ -380,7 +380,7 @@ def test_assign_global_seq_large_path_is_dense_and_ordered(spark):
     """The distributed (repartitionByRange + offsets +
     monotonically_increasing_id) numbering must produce exactly
     0..n-1 in the requested order — including empty and skewed
-    partitions."""
+    partitions — and the same seqs as the one-partition small path."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -401,6 +401,8 @@ def test_assign_global_seq_large_path_is_dense_and_ordered(spark):
     assert [s for _, s in got] == list(range(n))
     # order binding: seq follows k exactly
     assert got == [(k, i) for i, k in enumerate(sorted(pdf["k"]))]
+    small = assign_global_seq(df, ["k"], "seq", approx_count=n).collect()
+    assert sorted((r["k"], r["seq"]) for r in small) == got
 
 
 # ------------------------------------------------- canonicalization version

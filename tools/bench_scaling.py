@@ -126,7 +126,7 @@ def main() -> None:
             build_root = template if template else root
             eng = CrawlEngine.create(
                 spark, build_root, pages, seeds, robots, politeness, None, cfg,
-                n_buckets=64, prune_pop=not giant,
+                n_buckets=64,
             )
             if template:
                 print(
