@@ -19,8 +19,8 @@ from __future__ import annotations
 #: BASELINE round-1 journal items 2 and 6: both were driver-bound above it.
 SMALL_BATCH_MAX = 100_000
 
-#: rows: one-partition row_number numbering and driver-collected delete
-#: keys. Unmeasured.
+#: rows: one-partition row_number numbering; batch size: the pop collects
+#: its keys (count, corpus buckets, frontier delete keys). Unmeasured.
 DRIVER_COLLECT_MAX = 200_000
 
 #: rows popped: the fetch join's hit set (html included) is cached at or below.

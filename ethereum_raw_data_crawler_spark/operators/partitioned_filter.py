@@ -14,8 +14,8 @@ positives only cost extra join work).
 
 Scale design (SURVEY §Phase 3): the filter is PARTITIONED by
 ``url_hash`` bucket — one immutable file per bucket beside the snapshot
-manifest, referenced by a versioned meta JSON (same atomic-swap protocol
-as the table manifests). :class:`PartitionedFilter` owns that protocol;
+manifest, referenced by a versioned meta JSON published by an atomic
+temp-file swap. :class:`PartitionedFilter` owns that protocol;
 a subclass supplies only the per-bucket kernel (the Bloom bitmap in
 operators/bloom.py, the deletable cuckoo table in operators/cuckoo.py):
 
@@ -23,23 +23,31 @@ operators/bloom.py, the deletable cuckoo table in operators/cuckoo.py):
     ``meta-{round:06d}.json`` mapping bucket -> {file, <size fields>,
     n_added}. The meta is the commit point (temp file + ``os.replace``):
     a crash mid-update leaves orphan bucket files and the previous meta —
-    consistent. GC keeps the newest 2 metas and only the files they
+    consistent. Unlike the table manifests it may be replaced, because a
+    round can re-commit its own meta (an empty fold, a growth after an
+    add). GC keeps the newest 2 metas and only the files they
     reference. A bucket with no meta entry is empty (definitely absent).
   * The bucket of a key is ``pmod(key, n_buckets)`` — computable
     identically JVM-side (``F.pmod``) and in numpy (``np.mod``), so every
-    job repartitions keys to colocate each bucket's keys with the one task
-    that touches its file. The bucket count is FIXED for the store's
-    lifetime (a key's bucket must never change or probes would read the
-    wrong file).
+    job partitions keys BY that expression, which colocates each bucket's
+    keys with the one task that touches its file. The bucket count is
+    FIXED for the store's lifetime (a key's bucket must never change or
+    probes would read the wrong file).
   * Maintenance is executor-side Spark jobs end to end: per-round adds
-    (and cuckoo deletes) repartition the keys by bucket, each task folds
-    ITS buckets' keys into the prior file and writes a new immutable file
-    (an LSM-style merge); only per-bucket stat rows reach the driver.
+    (and cuckoo deletes) shuffle the keys into ``min(n_buckets,
+    defaultParallelism)`` partitions of the bucket expression, so a task
+    usually holds SEVERAL buckets; it folds them one at a time, each into
+    its prior file, writing a new immutable file per bucket (an LSM-style
+    merge); only per-bucket stat rows reach the driver. A round's few
+    hundred new keys thus cost O(cores) tasks, not one per bucket (64+),
+    and a task holds at most one bucket filter in memory at a time.
   * Growth is per-bucket: a saturated bucket is rebuilt alone, from the
     seen table filtered to that bucket, at its next size — neither kernel
     can be resized from its own contents (Bloom bits and cuckoo
-    fingerprints have lost the key). An estimate that is low by even 100×
-    degrades into larger per-bucket files, never into false negatives.
+    fingerprints have lost the key). A rebuild task reads a whole
+    bucket's share of the seen set, so growth keeps one bucket per
+    partition. An estimate that is low by even 100× degrades into larger
+    per-bucket files, never into false negatives.
   * Probe: small filters broadcast the whole bucket dict; past
     ``gates.FILTER_BROADCAST_MAX`` bytes the candidates repartition by bucket and each
     task loads only the files of the buckets it holds — a 10^10-key seen
@@ -250,10 +258,11 @@ class PartitionedFilter:
         sizes: dict[int, dict] | None = None,
     ) -> int:
         """The one Spark job behind add, delete and growth: each task folds
-        its buckets' keys into the prior bucket filter — or, for the buckets
-        in ``sizes``, an empty one of that size, reading only their keys —
-        and writes a new file. The stat rows replace the buckets' meta
-        entries, committed as round ``rnd``. Returns the keys applied."""
+        its buckets' keys, one bucket at a time, into the prior bucket
+        filter — or, for the buckets in ``sizes``, an empty one of that
+        size, reading only their keys — and writes a new file. The stat
+        rows replace the buckets' meta entries, committed as round ``rnd``.
+        Returns the keys applied."""
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
@@ -310,8 +319,12 @@ class PartitionedFilter:
             keyed = keyed.where(
                 F.pmod(F.col("_key"), F.lit(B)).isin([int(b) for b in sizes])
             )
+        # O(cores) tasks fold a round's keys; a growth task reads a whole
+        # bucket's share of the seen set, so growth keeps one per task
+        cores = keys_df.sparkSession.sparkContext.defaultParallelism
+        parts = B if sizes else min(B, cores)
         stats = (
-            keyed.repartition(B, F.pmod(F.col("_key"), F.lit(B)))
+            keyed.repartition(parts, F.pmod(F.col("_key"), F.lit(B)))
             .mapInPandas(fold, out_schema)
             .collect()
         )

@@ -46,17 +46,33 @@ POP_ORDER = ["priority", "host", "discovery_ts", "url_canon"]
 HOST_ORDER = ["priority", "discovery_ts", "url_canon"]
 
 
+def pop_cap(politeness: DataFrame, batch_size: int, default_budget: int) -> int:
+    """The literal rank bound Spark pre-prunes by (module docstring): no
+    host pops more than its budget or more than ``batch_size`` rows. One
+    aggregate over the politeness dim; greatest() skips the NULL max of an
+    empty dim."""
+    return min(
+        batch_size,
+        politeness.agg(
+            F.greatest(F.lit(default_budget), F.max("budget_per_round"))
+        ).first()[0],
+    )
+
+
 def pop_batch(
     eligible: DataFrame,
     politeness: DataFrame,
     batch_size: int,
     default_budget: int,
     scratch: list | None = None,
+    cap: int | None = None,
 ) -> DataFrame:
     """Pop the next fetch batch from the eligible pending set.
 
     ``eligible`` must carry POP_ORDER columns; ``politeness`` is the small
-    (host, budget_per_round) dim — broadcast, never shuffled.
+    (host, budget_per_round) dim — broadcast, never shuffled. ``cap`` is
+    ``pop_cap`` of the same arguments; a caller whose politeness dim never
+    changes computes it once and passes it, saving its job per pop.
     Returns the popped rows with a dense ``pop_seq``. Frames cached here
     (the small-k output, the large-k range sort) are appended to
     ``scratch``; the caller unpersists them once the pop is consumed.
@@ -67,14 +83,8 @@ def pop_batch(
         "budget",
         F.coalesce(F.col("budget_per_round"), F.lit(default_budget)).cast("int"),
     ).drop("budget_per_round")
-    # the literal rank bound Spark pre-prunes by (module docstring);
-    # greatest() skips the NULL max of an empty dim
-    cap = min(
-        batch_size,
-        politeness.agg(
-            F.greatest(F.lit(default_budget), F.max("budget_per_round"))
-        ).first()[0],
-    )
+    if cap is None:
+        cap = pop_cap(politeness, batch_size, default_budget)
 
     w = Window.partitionBy("host").orderBy(*[F.col(c) for c in HOST_ORDER])
     rank = F.col("_host_rank")

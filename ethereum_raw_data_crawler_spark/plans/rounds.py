@@ -65,6 +65,7 @@ from ethereum_raw_data_crawler_spark.operators.partitioned_filter import (
 from ethereum_raw_data_crawler_spark.operators.priority_pop import (
     assign_global_seq,
     pop_batch,
+    pop_cap,
 )
 from ethereum_raw_data_crawler_spark.schemas import (
     FETCH_FAILURES,
@@ -147,6 +148,7 @@ class _Pop:
     rows: DataFrame  # popped frontier rows with a dense pop_seq
     n: int
     buckets: list[int]  # the corpus buckets the batch hashes into
+    keys: pd.DataFrame | None  # popped url_canon, collected for small batches
 
 
 @dataclass
@@ -307,6 +309,7 @@ class CrawlEngine:
             ),
         )
         txn.commit()
+        eng._read_constants()
         # round-0 discovery of the seed list (reference: StartBlock
         # seeding, crawler_service.go:206-223)
         eng.admit(seeds.select("url", F.col("priority").cast("int")), 0)
@@ -352,6 +355,7 @@ class CrawlEngine:
             track_host_graph=saved.get("track_host_graph", False),
             seen_filter=seen_filter,
         )
+        eng._read_constants()
         if eng._egress is not None:
             # publish-after-commit redelivery: any round committed before
             # the crash but never published goes out now (at-least-once)
@@ -375,6 +379,20 @@ class CrawlEngine:
         if name not in self._dims:
             self._dims[name] = self.store.read(self.spark, name, schema).cache()
         return self._dims[name]
+
+    def _read_constants(self) -> None:
+        """What every round derives from tables only ``create`` writes,
+        computed once when the engine opens instead of in each round: the
+        corpus frame, whose bucket directories a fresh read would re-list
+        (a parallel listing job past Spark's 32-path threshold), and the
+        pop's rank bound (operators/priority_pop.py::pop_cap, an aggregate
+        over the politeness dim)."""
+        self._corpus = self.store.read(self.spark, "corpus", CORPUS)
+        self._pop_cap = pop_cap(
+            self._dim("politeness", POLITENESS),
+            self.cfg.batch_size,
+            self.cfg.default_budget,
+        )
 
     def frontier(self) -> DataFrame:
         return self.store.read(self.spark, "frontier", FRONTIER)
@@ -770,7 +788,15 @@ class CrawlEngine:
             self.cfg.batch_size,
             self.cfg.default_budget,
             scratch=self._scratch,
+            cap=self._pop_cap,
         )
+        if self.cfg.batch_size <= gates.DRIVER_COLLECT_MAX:
+            # one job collects the popped keys: their count, the corpus
+            # buckets they hash into, and the commit's frontier delete keys
+            keys = popped.select("url_canon", "url_hash").toPandas()
+            hashes = keys["url_hash"].to_numpy(dtype=np.int64)
+            buckets = np.unique(np.mod(hashes, self.n_buckets))  # = pmod
+            return _Pop(popped, len(keys), buckets.tolist(), keys[["url_canon"]])
         # one job: popped count + the corpus buckets it hashes into
         bucket_counts = (
             popped.groupBy(
@@ -783,6 +809,7 @@ class CrawlEngine:
             popped,
             int(sum(r["count"] for r in bucket_counts)),
             sorted(r["bucket"] for r in bucket_counts),
+            None,
         )
 
     def _fetch(self, pop: _Pop) -> _Fetch:
@@ -792,11 +819,8 @@ class CrawlEngine:
         rows, materialized in one job."""
         # an empty pop reads no bucket and runs the same plan over no rows
         buckets = ",".join(map(str, pop.buckets))
-        corpus_sel = self.store.read(
-            self.spark,
-            "corpus",
-            CORPUS,
-            partition_filter=f"bucket in ({buckets})" if buckets else "false",
+        corpus_sel = self._corpus.where(
+            f"bucket in ({buckets})" if buckets else "false"
         ).select("url_canon", "warc_ts", "html", "lang")
         failures = self._dim("fetch_failures", FETCH_FAILURES)
         popped = pop.rows
@@ -887,7 +911,14 @@ class CrawlEngine:
             fetched.groupBy("partition_id").agg(F.count("*").alias("fetched")).collect()
         )
         n_fetched = int(sum(r["fetched"] for r in part_counts))
-        return _Fetch(fetched, failed, part_counts, n_fetched, pop.n - n_fetched)
+        n_errors = pop.n - n_fetched
+        if n_errors:
+            # read by the fetch_seq numbering and the frontier delta; cached,
+            # the misses anti-join and its hit-key broadcast run once. Its
+            # size is the round's error count.
+            failed = failed.cache()
+            self._scratch.append(failed)
+        return _Fetch(fetched, failed, part_counts, n_fetched, n_errors)
 
     def _number_fetched(self, fetch: _Fetch) -> DataFrame:
         """The fetched rows with ``seq`` = fetch_seq: the dense rank of
@@ -1070,11 +1101,9 @@ class CrawlEngine:
         n_popped, n_fetched = pop.n, fetch.n_fetched
         n_discovered = disc_stats["discovered"]
         frontier_new = self._frontier_delta(rnd, fetch, pages, discovered)
-        # small pops: collect delete keys driver-side (no Spark write job);
-        # large pops: keep them distributed
-        delete_keys = pop.rows.select("url_canon")
-        if n_popped <= gates.DRIVER_COLLECT_MAX:
-            delete_keys = delete_keys.toPandas()
+        # small batches: the pop collected the delete keys (no Spark write
+        # job); large ones keep them distributed
+        delete_keys = pop.rows.select("url_canon") if pop.keys is None else pop.keys
 
         # ---- per-(round, partition) lineage metrics ------------------------
         # metrics.wall_ms and the scheduler health gauge are written by this

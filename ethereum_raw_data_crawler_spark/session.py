@@ -6,6 +6,20 @@ a real cluster the same code runs unchanged under
 ``spark-submit --py-files`` — nothing here assumes local mode except the
 defaults. AQE stays ON (runtime coalescing + skew-join splitting is part
 of the scale story, SURVEY.md §4.2).
+
+Why the less obvious confs are set:
+
+* ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true`` —
+  Spark 4.1 defaults it to false, which keeps AQE from coalescing the
+  shuffles inside a cached plan: a small round's cached discover frames
+  then keep every one of the ``spark.sql.shuffle.partitions`` partitions
+  (24+ near-empty tasks per stage that reads them). Explicit
+  ``repartition(n)`` / ``repartitionByRange(n)`` exchanges are never
+  coalesced, so code that needs a partition count asks for one.
+* ``spark.sql.codegen.cache.maxEntries=1000`` — a crawl round compiles
+  about 135 distinct generated classes; at the default 100 the cache
+  evicts them before the next round, which then pays 0.5–0.9 s of driver
+  compile again. 1000 holds several rounds' worth.
 """
 
 from __future__ import annotations
@@ -58,6 +72,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -6,10 +6,13 @@ reproduces the three Iceberg properties the engine's correctness depends
 on; swapping in a real Iceberg catalog replaces this module and nothing
 else:
 
-1. **Atomic snapshot commits** — a numbered JSON manifest written via
-   temp-file + ``os.replace``; the current state is the highest-numbered
-   manifest. A crash mid-transaction leaves orphan data directories that
-   no manifest references (exactly Iceberg's failed-commit behavior).
+1. **Atomic snapshot commits** — a numbered JSON manifest written to a
+   temp file and published by exclusive create (``os.link``); the current
+   state is the highest-numbered manifest. A crash mid-transaction leaves
+   orphan data directories that no manifest references (exactly Iceberg's
+   failed-commit behavior). Two writers that number the same version
+   cannot both publish it: the loser gets :class:`CommitConflict` instead
+   of silently overwriting the winner's commit.
    This is the engine's analogue of the reference's
    resume-from-last-processed checkpoint (reference:
    internal/application/service/crawler_service.go:199-226) and of its
@@ -78,6 +81,13 @@ def _write_pandas(absdir: str, pdf, spark_schema: T.StructType) -> None:
 
 def _empty(spark: SparkSession, schema: T.StructType) -> DataFrame:
     return spark.createDataFrame([], schema)
+
+
+class CommitConflict(RuntimeError):
+    """Another writer published the manifest version this commit numbered
+    (its handle's cached manifest was stale). Nothing of this commit is
+    visible; the handle has dropped its cached manifest, so a retry
+    re-reads the winner's state."""
 
 
 class SnapshotStore:
@@ -157,7 +167,18 @@ class SnapshotStore:
         tmp = os.path.join(self.root, f".manifest.{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh, indent=1)
-        os.replace(tmp, os.path.join(self.root, f"manifest-{manifest['version']:06d}.json"))
+        name = f"manifest-{manifest['version']:06d}.json"
+        try:
+            # exclusive create of the complete file: os.replace would let a
+            # handle numbering from a stale manifest overwrite a newer one
+            os.link(tmp, os.path.join(self.root, name))
+        except FileExistsError:
+            self._manifest = None
+            raise CommitConflict(
+                f"{name} under {self.root} was published by another writer"
+            ) from None
+        finally:
+            os.unlink(tmp)
         self._manifest = manifest
 
     # ---- reads -------------------------------------------------------------
@@ -186,7 +207,6 @@ class SnapshotStore:
         spark: SparkSession,
         name: str,
         schema: T.StructType,
-        partition_filter: str | None = None,
         version: int | None = None,
     ) -> DataFrame:
         """Contents of ``name`` — current, or as of an older manifest
@@ -194,15 +214,12 @@ class SnapshotStore:
         deletes (one broadcast join against the bounded delete set)."""
         t = self.manifest(version=version)["tables"][name]
         if t["type"] == "append":
-            df = self._read_fragments(spark, t["fragments"], schema)
-            return df.where(partition_filter) if partition_filter else df
+            return self._read_fragments(spark, t["fragments"], schema)
         # mor
         data_schema = T.StructType(
             list(schema.fields) + [T.StructField(SEQ_COL, T.IntegerType(), False)]
         )
         rows = self._read_fragments(spark, t["fragments"], data_schema)
-        if partition_filter:
-            rows = rows.where(partition_filter)
         if not t["deletes"]:
             return rows.drop(SEQ_COL)
         dels = (

@@ -4,8 +4,12 @@
   only Arrow-batched pandas UDFs (ArrowEvalPython) and MapInPandas;
 * the politeness dim joins broadcast, never shuffles;
 * corpus fetch reads only the buckets the popped batch hashes into
-  (partition pruning visible in the scan).
+  (partition pruning visible in the scan);
+* a small round's fixed cost stays small: its job and task counts, the
+  seen-filter fold's width, and the per-engine constants.
 """
+
+import uuid
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -20,6 +24,43 @@ from ethereum_raw_data_crawler_spark.operators.priority_pop import pop_batch
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _counted(spark, fn):
+    """``fn()``'s result, the number of Spark jobs it ran, and the tasks
+    each of their stages completed (stage id -> count), read from the
+    status tracker."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
+    # the store evicts skipped stages first (they ran no task) once a long
+    # session passes spark.ui.retainedStages
+    tasks = {s: i.numCompletedTasks for s in stages if (i := st.getStageInfo(s))}
+    return out, len(jobs), tasks
+
+
+def _t1_engine(spark, tabs, root, **kw):
+    from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
+
+    return CrawlEngine.create(
+        spark,
+        root,
+        *[
+            spark.createDataFrame(tabs[k])
+            for k in ("pages", "seeds", "robots", "politeness", "fetch_failures")
+        ],
+        CrawlConfig(batch_size=50),
+        **kw,
+    )
 
 
 def _pop_with_and_without_pre_prune(spark, eligible, politeness, batch, budget):
@@ -168,8 +209,9 @@ def test_pop_large_k_distributed_path_matches_small_k(spark, t1_tables):
 
 
 def test_corpus_fetch_prunes_buckets(spark, t1_tables, tmp_path):
-    """The fetch join must NOT scan the whole corpus: the parquet scan's
-    partition filter lists only the popped batch's buckets."""
+    """The fetch join must NOT scan the whole corpus: the parquet scan of
+    the engine's corpus frame, read once per engine, takes the partition
+    filter listing only the popped batch's buckets."""
     from ethereum_raw_data_crawler_spark.plans.rounds import CORPUS, CrawlEngine
 
     tabs = t1_tables
@@ -184,7 +226,7 @@ def test_corpus_fetch_prunes_buckets(spark, t1_tables, tmp_path):
         CrawlConfig(batch_size=10),
         n_buckets=16,
     )
-    sel = eng.store.read(spark, "corpus", CORPUS, partition_filter="bucket in (1,3)")
+    sel = eng._corpus.where("bucket in (1,3)")
     plan = _plan(sel)
     n_total = eng.store.read(spark, "corpus", CORPUS).count()
     assert sel.count() < n_total
@@ -294,19 +336,8 @@ def test_large_pop_fetch_join_is_shj_with_widened_exchange(spark, t1_tables, tmp
     import re
 
     from ethereum_raw_data_crawler_spark import gates
-    from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
 
-    tabs = t1_tables
-    eng = CrawlEngine.create(
-        spark,
-        str(tmp_path / "store"),
-        *[
-            spark.createDataFrame(tabs[k])
-            for k in ("pages", "seeds", "robots", "politeness", "fetch_failures")
-        ],
-        CrawlConfig(batch_size=50),
-        seen_filter=None,
-    )
+    eng = _t1_engine(spark, t1_tables, str(tmp_path / "store"), seen_filter=None)
     pop = eng._pop(1)
     small = _plan(eng._fetch(pop).failed)
     assert "BroadcastHashJoin" in small and "ShuffledHashJoin" not in small, small
@@ -321,3 +352,88 @@ def test_large_pop_fetch_join_is_shj_with_widened_exchange(spark, t1_tables, tmp
     assert "ShuffledHashJoin" in large, large
     widths = re.findall(r"hashpartitioning\(url_canon[^,]*, (\d+)\)", large)
     assert str(want) in widths, large
+
+
+def test_get_spark_sets_the_small_round_confs(spark):
+    """AQE may coalesce the shuffles inside cached plans, and the codegen
+    cache holds more than one round's generated classes."""
+    conf = spark.conf
+    assert conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true"
+    assert int(conf.get("spark.sql.codegen.cache.maxEntries")) >= 1000
+
+
+#: a t1 round (batch 50, Bloom filter of 64 buckets) on the 8-wide test
+#: session runs 29 jobs and 126 tasks; it ran 33 and 270 before cached
+#: shuffles coalesced, the filter folded in O(cores) tasks and the pop's
+#: constants were computed once per engine
+ROUND_JOBS_MAX = 30
+ROUND_TASKS_MAX = 160
+
+
+def test_small_round_job_and_task_counts(spark, t1_tables, tmp_path):
+    """A small discovering round's fixed cost, in Spark jobs and tasks."""
+    eng = _t1_engine(spark, t1_tables, str(tmp_path / "store"))
+    stats, jobs, tasks = _counted(spark, lambda: eng.run_round(1))
+    assert stats["fetched"] and stats["discovered"]
+    n_tasks = sum(tasks.values())
+    print(f"t1 round: {jobs} jobs, {n_tasks} tasks")
+    assert jobs <= ROUND_JOBS_MAX, jobs
+    assert n_tasks <= ROUND_TASKS_MAX, n_tasks
+
+
+def test_filter_fold_runs_in_cores_tasks_and_growth_per_bucket(spark, tmp_path):
+    """An add folds its buckets in at most ``defaultParallelism`` tasks —
+    several buckets per task, every key still found. Growth rebuilds only
+    the grown buckets, one bucket per task."""
+    from ethereum_raw_data_crawler_spark.operators.bloom import PartitionedBloom
+
+    n_buckets, cores = 64, spark.sparkContext.defaultParallelism
+    assert cores < n_buckets
+    pf = PartitionedBloom.create(
+        str(tmp_path), n_buckets=n_buckets, size={"n_bits": 1024, "k": 3}, rnd=-1
+    )
+    keys = spark.range(20_000).select(F.xxhash64("id").alias("url_hash"))
+    saturated, _, tasks = _counted(spark, lambda: pf.add_keys(keys, "url_hash", 0))
+    assert max(tasks.values()) <= cores, tasks
+    assert len(pf.buckets) == n_buckets and pf.n_added_total == 20_000
+    new_def, _maybe = pf.probe_split(keys, "url_hash", spark)
+    assert new_def.count() == 0  # no false negatives
+    assert saturated  # 20k keys overrun 64 buckets of 1024 bits
+    grow = saturated[:3]
+    before = {b: e["file"] for b, e in pf.buckets.items()}
+    _, _, tasks = _counted(
+        spark, lambda: pf.grow_buckets(keys, "url_hash", 1, grow)
+    )
+    assert max(tasks.values()) == n_buckets, tasks
+    changed = {b for b, e in pf.buckets.items() if e["file"] != before[b]}
+    assert changed == set(grow)
+    new_def, _maybe = pf.probe_split(keys, "url_hash", spark)
+    assert new_def.count() == 0
+
+
+def test_pop_cap_is_computed_once_per_engine(spark, t1_tables, tmp_path, monkeypatch):
+    """The pop's rank bound is an aggregate over the politeness dim, which
+    only ``create`` writes: an engine computes it when it opens, and its
+    pops submit no job for it."""
+    from ethereum_raw_data_crawler_spark.plans import rounds
+
+    calls = []
+    real = rounds.pop_cap
+    monkeypatch.setattr(
+        rounds, "pop_cap", lambda *a: calls.append(a) or real(*a)
+    )
+    root = str(tmp_path / "store")
+    eng = _t1_engine(spark, t1_tables, root, seen_filter=None)
+    assert len(calls) == 1
+    first, first_jobs, _ = _counted(spark, lambda: eng._pop(1))
+    again, again_jobs, _ = _counted(spark, lambda: eng._pop(1))
+    eng._drain_scratch()
+    assert len(calls) == 1
+    assert (again.n, again.buckets) == (first.n, first.buckets)
+    assert again_jobs <= first_jobs
+    rounds.CrawlEngine.resume(spark, root)
+    assert len(calls) == 2
+    # what each pop would otherwise pay
+    politeness = eng._dim("politeness", rounds.POLITENESS)
+    cap_jobs = _counted(spark, lambda: real(politeness, 50, eng.cfg.default_budget))[1]
+    assert cap_jobs >= 1

@@ -1,10 +1,16 @@
 """Snapshot-store unit tests: atomic visibility, MOR resolution,
-compaction invariance, retention pruning."""
+compaction invariance, retention pruning, concurrent writers."""
+
+import json
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F, types as T
 
-from ethereum_raw_data_crawler_spark.sources.tablestore import SnapshotStore
+from ethereum_raw_data_crawler_spark.sources.tablestore import (
+    CommitConflict,
+    SnapshotStore,
+)
 
 SCHEMA = T.StructType(
     [
@@ -83,3 +89,29 @@ def test_crash_orphans_invisible(spark, tmp_path):
     fresh = SnapshotStore(str(tmp_path / "s"))
     got = {r["k"] for r in fresh.read(spark, "t", SCHEMA).collect()}
     assert got == {"a"}
+
+
+def test_stale_writer_conflicts_instead_of_losing_a_commit(spark, tmp_path):
+    """Two handles on one store both number their commit from version 0.
+    The second must not overwrite the first's manifest: it gets a
+    CommitConflict, the winner's fragment stays, and a retry on the
+    loser's handle re-reads the store and lands both."""
+    root = str(tmp_path / "s")
+    SnapshotStore.create(root, {"t": "append"})
+    a, b = SnapshotStore(root), SnapshotStore(root)
+    ta, tb = a.transaction(0), b.transaction(0)
+    ta.append_pandas("t", pd.DataFrame({"k": ["a"], "v": [1]}), SCHEMA)
+    tb.append_pandas("t", pd.DataFrame({"k": ["b"], "v": [2]}), SCHEMA)
+    ta.commit()
+    with pytest.raises(CommitConflict):
+        tb.commit()
+    with open(tmp_path / "s" / "manifest-000001.json") as fh:
+        assert len(json.load(fh)["tables"]["t"]["fragments"]) == 1
+    assert {r["k"] for r in b.read(spark, "t", SCHEMA).collect()} == {"a"}
+    retry = b.transaction(0)
+    retry.append_pandas("t", pd.DataFrame({"k": ["b"], "v": [2]}), SCHEMA)
+    retry.commit()
+    assert b.manifest()["version"] == 2
+    fresh = SnapshotStore(root)
+    assert {r["k"] for r in fresh.read(spark, "t", SCHEMA).collect()} == {"a", "b"}
+    assert not [f for f in (tmp_path / "s").iterdir() if f.name.endswith(".tmp")]

@@ -11,9 +11,12 @@ sides alike. ``--trace 1`` compares the per-layer metrics (phase walls,
 CPU, shuffle, Python bytes, spill) instead of the end-to-end ones.
 
 Prints one line per metric: each side's median and interquartile range,
-and the number of pairs the change won. Ties count for neither side;
+the number of pairs the change won, and whether the claim rule holds —
+the change wins at least 9 in 10 of the pairs and its median beats the
+parent's by more than the parent's IQR. Ties count for neither side;
 which direction is better comes from the change's ``BENCHMARK.json``.
-The last line sums each side's failed operations.
+The last line sums each side's failed and attempted operations (a
+deep-crawl operation is one leg's round, so it also counts the legs).
 """
 
 from __future__ import annotations
@@ -50,6 +53,15 @@ def spread(xs: list[float]) -> tuple[float, float]:
     return statistics.median(xs), q3 - q1
 
 
+def claim_holds(wins: int, n: int, parent_med: float, change_med: float,
+                parent_iqr: float, higher: bool) -> bool:
+    """The claim rule: the change wins at least 9 in 10 of the ``n``
+    pairs, and its median is better than the parent's by more than the
+    parent's interquartile range."""
+    gain = (change_med - parent_med) if higher else (parent_med - change_med)
+    return n > 0 and 10 * wins >= 9 * n and gain > parent_iqr
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent")
@@ -80,7 +92,10 @@ def main() -> int:
         return None if m is None else m["value"]
 
     names = sorted({n for p in pairs for r in p.values() if r for n in r["metrics"]})
-    print(f"{'metric':<32}{'parent med':>12}{'IQR':>10}{'change med':>12}{'IQR':>10}  wins")
+    print(
+        f"{'metric':<32}{'parent med':>12}{'IQR':>10}{'change med':>12}{'IQR':>10}"
+        "  wins  claim"
+    )
     for name in names:
         vals = {s: [v for p in pairs if (v := value(p[s], name)) is not None] for s in sides}
         wins = n = 0
@@ -91,11 +106,16 @@ def main() -> int:
             n += 1
             wins += (b > a) if higher.get(name, False) else (b < a)
         (pm, pi), (cm, ci) = spread(vals["parent"]), spread(vals["change"])
-        print(f"{name:<32}{pm:>12.4g}{pi:>10.3g}{cm:>12.4g}{ci:>10.3g}  {wins}/{n}")
-    failed = {
-        s: sum((p[s] or {"failed": 1})["failed"] for p in pairs) for s in sides
-    }
-    print(f"failed operations: parent {failed['parent']}, change {failed['change']}")
+        holds = claim_holds(wins, n, pm, cm, pi, higher.get(name, False))
+        claim = "holds" if holds else "no"
+        print(f"{name:<32}{pm:>12.4g}{pi:>10.3g}{cm:>12.4g}{ci:>10.3g}  {wins}/{n}  {claim}")
+    def total(side: str, key: str) -> int:
+        return sum((p[side] or {"failed": 1, "attempted": 1})[key] for p in pairs)
+
+    print(
+        "failed operations: "
+        + ", ".join(f"{s} {total(s, 'failed')} of {total(s, 'attempted')}" for s in sides)
+    )
     return 0
 
 
