@@ -153,30 +153,6 @@ def band_keys_batch(sigs: np.ndarray, bands: int = 16) -> np.ndarray:
     return (acc & np.uint64(0x7FFFFFFFFFFFFFFF)).view(np.int64)
 
 
-def simhash64_batch(token_hashes: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """SimHash for a whole batch: concatenated token hashes + per-doc
-    counts -> (n_docs,) int64 (63-bit). Bit votes via segmented sums
-    (``np.add.reduceat``), no per-document Python. Empty docs -> 0."""
-    counts = np.asarray(counts, dtype=np.int64)
-    n_docs = len(counts)
-    out = np.zeros(n_docs, dtype=np.int64)
-    if token_hashes.size == 0 or n_docs == 0:
-        return out
-    h = np.asarray(token_hashes, dtype=np.uint64)
-    nonempty = counts > 0
-    starts = np.zeros(int(nonempty.sum()), dtype=np.int64)
-    np.cumsum(counts[nonempty][:-1], out=starts[1:])
-    fp = np.zeros(int(nonempty.sum()), dtype=np.uint64)
-    # one O(N) vectorized pass per bit — no (N, 64) materialization, so
-    # memory stays flat for arbitrarily large Arrow batches
-    for b in range(64):
-        bit = (((h >> np.uint64(b)) & np.uint64(1)).astype(np.int64) * 2) - 1
-        votes = np.add.reduceat(bit, starts)
-        fp |= (votes > 0).astype(np.uint64) << np.uint64(b)
-    out[nonempty] = (fp & np.uint64(0x7FFFFFFFFFFFFFFF)).view(np.int64)
-    return out
-
-
 def band_keys(sig: np.ndarray, bands: int = 16) -> list[int]:
     """LSH banding: split the signature into ``bands`` equal bands and hash
     each band to a 63-bit bucket key (signed-long friendly)."""
@@ -191,7 +167,3 @@ def band_keys(sig: np.ndarray, bands: int = 16) -> list[int]:
             acc = splitmix64(np.array([acc ^ np.uint64(b)], dtype=np.uint64))[0]
         keys.append(int(acc & np.uint64(0x7FFFFFFFFFFFFFFF)))
     return keys
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin(a ^ b).count("1")

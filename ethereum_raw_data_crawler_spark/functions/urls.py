@@ -32,7 +32,8 @@ from urllib.parse import urlsplit
 # from the canonical string, so a store resumed under different rules
 # would silently treat previously-seen urls as new (re-crawl/duplicate
 # frontier rows). The store stamps this into config.json at create and
-# refuses to resume under a different version (plans/rounds.py).
+# refuses to resume under a different version or without the stamp
+# (plans/rounds.py).
 #   v2: trailing ';' stripped from paths (urljoin parity, round 4).
 #   v3: the strip happens BEFORE dot-segment resolution too, so a
 #       trailing ';' can no longer shield a final dot segment from

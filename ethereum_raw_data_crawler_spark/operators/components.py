@@ -1,7 +1,7 @@
 """Distributed connected components — dup-group resolution.
 
-The final stage of every dedup pipeline: near-dup PAIRS (from MinHash-LSH,
-SimHash, or embedding-cosine — operators/dedup.py) are only candidates;
+The final stage of every dedup pipeline: near-dup PAIRS (from MinHash-LSH
+— operators/dedup.py — or embedding cosine) are only candidates;
 what a training-data pipeline actually needs is a GROUP id per document so
 one canonical representative survives and the rest are dropped. Pairs form
 a graph; groups are its connected components. (The reference's analogue is
@@ -178,6 +178,10 @@ def connected_components(
     ``(node, component)`` where ``component`` is the smallest node id in
     the node's connected component (roots map to themselves).
 
+    Eager: the call runs the caller's edge pipeline before it returns.
+    Two local checkpoints materialize the raw edges and their distinct
+    non-loop pairs, so the returned frame never re-runs the upstream.
+
     ``max_iterations`` is a runaway guard on the distributed path only,
     above ``small_graph_max_edges`` (the single-task kernel runs to its
     fixpoint): large-star/small-star provably converges in O(log n)
@@ -188,10 +192,10 @@ def connected_components(
     (``_single_task_components``): at or below it the O(log n) machinery
     costs more in fixed per-iteration job overhead than the whole
     problem; above it the distributed star alternation runs. The 8M
-    default is the measured wash point (tools/bench_components.py
-    ladder, 32 cores, OPTIMIZATION_r06.md): at 4M edges the vectorized
-    single task labels in 12.9 s where the star alternation takes
-    93.7 s; at 8M the two take ~55 s vs ~51 s. Its transient memory is
+    default is the measured wash point (the round-6 edge-count ladder in
+    BENCH/BASELINE.md, 32 cores, OPTIMIZATION_r06.md): at 4M edges the
+    vectorized single task labels in 12.9 s where the star alternation
+    takes 93.7 s; at 8M the two take ~55 s vs ~51 s. Its transient memory is
     bounded (~80 bytes/edge ≈ 650 MB at the gate — an ordinary large
     task, per guide §5). Pass 0 to force the distributed path (tests
     do)."""

@@ -1,25 +1,21 @@
 """Deduplication operators for the training-data pipeline.
 
-Five families over the ``documents`` table, each the set-based analogue of
-the reference's unique-index dedup (reference: mongodb.go:86-92,111-115)
-generalized from exact keys to near-duplicate content:
-
-  exact           hash-groupBy (queries.py::dedup_exact — SQL-paired)
-  minhash_lsh     word-shingle MinHash -> banded LSH -> bucket self-join
-                  -> signature-similarity verify
-  simhash         64-bit SimHash fingerprints -> chunk-banded candidate
-                  pairs -> Hamming verify
-  ngram_jaccard   exact word-3-gram Jaccard over blocked pairs
-                  (queries.py SQL-paired variant lives in queries registry)
-  embedding_cos   near-dup pairs by cosine over the embedding column
+Near-duplicate detection over the ``documents`` table, the set-based
+analogue of the reference's unique-index dedup (reference:
+mongodb.go:86-92,111-115) generalized from exact keys to near-duplicate
+content: word-shingle MinHash -> banded LSH -> bucket self-join ->
+signature-similarity verify, plus its single-threaded reference. The
+other dedup families are registered queries: ``dedup_exact``,
+``ngram_jaccard`` and ``embedding_near_dup`` (queries.py) and
+``dedup_simhash`` (queries_pipeline.py).
 
 Scale notes (10^10 docs): LSH banding turns the O(n^2) pair problem into
 per-bucket self-joins; bucket sizes are bounded by hash dispersion, and
 AQE skew-join splitting covers pathological buckets. Signatures are
 computed in one Arrow-batched mapInPandas pass, vectorized at BATCH
-granularity: token/shingle hashing, segmented-min MinHash, band keys and
-simhash bit votes are all whole-batch numpy ops — the only per-document
-Python left is the token split.
+granularity: token/shingle hashing, segmented-min MinHash and band keys
+are all whole-batch numpy ops — the only per-document Python left is the
+token split.
 """
 
 from __future__ import annotations
@@ -34,11 +30,9 @@ from pyspark.sql import types as T
 from ethereum_raw_data_crawler_spark.functions.hashing import (
     band_keys,
     band_keys_batch,
-    hamming64,
     minhash_signature_batch,
     shingle_hashes_concat,
     shingle_hashes_vec,
-    simhash64_batch,
     token_hash64_vec,
 )
 
@@ -71,11 +65,6 @@ def _doc_tokens(text: str) -> list[str]:
 def doc_minhash(text: str, k: int = 64) -> np.ndarray:
     sh = shingle_hashes_vec(token_hash64_vec(_doc_tokens(text)), 3)
     return minhash_signature_batch(sh, np.array([len(sh)]), k)[0]
-
-
-def doc_simhash(text: str) -> int:
-    th = token_hash64_vec(_doc_tokens(text))
-    return int(simhash64_batch(th, np.array([len(th)]))[0])
 
 
 # ---------------------------------------------------------------------------
@@ -196,98 +185,4 @@ def minhash_lsh_pairs_oracle(
         est = round(float((sigs[a] == sigs[b]).mean()), 6)
         if est >= threshold:
             out.add((a, b, est))
-    return out
-
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-
-def simhash_fingerprints(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, simhash, 4x16-bit chunk keys) in one Arrow pass."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("simhash", T.LongType(), False),
-            T.StructField("chunk_idx", T.IntegerType(), False),
-            T.StructField("chunk_key", T.IntegerType(), False),
-        ]
-    )
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            tok_lists = [_doc_tokens(t) for t in pdf[text_col]]
-            counts = np.array([len(t) for t in tok_lists], dtype=np.int64)
-            flat = token_hash64_vec([w for toks in tok_lists for w in toks])
-            sh = simhash64_batch(flat, counts)  # (n,) int64
-            n = len(pdf)
-            chunk_idx = np.tile(np.arange(4, dtype=np.int32), n)
-            rep = np.repeat(sh, 4)
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), 4),
-                    "simhash": rep,
-                    "chunk_idx": chunk_idx,
-                    "chunk_key": (
-                        (rep >> (16 * chunk_idx.astype(np.int64))) & 0xFFFF
-                    ).astype(np.int32),
-                }
-            )
-
-    return _spread(df.select(id_col, text_col)).mapInPandas(compute, out_schema)
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) <= max_hamming. Pigeonhole
-    blocking: distance <=3 over 4 chunks implies at least one identical
-    16-bit chunk, so the candidate join is per-(chunk_idx, chunk_key)."""
-    fp = simhash_fingerprints(df, text_col, id_col)
-    left = fp.select(
-        F.col(id_col).alias("id_a"),
-        F.col("simhash").alias("sh_a"),
-        "chunk_idx",
-        "chunk_key",
-    )
-    right = fp.select(
-        F.col(id_col).alias("id_b"),
-        F.col("simhash").alias("sh_b"),
-        "chunk_idx",
-        "chunk_key",
-    )
-    return (
-        left.join(right, ["chunk_idx", "chunk_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def simhash_near_dup_oracle(
-    pdf: pd.DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> set[tuple[int, int, int]]:
-    fps = {int(r[id_col]): doc_simhash(r[text_col]) for _, r in pdf.iterrows()}
-    ids = sorted(fps)
-    out = set()
-    for i in range(len(ids)):
-        for j in range(i + 1, len(ids)):
-            d = hamming64(fps[ids[i]], fps[ids[j]])
-            if d <= max_hamming:
-                out.add((ids[i], ids[j], d))
     return out

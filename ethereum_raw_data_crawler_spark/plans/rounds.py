@@ -189,7 +189,7 @@ class CrawlEngine:
         # would rewrite the whole frontier EVERY round, while a fraction
         # amortizes the rewrite to O(batch / frac) rows per round. The
         # read path needs no trigger at all — SnapshotStore.read already
-        # degrades gracefully past BROADCAST_DELETE_MAX (shuffle join
+        # degrades gracefully past gates.DELETE_BROADCAST_MAX (shuffle join
         # instead of broadcast), so the only question is amortized rewrite
         # cost, which is what the fraction controls.
         self.compact_debt_frac: float = compact_debt_frac
@@ -325,11 +325,10 @@ class CrawlEngine:
             saved = json.load(fh)
         # the seen-set keys on the canonical string: resuming under
         # different canonicalization rules would re-admit previously-seen
-        # urls (url_hash drift). Stores created before the stamp existed
-        # carry no version and are accepted as-is (documented in
-        # functions/urls.py:CANON_VERSION).
+        # urls (url_hash drift). A store without the stamp predates it and
+        # is refused the same way (functions/urls.py:CANON_VERSION).
         saved_canon = saved.get("canon_version")
-        if saved_canon is not None and saved_canon != CANON_VERSION:
+        if saved_canon != CANON_VERSION:
             raise RuntimeError(
                 f"store was created under canonicalization rules "
                 f"v{saved_canon} but this build implements "
@@ -337,23 +336,20 @@ class CrawlEngine:
                 f"Re-crawl into a fresh store or run a migration that "
                 f"re-canonicalizes frontier/seen/corpus url_canon columns."
             )
-        cfg = CrawlConfig(**saved["cfg"])
-        # stores created before seen_filter took None carry a separate
-        # use_bloom flag; use_bloom=false meant no prefilter at all
-        seen_filter = (
-            saved.get("seen_filter", "bloom") if saved.get("use_bloom", True) else None
-        )
+        # every key is the one create writes: a config missing one is from
+        # a store older than the layout (history, health, host_edges) that
+        # this engine reads, and fails here with a KeyError
         eng = cls(
             spark,
             store_root,
-            cfg,
+            CrawlConfig(**saved["cfg"]),
             n_buckets=saved["n_buckets"],
             compact_every=saved["compact_every"],
-            egress_dir=saved.get("egress_dir"),
-            bloom_buckets=saved.get("bloom_buckets", 64),
-            compact_debt_frac=saved.get("compact_debt_frac", 0.15),
-            track_host_graph=saved.get("track_host_graph", False),
-            seen_filter=seen_filter,
+            egress_dir=saved["egress_dir"],
+            bloom_buckets=saved["bloom_buckets"],
+            compact_debt_frac=saved["compact_debt_frac"],
+            track_host_graph=saved["track_host_graph"],
+            seen_filter=saved["seen_filter"],
         )
         eng._read_constants()
         if eng._egress is not None:
@@ -400,9 +396,6 @@ class CrawlEngine:
     def host_edges(self) -> DataFrame:
         """Accumulated host-level link graph (empty for stores that never
         tracked it — the table is registered at create time either way)."""
-        if "host_edges" not in self.store.manifest()["tables"]:
-            # stores created before §11: behave as an empty graph
-            return self.spark.createDataFrame([], HOST_EDGES)
         return self.store.read(self.spark, "host_edges", HOST_EDGES)
 
     def seen(self) -> DataFrame:
@@ -527,21 +520,20 @@ class CrawlEngine:
             )
             .drop("allowed", "disallow_prefix", "path")
             .withColumn("url_hash", F.xxhash64("url_canon"))
-            .cache()  # feeds two union branches; uncached it would run 2x
         )
-        self._scratch.append(gated)
         # seen-membership flag: Bloom kills the definitely-new rows map-side;
         # only maybe-seen rows reach the exact join against the seen table
-        # (with no filter every candidate is maybe-seen)
-        candidates_for_seen = gated.where(F.col("pass_cap") & F.col("pass_robots"))
-        skipped_rows = gated.where(~(F.col("pass_cap") & F.col("pass_robots")))
+        # (with no filter every candidate is maybe-seen). Gated-out rows are
+        # probed too: every counter and the admitted filter AND ``seen_hit``
+        # with pass_cap & pass_robots, so their flag is never read, and
+        # probing them spares a cached split of ``gated``
         seen_keys = seen.select("url_hash").withColumn("seen_hit", F.lit(True))
         new_def, maybe = (
             self._bloom.probe_split(
-                candidates_for_seen, "url_hash", self.spark, scratch=self._scratch
+                gated, "url_hash", self.spark, scratch=self._scratch
             )
             if self._bloom is not None
-            else (None, candidates_for_seen)
+            else (None, gated)
         )
         flagged = maybe.join(seen_keys, "url_hash", "left").withColumn(
             "seen_hit", F.coalesce(F.col("seen_hit"), F.lit(False))
@@ -550,9 +542,7 @@ class CrawlEngine:
             flagged = new_def.withColumn("seen_hit", F.lit(False)).unionByName(
                 flagged
             )
-        annotated = flagged.unionByName(
-            skipped_rows.withColumn("seen_hit", F.lit(False))
-        ).cache()
+        annotated = flagged.cache()
         self._scratch.append(annotated)
 
         stats_row = annotated.agg(
@@ -1167,13 +1157,8 @@ class CrawlEngine:
             with clock.span("commit_seen"):
                 txn.append("seen", new_seen.coalesce(gates.output_files(n_discovered)))
         txn.append_pandas("metrics", metrics_pdf, METRICS)
-        if "health" in txn.manifest["tables"]:  # stores created pre-§10
-            txn.append_pandas("health", health_pdf, HEALTH)
-        if (
-            self.track_host_graph
-            and n_fetched
-            and "host_edges" in txn.manifest["tables"]  # stores pre-§11
-        ):
+        txn.append_pandas("health", health_pdf, HEALTH)
+        if self.track_host_graph and n_fetched:
             edges = self._host_edges(pages, rnd)
             with clock.span("commit_host_graph"):
                 txn.append("host_edges", edges.coalesce(gates.output_files(n_fetched)))

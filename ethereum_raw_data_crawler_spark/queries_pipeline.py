@@ -308,8 +308,7 @@ def dedup_simhash(spark, sf):
     """SimHash fingerprints with ZERO Python on the executor path: token
     hash = first 15 hex chars of sha256 (bit-identical in both engines),
     bit votes via built-in higher-order functions inside whole-stage
-    codegen — the 100-TB variant of the Arrow-batched simhash operator
-    (operators/dedup.py keeps the mapInPandas sibling + pytest oracle)."""
+    codegen, so the fingerprint pass never crosses the Arrow boundary."""
     from ethereum_raw_data_crawler_spark.operators.dedup import _spread
 
     d = _t(spark, sf, "documents")

@@ -125,16 +125,8 @@ class SnapshotStore:
         The current manifest carries the full [version, round] commit
         history (Iceberg's snapshot log), so this is an in-memory scan —
         O(1) file reads, not one JSON read per historical manifest."""
-        hist = self.manifest().get("history")
-        if hist is None:  # stores created before the history field
-            hist = []
-            for v in range(self._manifest_version() + 1):
-                try:
-                    hist.append([v, self.manifest(version=v)["round"]])
-                except FileNotFoundError:
-                    continue
         best = None
-        for v, r in hist:
+        for v, r in self.manifest()["history"]:
             if r <= rnd:
                 best = v
         if best is None:
@@ -439,7 +431,5 @@ class Transaction:
     def commit(self) -> None:
         self.manifest["version"] = self.store.manifest()["version"] + 1
         self.manifest["round"] = self.rnd
-        self.manifest.setdefault("history", []).append(
-            [self.manifest["version"], self.rnd]
-        )
+        self.manifest["history"].append([self.manifest["version"], self.rnd])
         self.store._write_manifest(self.manifest)

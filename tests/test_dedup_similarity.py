@@ -1,4 +1,4 @@
-"""Training-data operator tests: MinHash+LSH, SimHash, and LSH ANN are
+"""Training-data operator tests: MinHash+LSH and LSH ANN are
 checked EXACTLY against their single-threaded reference implementations
 (shared pure hash functions make this deterministic), plus recall checks
 for the ANN path against brute force."""
@@ -9,11 +9,8 @@ import pytest
 
 from ethereum_raw_data_crawler_spark.operators.dedup import (
     doc_minhash,
-    doc_simhash,
     minhash_lsh_pairs,
     minhash_lsh_pairs_oracle,
-    simhash_near_dup_pairs,
-    simhash_near_dup_oracle,
 )
 from ethereum_raw_data_crawler_spark.operators.similarity import (
     brute_force_topk,
@@ -58,29 +55,10 @@ def test_minhash_lsh_matches_oracle(spark, near_dup_docs):
     assert len(planted & found) >= 50  # LSH banding recall on 0.85+ jaccard
 
 
-def test_simhash_matches_oracle(spark, near_dup_docs):
-    got = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in simhash_near_dup_pairs(
-            spark.createDataFrame(near_dup_docs), max_hamming=3
-        ).collect()
-    }
-    want = simhash_near_dup_oracle(near_dup_docs, max_hamming=3)
-    assert got == want
-
-
 def test_signatures_deterministic():
     a = doc_minhash("spark crawl frontier fetch page host queue batch")
     b = doc_minhash("spark crawl frontier fetch page host queue batch")
     assert (a == b).all()
-    assert doc_simhash("alpha beta gamma") == doc_simhash("alpha beta gamma")
-    # similar docs -> close simhash
-    from ethereum_raw_data_crawler_spark.functions.hashing import hamming64
-
-    s1 = doc_simhash("the quick brown fox jumps over the lazy dog " * 4)
-    s2 = doc_simhash("the quick brown fox jumps over the lazy cat " * 4)
-    s3 = doc_simhash("completely different words entirely unrelated content")
-    assert hamming64(s1, s2) < hamming64(s1, s3)
 
 
 def test_lsh_ann_matches_oracle_and_recall(spark):

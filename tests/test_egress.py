@@ -120,53 +120,3 @@ def test_emit_round_count_matches_rows_one_job(spark, t1_tables, tmp_path):
     }
     got = {(r["fetch_round"], r["fetch_seq"]) for r in ev.collect()}
     assert got == pg
-
-
-def test_stateful_per_host_counters_accumulate_across_batches(
-    spark, t1_tables, tmp_path
-):
-    """applyInPandasWithState over the egress stream: state persists
-    across micro-batches (one file-source batch per published round), and
-    the final cumulative counters equal the batch ground truth."""
-    from pyspark.sql import functions as F
-
-    from ethereum_raw_data_crawler_spark.streaming.stateful import (
-        per_host_counters,
-    )
-
-    egress = str(tmp_path / "egress")
-    eng = _mk(spark, t1_tables, tmp_path, egress_dir=egress)
-    eng.run(max_rounds=2)
-
-    final: dict[str, tuple[int, int]] = {}
-    batches = []
-
-    def sink(df, epoch_id):
-        rows = df.collect()
-        batches.append(len(rows))
-        for r in rows:
-            final[r["host"]] = (r["n_pages"], r["last_round"])
-
-    stats = per_host_counters(
-        eng._egress.read_stream(spark, max_files_per_trigger=1)
-    )
-    q = (
-        stats.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    truth = {
-        r["host"]: (r["n"], r["lr"])
-        for r in eng.read_trace()
-        .groupBy("host")
-        .agg(F.count("*").alias("n"), F.max("round").alias("lr"))
-        .collect()
-    }
-    assert final == truth and len(truth) > 0
-    assert len(batches) >= 2  # state genuinely crossed micro-batches

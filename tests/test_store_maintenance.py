@@ -412,8 +412,9 @@ def test_resume_refuses_canon_version_drift(spark, t1_tables, tmp_path):
     """url_hash keys derive from the canonical string, so a store written
     under different canonicalization rules must not silently resume (it
     would re-admit previously-seen urls). The stamp is written at create;
-    a mismatched stamp raises; an ABSENT stamp (pre-stamp store) resumes
-    as before."""
+    a mismatched or ABSENT stamp raises. A config missing any key that
+    create writes (here ``track_host_graph``) is from a store older than
+    the oldest supported layout and fails to resume too."""
     import json
     import pytest
 
@@ -443,7 +444,15 @@ def test_resume_refuses_canon_version_drift(spark, t1_tables, tmp_path):
     with pytest.raises(RuntimeError, match="canonicalization rules"):
         CrawlEngine.resume(spark, root)
 
-    # pre-stamp store (no field) -> resumes, documented-compatible
+    # pre-stamp store (no field) -> refused like a mismatch
     del saved["canon_version"]
     json.dump(saved, open(cfg_path, "w"))
-    assert CrawlEngine.resume(spark, root) is not None
+    with pytest.raises(RuntimeError, match="canonicalization rules"):
+        CrawlEngine.resume(spark, root)
+
+    # a config older than the host-graph layout (no track_host_graph)
+    saved["canon_version"] = CANON_VERSION
+    del saved["track_host_graph"]
+    json.dump(saved, open(cfg_path, "w"))
+    with pytest.raises(KeyError, match="track_host_graph"):
+        CrawlEngine.resume(spark, root)

@@ -173,60 +173,6 @@ def test_hybrid_backoff_tick_expires_skip_windows(spark, t1_tables, tmp_path):
     assert trace == ["https://host1.example/p/0"]  # retried exactly once
 
 
-def test_streaming_windowed_agg_matches_batch(spark, tmp_path):
-    """Watermarked tumbling-window stream agg == batch agg once all data
-    arrived (the metricsWorker recast, SURVEY §2.8)."""
-    import numpy as np
-
-    from ethereum_raw_data_crawler_spark.streaming.windows import (
-        PAGE_EVENTS,
-        batch_fetch_rates,
-        windowed_fetch_rates,
-    )
-
-    rng = np.random.default_rng(5)
-    events_dir = str(tmp_path / "events")
-    os.makedirs(events_dir)
-    rows = []
-    for i in range(200):
-        rows.append(
-            {
-                "url": f"https://host{i % 4}.example/p/{i}",
-                "host": f"host{i % 4}.example",
-                "fetch_ts": f"2025-01-01T00:{int(rng.integers(0, 5)):02d}:"
-                f"{int(rng.integers(0, 60)):02d}Z",
-                "n_bytes": int(rng.integers(100, 5000)),
-            }
-        )
-    # two files -> two micro-batches (the second is the "late" tranche)
-    for part, chunk in enumerate((rows[:120], rows[120:])):
-        with open(os.path.join(events_dir, f"p{part}.json"), "w") as fh:
-            for r in chunk:
-                fh.write(json.dumps(r) + "\n")
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    q = windowed_fetch_rates(spark, events_dir, query_name="t_rates")
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (str(r["win_start"]), r["host"], r["fetched"], r["bytes"])
-        for r in spark.sql("SELECT * FROM t_rates").collect()
-    }
-    from pyspark.sql import functions as F
-
-    batch = spark.createDataFrame(pd.DataFrame(rows)).withColumn(
-        "fetch_ts", F.to_timestamp("fetch_ts")
-    )
-    want = {
-        (str(r["win_start"]), r["host"], r["fetched"], r["bytes"])
-        for r in batch_fetch_rates(spark, batch).collect()
-    }
-    assert got == want
-    assert len(got) == 4 * 5  # 4 hosts x 5 one-minute windows
-
-
 def test_multimodal_feature_plumbing(spark):
     from ethereum_raw_data_crawler_spark.functions.multimodal import (
         FEATURE_DIM,
