@@ -55,8 +55,9 @@ def cmd_crawl(args) -> int:
         politeness = spark.read.parquet(args.politeness)
     else:
         from ethereum_raw_data_crawler_spark.schemas import POLITENESS
+        from ethereum_raw_data_crawler_spark.sources.tablestore import empty_frame
 
-        politeness = spark.createDataFrame([], POLITENESS)
+        politeness = empty_frame(spark, POLITENESS)
     cfg = CrawlConfig(batch_size=args.batch_size, default_budget=args.default_budget)
     eng = CrawlEngine.create(
         spark, args.store, pages, seeds, robots, politeness, None, cfg,

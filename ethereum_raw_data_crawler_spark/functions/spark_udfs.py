@@ -26,6 +26,13 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(canonicalize_url, na_action="ignore")
 
 
+# Nondeterministic only to the optimizer: it then keeps a filter on the
+# result (``url_canon IS NOT NULL``) above the projection instead of
+# pushing it below with the UDF inlined, which planned a second
+# ArrowEvalPython that canonicalized every url again on a second worker.
+canonicalize_udf = canonicalize_udf.asNondeterministic()
+
+
 @F.pandas_udf(T.LongType())
 def url_hash_udf(canon: pd.Series) -> pd.Series:
     return canon.map(url_hash64, na_action="ignore")

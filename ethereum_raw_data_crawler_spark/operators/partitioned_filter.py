@@ -53,8 +53,8 @@ operators/bloom.py, the deletable cuckoo table in operators/cuckoo.py):
     task loads only the files of the buckets it holds — a 10^10-key seen
     set never materializes on the driver and never broadcasts.
 
-Vectorized numpy throughout (Arrow batches in mapInPandas — no per-row
-Python).
+Vectorized numpy throughout (Arrow batches in mapInPandas and pandas
+UDFs — no per-row Python).
 """
 
 from __future__ import annotations
@@ -361,13 +361,15 @@ class PartitionedFilter:
     # ---- probe -----------------------------------------------------------------
     def probe_split(self, df, key_col: str, spark, scratch=None):
         """(definitely_new, maybe_seen) split of ``df`` on ``key_col``, in
-        one of the module docstring's two regimes (``last_probe_mode``
-        records which ran, for the tests).
+        one of the module docstring's two regimes, or none when no bucket
+        holds a key (``last_probe_mode`` records which ran, for the tests).
 
         The tagged intermediate (``df`` plus a boolean ``_maybe_seen``) is
-        CACHED and appended to ``scratch`` for the caller to unpersist:
-        both returned branches read it, and without the cache each branch
-        would re-execute the full upstream candidate pipeline."""
+        appended to ``scratch`` for the caller to unpersist. A probing
+        split CACHES it: both returned branches read it, and without the
+        cache each branch would re-execute the full upstream candidate
+        pipeline. Only ``key_col`` crosses to Python; the other columns
+        stay in the JVM."""
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
@@ -378,10 +380,12 @@ class PartitionedFilter:
             for b, e in self.buckets.items()
             if e.get("file")
         }
-        schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField("_maybe_seen", T.BooleanType(), False)]
-        )
+
+        if not files:
+            # round-0 seeding, or a store before its first fold: every row
+            # is definitely new, and the maybe-seen branch plans as empty
+            self.last_probe_mode = "empty"
+            return self._split(df.withColumn("_maybe_seen", F.lit(False)), scratch)
 
         if self.total_bits // 8 <= gates.FILTER_BROADCAST_MAX:
             self.last_probe_mode = "broadcast"
@@ -399,12 +403,11 @@ class PartitionedFilter:
             def bucket_filter(b: int):
                 return read(*files[b]) if b in files else None
 
-        def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        @F.pandas_udf(T.BooleanType())
+        def maybe_seen(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
             cache: dict[int, object] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keys = pdf[key_col].to_numpy(dtype=np.int64)
+            for s in batches:
+                keys = s.to_numpy(dtype=np.int64)
                 bks = np.mod(keys, B)
                 mask = np.zeros(len(keys), dtype=bool)
                 for b in map(int, np.unique(bks)):
@@ -414,9 +417,13 @@ class PartitionedFilter:
                         continue  # empty bucket: definitely absent
                     sel = bks == b
                     mask[sel] = cache[b].contains_many(keys[sel])
-                yield pdf.assign(_maybe_seen=mask)
+                yield pd.Series(mask)
 
-        tagged = df.mapInPandas(tag, schema).cache()
+        tagged = df.withColumn("_maybe_seen", maybe_seen(key_col)).cache()
+        return self._split(tagged, scratch)
+
+    @staticmethod
+    def _split(tagged, scratch):
         if scratch is not None:
             scratch.append(tagged)
         return (

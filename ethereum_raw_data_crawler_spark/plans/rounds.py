@@ -82,7 +82,10 @@ from ethereum_raw_data_crawler_spark.schemas import (
     STATUS_PENDING,
 )
 from ethereum_raw_data_crawler_spark.sources.egress import EgressWriter
-from ethereum_raw_data_crawler_spark.sources.tablestore import SnapshotStore
+from ethereum_raw_data_crawler_spark.sources.tablestore import (
+    SnapshotStore,
+    empty_frame,
+)
 
 CORPUS = T.StructType(
     [
@@ -139,6 +142,19 @@ class _PhaseClock:
 
     def elapsed_ms(self) -> int:
         return int((time.monotonic() - self.start) * 1000)
+
+
+def corpus_frame(pages: DataFrame, n_buckets: int) -> DataFrame:
+    """The corpus table's rows: ``pages`` canonicalized ONCE and bucketed
+    by url_hash for fetch-time partition pruning (the "fetch" of a batch
+    reads only the buckets the batch hashes into, not the whole corpus)."""
+    return (
+        pages.withColumn("url_canon", canonicalize_udf("url"))
+        .where(F.col("url_canon").isNotNull())
+        .withColumn("url_hash", F.xxhash64("url_canon"))
+        .withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int"))
+        .select("url_canon", "url_hash", "bucket", "warc_ts", "html", "lang")
+    )
 
 
 # Phase records. A frame a phase caches is registered in the engine's
@@ -269,19 +285,9 @@ class CrawlEngine:
                 expected_keys=expected_keys,
             )
         txn = eng.store.transaction(-1)
-        # canonicalize the corpus ONCE; bucket by url_hash for fetch-time
-        # partition pruning (the "fetch" of a batch reads only the buckets
-        # the batch hashes into, not the whole corpus)
-        corpus = (
-            pages.withColumn("url_canon", canonicalize_udf("url"))
-            .where(F.col("url_canon").isNotNull())
-            .withColumn("url_hash", F.xxhash64("url_canon"))
-            .withColumn(
-                "bucket", F.pmod(F.col("url_hash"), F.lit(eng.n_buckets)).cast("int")
-            )
-            .select("url_canon", "url_hash", "bucket", "warc_ts", "html", "lang")
+        txn.append(
+            "corpus", corpus_frame(pages, eng.n_buckets), partition_by=["bucket"]
         )
-        txn.append("corpus", corpus, partition_by=["bucket"])
         txn.append(
             "robots",
             robots.select(
@@ -295,7 +301,7 @@ class CrawlEngine:
             politeness.select("host", F.col("budget_per_round").cast("int")),
         )
         if fetch_failures is None:
-            fetch_failures = spark.createDataFrame([], FETCH_FAILURES)
+            fetch_failures = empty_frame(spark, FETCH_FAILURES)
         txn.append(
             "fetch_failures",
             fetch_failures.select(

@@ -1,4 +1,4 @@
-"""Cut the fixed cost a reused PySpark Python worker pays between tasks.
+"""Cut the fixed cost a PySpark Python worker pays per process and between tasks.
 
 Between any two tasks a reused worker runs ``gc.collect()``
 (``pyspark.daemon``) and then ``importlib.invalidate_caches()``
@@ -11,12 +11,20 @@ Measured on a 4-core x86 VM, a no-op task costs ~0.25 CPU-s, so a 64-task
 stage costs ~4 s. This is most of a small crawl round's commit, because the
 seen-filter fold runs one Python task per bucket.
 
-:func:`tune` runs once per worker process, when the engine's first UDF there
-imports this package. After it, a zip importer re-reads its archive only when
-the file's mtime or size changed. The objects alive at that point, the
-imported libraries included, move to the collector's permanent generation
+:func:`tune` makes a zip importer re-read its archive only when the file's
+mtime or size changed, and moves the objects alive at that point, the
+imported libraries included, to the collector's permanent generation
 (``gc.freeze``), so the per-task collection only walks what later tasks
-allocate. Outside a PySpark worker it does nothing.
+allocate. It runs once per process and does nothing outside a PySpark
+worker or daemon.
+
+In a session that ``session.get_spark`` built, it runs once, in the
+package's daemon (:data:`DAEMON_MODULE`), before the daemon forks its
+first worker: every worker then starts with the libraries imported and the
+patch and the freeze in place. The call in the package's ``__init__`` is the
+fallback for sessions that ``get_spark`` did not build, whose workers fork
+from the stock ``pyspark.daemon``: there it runs when the engine's first UDF
+in a worker imports the package. In a preloaded worker it is a no-op.
 """
 
 from __future__ import annotations
@@ -26,7 +34,11 @@ import os
 import sys
 import zipimport
 
-_WORKER_MAINS = ("pyspark.daemon", "pyspark.worker")
+#: the preloading worker daemon that ``session.get_spark`` selects
+DAEMON_MODULE = "ethereum_raw_data_crawler_spark.daemon"
+_WORKER_MAINS = ("pyspark.daemon", "pyspark.worker", DAEMON_MODULE)
+#: :data:`DAEMON_MODULE` in the package daemon and every worker it forks
+forked_from: str | None = None
 
 
 def _in_pyspark_worker() -> bool:

@@ -20,6 +20,22 @@ Why the less obvious confs are set:
   about 135 distinct generated classes; at the default 100 the cache
   evicts them before the next round, which then pays 0.5–0.9 s of driver
   compile again. 1000 holds several rounds' worth.
+* ``spark.python.daemon.module=ethereum_raw_data_crawler_spark.daemon`` —
+  Python workers fork from a daemon that has already imported numpy,
+  pandas, pyarrow and the engine's UDF modules, and frozen them out of the
+  collector (daemon.py). With the stock daemon each worker imported them
+  on its own: after ``CrawlEngine.create`` on the bulk-pop benchmark
+  inputs (4 cores) the process tree held 2 daemons and 12 workers with a
+  Python PSS of 846 MB.
+* ``spark.executorEnv.PYTHONPATH`` = the directory that holds the package —
+  Spark starts that daemon with ``python -m`` before any task has shipped
+  a ``--py-files`` archive, so the package must be importable from the
+  executor's own Python path. Local mode would find it anyway (the JVM
+  runs from the driver's working directory), but ``local-cluster``
+  executor JVMs run from their own work directories. On a real cluster
+  the package must be installed (or on that path) on every executor.
+  Sessions built elsewhere (a harness's, a notebook's) keep the stock
+  daemon; the package's import hook tunes their workers (pyworker.py).
 """
 
 from __future__ import annotations
@@ -27,6 +43,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from ethereum_raw_data_crawler_spark.pyworker import DAEMON_MODULE
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -89,6 +107,11 @@ def get_spark(
         )  # only meaningful under local-cluster / a real cluster manager
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.python.daemon.module", DAEMON_MODULE)
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     )
     # single-node shuffle files on tmpfs: local-mode shuffles through one
     # shared disk otherwise, which serializes multi-core runs (a real

@@ -79,8 +79,17 @@ def _write_pandas(absdir: str, pdf, spark_schema: T.StructType) -> None:
     pq.write_table(table, os.path.join(absdir, "part-00000.parquet"))
 
 
-def _empty(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    return spark.createDataFrame([], schema)
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A zero-row frame of ``schema`` built on the JVM (a ``LocalRelation``):
+    it plans as an empty ``LocalTableScan`` of 0 partitions and runs no
+    Python. ``createDataFrame([], schema)`` builds a Python RDD instead,
+    whose first job starts a Python daemon and workers of its own to
+    produce no rows."""
+    jss = spark._jsparkSession
+    jdf = jss.createDataFrame(
+        spark._jvm.java.util.ArrayList(), jss.parseDataType(schema.json())
+    )
+    return DataFrame(jdf, spark)
 
 
 class CommitConflict(RuntimeError):
@@ -191,7 +200,7 @@ class SnapshotStore:
     ) -> DataFrame:
         dirs = [os.path.join(self.root, f["dir"]) for f in frags]
         if not dirs:
-            return _empty(spark, schema)
+            return empty_frame(spark, schema)
         return spark.read.schema(schema).parquet(*dirs)
 
     def read(

@@ -74,6 +74,59 @@ def test_partitioned_filter_aligned_probe(spark, tmp_path, monkeypatch, kind, n)
     assert n_maybe_absent / m < 0.05  # FPR at the design point
 
 
+def _kernel_split(pf, keys):
+    """The set of ``keys`` that ``pf``'s bucket kernels call maybe-seen,
+    computed driver-side from the bucket files: what the probe answers."""
+    keys = np.asarray(keys, dtype=np.int64)
+    bks = np.mod(keys, pf.n_buckets)
+    maybe = set()
+    for b, e in pf.buckets.items():
+        if e.get("file"):
+            sel = keys[bks == b]
+            f = pf._read(os.path.join(pf.dir, e["file"]), e)
+            maybe |= set(sel[f.contains_many(sel)].tolist())
+    return maybe
+
+
+@pytest.mark.parametrize("mode", ["broadcast", "aligned"])
+@pytest.mark.parametrize("kind", KINDS)
+def test_probe_split_matches_the_kernels(spark, tmp_path, monkeypatch, kind, mode):
+    """An empty filter tags every row definitely new without probing; a
+    filled one ships only the key column to Python and splits exactly as
+    the bucket kernels answer, in both probe modes. Every column of the
+    candidates survives either branch."""
+    n, B = 4_000, 8
+    pf = SEEN_FILTERS[kind].create(
+        str(tmp_path), n_buckets=B, expected_keys=4 * n, rnd=-1
+    )
+    cands = spark.range(2 * n).select(
+        F.xxhash64("id").alias("url_hash"), F.col("id").cast("string").alias("tag")
+    )
+    scratch = []
+    new_def, maybe = pf.probe_split(cands, "url_hash", spark, scratch=scratch)
+    assert pf.last_probe_mode == "empty"
+    assert maybe.count() == 0 and new_def.count() == 2 * n
+    assert set(new_def.columns) == {"url_hash", "tag"}
+    assert dict(scratch[0].groupBy("_maybe_seen").count().collect()) == {False: 2 * n}
+
+    pf.add_keys(cands.where(F.col("id") < n), "url_hash", 0)
+    if mode == "aligned":
+        monkeypatch.setattr(gates, "FILTER_BROADCAST_MAX", 0)
+    scratch = []
+    new_def, maybe = pf.probe_split(cands, "url_hash", spark, scratch=scratch)
+    assert pf.last_probe_mode == mode
+    tagged_plan = scratch[0]._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in tagged_plan
+    got = {r["url_hash"]: r["tag"] for r in maybe.collect()}
+    got_new = {r["url_hash"] for r in new_def.collect()}
+    for df in scratch:
+        df.unpersist()
+    want = _kernel_split(pf, [r["url_hash"] for r in cands.collect()])
+    assert set(got) == want and n <= len(want) < 2 * n  # no false negatives
+    assert got_new.isdisjoint(want) and len(got_new) + len(want) == 2 * n
+    assert all(got[k] is not None for k in got)
+
+
 #: starting bucket sizes whose design capacity 1,000 keys overrun
 TINY = {"bloom": {"n_bits": 256, "k": 3}, "cuckoo": {"nb": 256}}
 

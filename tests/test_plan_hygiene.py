@@ -6,9 +6,12 @@
 * corpus fetch reads only the buckets the popped batch hashes into
   (partition pruning visible in the scan);
 * a small round's fixed cost stays small: its job and task counts, the
-  seen-filter fold's width, and the per-engine constants.
+  seen-filter fold's width, and the per-engine constants;
+* every url is canonicalized once (one ArrowEvalPython), and an empty
+  frame runs no Python.
 """
 
+import re
 import uuid
 
 import pandas as pd
@@ -24,6 +27,12 @@ from ethereum_raw_data_crawler_spark.operators.priority_pop import pop_batch
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _python_evals(plan: str) -> set[str]:
+    """The distinct ArrowEvalPython nodes of ``plan``; a cached subplan that
+    several branches read prints once per branch."""
+    return set(re.findall(r"ArrowEvalPython \[.*?\], \[.*?\]", plan))
 
 
 def _counted(spark, fn):
@@ -91,6 +100,45 @@ def test_no_row_at_a_time_python_in_udf_path(spark):
     plan = _plan(out)
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan
+
+
+def test_corpus_landing_and_discover_canonicalize_once(spark, t1_tables, tmp_path):
+    """The optimizer must not inline the canonicalizer into the pushed-down
+    ``url_canon IS NOT NULL`` filter: that plans a second ArrowEvalPython,
+    which canonicalizes every url again on a second worker per task."""
+    from ethereum_raw_data_crawler_spark.plans.rounds import corpus_frame
+
+    corpus = corpus_frame(spark.createDataFrame(t1_tables["pages"]), 8)
+    corpus.collect()
+    assert len(_python_evals(_plan(corpus))) == 1
+    eng = _t1_engine(spark, t1_tables, str(tmp_path / "store"), seen_filter=None)
+    cands = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "url": ["HTTP://H1.example/a/../b", "http://h1.example/b", "bad"],
+                "priority": [3, 1, 2],
+            }
+        )
+    )
+    rows, stats = eng._discover(cands, 1, eng.seen())
+    assert rows.count() == stats["discovered"] == 1
+    plan = _plan(rows)
+    eng._drain_scratch()
+    assert len(_python_evals(plan)) == 1, plan
+
+
+def test_empty_frame_runs_no_python(spark):
+    """The store's empty-table reads, ``create``'s missing fetch failures and
+    the CLI's missing politeness dim plan as an empty JVM relation."""
+    from ethereum_raw_data_crawler_spark.schemas import FETCH_FAILURES
+    from ethereum_raw_data_crawler_spark.sources.tablestore import empty_frame
+
+    df = empty_frame(spark, FETCH_FAILURES)
+    assert df.schema == FETCH_FAILURES
+    assert df.rdd.getNumPartitions() == 0
+    assert df.count() == 0
+    plan = _plan(df)
+    assert "ExistingRDD" not in plan and "Python" not in plan, plan
 
 
 def test_pop_politeness_is_broadcast_join(spark, t1_tables):

@@ -1,6 +1,7 @@
 """The PySpark worker tuning in pyworker.py: on in a worker once the package
 is imported there, off everywhere else, and a zip importer still re-reads an
-archive that changed."""
+archive that changed; and the package daemon that ``get_spark`` selects
+forks workers that start with all of it done."""
 
 import os
 import zipfile
@@ -60,3 +61,32 @@ def test_worker_is_tuned_once_the_package_is_imported(spark):
     rows = spark.range(1).mapInPandas(probe, "tuned boolean, frozen long").collect()
     assert rows[0]["tuned"]
     assert rows[0]["frozen"] > 0
+
+
+def test_worker_forks_warm_from_the_package_daemon(spark):
+    def probe(batches):
+        import gc
+        import sys
+
+        import pandas as pd
+
+        warm = "pandas" in sys.modules and "pyarrow" in sys.modules
+        from ethereum_raw_data_crawler_spark import pyworker
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {
+                "warm": [warm],
+                "frozen": [gc.get_freeze_count()],
+                "forked_from": [pyworker.forked_from],
+                "main": [sys.modules["__main__"].__spec__.name],
+            }
+        )
+
+    rows = spark.range(1).mapInPandas(
+        probe, "warm boolean, frozen long, forked_from string, main string"
+    ).collect()
+    assert rows[0]["warm"]
+    assert rows[0]["frozen"] > 0
+    assert rows[0]["forked_from"] == rows[0]["main"] == pyworker.DAEMON_MODULE
