@@ -42,15 +42,13 @@ def cmd_crawl(args) -> int:
     seeds = spark.read.parquet(args.seeds)
     if args.robots:
         robots = spark.read.parquet(args.robots)
-    else:  # allow everything
-        hosts = pages.selectExpr(
-            "regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/]+)', 1) AS host"
-        ).distinct()
-        robots = hosts.selectExpr(
-            "lower(host) AS host",
+    else:  # allow everything: one row per host, lowercased before the
+        # distinct (a host spelled twice would join each candidate twice)
+        robots = pages.selectExpr(
+            "lower(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/]+)', 1)) AS host",
             "true AS allowed",
             "cast(null as string) AS disallow_prefix",
-        )
+        ).distinct()
     if args.politeness:
         politeness = spark.read.parquet(args.politeness)
     else:
@@ -266,4 +264,12 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    try:
+        sys.exit(main())
+    finally:
+        # a session still running at exit makes local-cluster workers
+        # relaunch executors; main() itself runs on the tests' shared one
+        from pyspark.sql import SparkSession
+
+        if session := SparkSession.getActiveSession():
+            session.stop()

@@ -8,7 +8,7 @@ internal/application/service/crawler_service.go:229-370):
       -> eligibility filter (retry/skip gate, scheduler_service.go:291-303)
       -> per-host politeness budget + (priority, host, discovery_ts, url)
          priority pop               (crawler_service.go:251-307 recast)
-      -> fetch = partition-pruned join against the bucketed corpus
+      -> fetch = popped rows moved to their corpus buckets, joined there
          (GetBlockByNumber, ethereum_service.go:142-185 recast; failure
          injection stands in for RPC errors)
       -> extract text + outlinks    (convertBlock, ethereum_service.go:421-456)
@@ -42,13 +42,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ethereum_raw_data_crawler_spark import gates
 from ethereum_raw_data_crawler_spark.config import CrawlConfig
 from ethereum_raw_data_crawler_spark.deploy import ship_package
 from ethereum_raw_data_crawler_spark.functions.spark_udfs import (
+    FETCH_ADDS,
     canonicalize_udf,
-    extract_page_udf,
+    fetch_buckets,
     with_host_and_path,
 )
 from ethereum_raw_data_crawler_spark.functions.urls import (
@@ -85,17 +87,6 @@ from ethereum_raw_data_crawler_spark.sources.egress import EgressWriter
 from ethereum_raw_data_crawler_spark.sources.tablestore import (
     SnapshotStore,
     empty_frame,
-)
-
-CORPUS = T.StructType(
-    [
-        T.StructField("url_canon", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), False),
-        T.StructField("lang", T.StringType(), False),
-    ]
 )
 
 _TABLES = {
@@ -163,7 +154,6 @@ def corpus_frame(pages: DataFrame, n_buckets: int) -> DataFrame:
 class _Pop:
     rows: DataFrame  # popped frontier rows with a dense pop_seq
     n: int
-    buckets: list[int]  # the corpus buckets the batch hashes into
     keys: pd.DataFrame | None  # popped url_canon, collected for small batches
 
 
@@ -385,11 +375,10 @@ class CrawlEngine:
     def _read_constants(self) -> None:
         """What every round derives from tables only ``create`` writes,
         computed once when the engine opens instead of in each round: the
-        corpus frame, whose bucket directories a fresh read would re-list
-        (a parallel listing job past Spark's 32-path threshold), and the
+        corpus files of each bucket, which the fetch reads itself, and the
         pop's rank bound (operators/priority_pop.py::pop_cap, an aggregate
         over the politeness dim)."""
-        self._corpus = self.store.read(self.spark, "corpus", CORPUS)
+        self._corpus_files = self.store.partition_files("corpus")
         self._pop_cap = pop_cap(
             self._dim("politeness", POLITENESS),
             self.cfg.batch_size,
@@ -777,7 +766,7 @@ class CrawlEngine:
     def _pop(self, rnd: int) -> _Pop:
         """Per-host politeness budgets + the (priority, host,
         discovery_ts, url) priority pop (crawler_service.go:251-307
-        recast), counted per corpus bucket in one job."""
+        recast), counted in one job."""
         popped = pop_batch(
             self._eligible(rnd),
             self._dim("politeness", POLITENESS),
@@ -787,134 +776,65 @@ class CrawlEngine:
             cap=self._pop_cap,
         )
         if self.cfg.batch_size <= gates.DRIVER_COLLECT_MAX:
-            # one job collects the popped keys: their count, the corpus
-            # buckets they hash into, and the commit's frontier delete keys
-            keys = popped.select("url_canon", "url_hash").toPandas()
-            hashes = keys["url_hash"].to_numpy(dtype=np.int64)
-            buckets = np.unique(np.mod(hashes, self.n_buckets))  # = pmod
-            return _Pop(popped, len(keys), buckets.tolist(), keys[["url_canon"]])
-        # one job: popped count + the corpus buckets it hashes into
-        bucket_counts = (
-            popped.groupBy(
-                F.pmod("url_hash", F.lit(self.n_buckets)).cast("int").alias("bucket")
-            )
-            .count()
-            .collect()
-        )
-        return _Pop(
-            popped,
-            int(sum(r["count"] for r in bucket_counts)),
-            sorted(r["bucket"] for r in bucket_counts),
-            None,
-        )
+            # one job collects the popped keys: their count and the
+            # commit's frontier delete keys
+            keys = popped.select("url_canon").toPandas()
+            return _Pop(popped, len(keys), keys)
+        return _Pop(popped, popped.count(), None)
 
     def _fetch(self, pop: _Pop) -> _Fetch:
-        """Fetch = partition-pruned corpus join + failure injection
-        (GetBlockByNumber, ethereum_service.go:142-185 recast), then the
-        parse (convertBlock, ethereum_service.go:421-456) of the fetched
-        rows, materialized in one job."""
-        # an empty pop reads no bucket and runs the same plan over no rows
-        buckets = ",".join(map(str, pop.buckets))
-        corpus_sel = self._corpus.where(
-            f"bucket in ({buckets})" if buckets else "false"
-        ).select("url_canon", "warc_ts", "html", "lang")
+        """Fetch = a bucket-aligned corpus read + failure injection
+        (GetBlockByNumber, ethereum_service.go:142-185 recast) and the
+        parse (convertBlock, ethereum_service.go:421-456), materialized in
+        one job: the slim popped rows move to the corpus's bucketing, and
+        functions/spark_udfs.py::fetch_buckets reads, joins and parses each
+        task's buckets, so the html is never shuffled. One plan at every
+        batch size: ``gates.FETCH_TASK_ROWS`` rows per task, up to one task
+        per bucket."""
         failures = self._dim("fetch_failures", FETCH_FAILURES)
-        popped = pop.rows
-        small = pop.n <= gates.SMALL_BATCH_MAX
-        # small pops broadcast (no corpus shuffle); large pops would
-        # serialize on the driver-side broadcast build — shuffle both
-        # sides, but pin the physical strategy to a SHUFFLED HASH join
-        # with the slim popped batch as build side: the default
-        # sort-merge plan SORTS the corpus side, and at 20M rows that
-        # side carries the html payload (~40 GB through sort buffers).
-        # Hashing the slim side instead skips that entirely — measured
-        # on the 20M fetch-join shape, 16 alternating legs in one
-        # session: SHJ wins 6/8 adjacent pairs, min 10.8 s vs 15.6 s,
-        # median 24.9 s vs 33.4 s (BENCH/BASELINE.md round 5). The
-        # build side must stay bounded by DATA volume, not cluster
-        # width: at the configured shuffle width alone a narrow
-        # cluster (or local[2]) gets batch/width-row hash builds —
-        # measured 4x+ round blowup at 20M popped / 2 partitions
-        # (10M-row builds thrash GC). Widening the exchange so each
-        # build holds <= gates.SHJ_BUILD_ROWS slim rows keeps every
-        # executor's hash map at low hundreds of MB no matter how
-        # many executors the job happens to get; the explicit
-        # repartition IS the join's exchange (it satisfies the hash
-        # distribution), so wide clusters pay nothing extra.
-        if small:
-            popped_side = F.broadcast(popped)
-        else:
-            width = gates.shj_width(
-                pop.n, int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            )
-            popped_side = popped.repartition(width, "url_canon").hint("shuffle_hash")
-        hits = (
-            corpus_sel.join(popped_side, "url_canon", "inner")
-            .join(F.broadcast(failures), "url_canon", "left")
-            .withColumn("attempt", F.col("retry_count") + 1)
+        popped = (
+            pop.rows.join(F.broadcast(failures), "url_canon", "left")
             .withColumn(
                 "fetch_failed",
                 F.coalesce(
-                    F.array_contains(F.col("fail_attempts"), F.col("attempt")),
+                    F.array_contains("fail_attempts", F.col("retry_count") + 1),
                     F.lit(False),
                 ),
             )
-            .withColumn("partition_id", F.spark_partition_id())
+            .drop("fail_attempts", "partition_id")
         )
-        # batch-size-gated materialization strategy: below ~2M popped
-        # rows the html of the hit set fits executor memory twice, and
-        # caching hits means the failed/miss branches and the parse
-        # all reuse one corpus join (the fast small-batch plan). Above
-        # that, a second multi-GB html cache is what made 32
-        # concurrent tasks spill where 8 did not — leave hits lazy and
-        # let the failed/miss branches recompute SLIM (column pruning
-        # keeps html out of those scans).
-        if pop.n <= gates.HITS_CACHE_MAX:
-            hits = hits.cache()
-            self._scratch.append(hits)
-        hit_keys = hits.select("url_canon")
-        if small:
-            hit_keys = F.broadcast(hit_keys)
-        misses = popped.join(hit_keys, "url_canon", "left_anti")
-        # error_class rides along for the class-specific backoff;
-        # misses (URL absent from the corpus) have no class -> default.
-        # pop_seq rides along for fetch_seq numbering.
-        frontier_cols = [f.name for f in FRONTIER.fields]
-        failed = (
-            hits.where(F.col("fetch_failed"))
-            .select(*frontier_cols, "error_class", "pop_seq")
-            .unionByName(
-                misses.select(*frontier_cols, "pop_seq").withColumn(
-                    "error_class", F.lit(None).cast("string")
-                )
+        B, conf = self.n_buckets, self.spark.conf
+        width = int(conf.get("spark.sql.shuffle.partitions"))
+        parts = max(1, min(-(-pop.n // gates.FETCH_TASK_ROWS), B, width))
+        schema = T.StructType(popped.schema.fields + T.StructType.fromDDL(FETCH_ADDS).fields)
+        out_arrow = to_arrow_schema(schema)
+        files = self._corpus_files
+        max_rows = int(conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        out = (
+            popped.repartition(parts, F.pmod(F.col("url_hash"), F.lit(B)))
+            .mapInArrow(
+                lambda it: fetch_buckets(it, files, B, out_arrow, max_rows), schema
             )
-        )
-
-        # the round's heavy materialization: the fetched rows with their
-        # parse results. html crosses the Arrow socket once and is cached
-        # once. Whether hits was ALSO cached is the HITS_CACHE_MAX gate
-        # above: small batches reuse one corpus join everywhere, large
-        # batches recompute the slim branches instead of spilling a second
-        # 10^7-row html cache.
-        fetched = (
-            hits.where(~F.col("fetch_failed"))
-            .withColumn("ext", extract_page_udf("html", "url_canon"))
+            .withColumn("partition_id", F.spark_partition_id())
             .cache()
         )
-        self._scratch.append(fetched)
+        self._scratch.append(out)
+        ok = F.col("found") & ~F.col("fetch_failed")
+        fetched = out.where(ok)
+        # error_class rides along for the class-specific backoff; misses
+        # (URL absent from the corpus) have no class -> default. pop_seq
+        # rides along for fetch_seq numbering.
+        failed = out.where(~ok).select(
+            *[f.name for f in FRONTIER.fields],
+            F.when(F.col("found"), F.col("error_class")).alias("error_class"),
+            "pop_seq",
+        )
         # one job: materialize fetch+parse AND the per-partition lineage
         part_counts = (
             fetched.groupBy("partition_id").agg(F.count("*").alias("fetched")).collect()
         )
         n_fetched = int(sum(r["fetched"] for r in part_counts))
-        n_errors = pop.n - n_fetched
-        if n_errors:
-            # read by the fetch_seq numbering and the frontier delta; cached,
-            # the misses anti-join and its hit-key broadcast run once. Its
-            # size is the round's error count.
-            failed = failed.cache()
-            self._scratch.append(failed)
-        return _Fetch(fetched, failed, part_counts, n_fetched, n_errors)
+        return _Fetch(fetched, failed, part_counts, n_fetched, pop.n - n_fetched)
 
     def _number_fetched(self, fetch: _Fetch) -> DataFrame:
         """The fetched rows with ``seq`` = fetch_seq: the dense rank of
@@ -978,10 +898,9 @@ class CrawlEngine:
             F.col("partition_id").cast("int").alias("partition_id"),
         )
         # zero-error rounds (the production common case, and provable here
-        # from counts already in hand): the failed/miss branches are empty,
-        # and UNIONing them anyway would re-evaluate the corpus join twice
-        # (slim, but ~20-30 s each at 20M popped) just to append no rows —
-        # measured as the bulk of a 70 s commit_frontier phase at 20M.
+        # from counts already in hand): the failed branch is empty, and
+        # UNIONing it anyway would scan the fetch cache again to append no
+        # rows.
         if not fetch.n_errors:
             return fetched_upd.unionByName(discovered)
         # class-specific backoff (reference: isRetryableError +
@@ -1021,10 +940,7 @@ class CrawlEngine:
             F.lit(rnd).cast("int").alias("round"),
             # lineage: partition_id = "the fetch-job partition that produced
             # this row's bytes". Failed/missed rows produced none — NULL,
-            # like discovered rows. (Taking spark_partition_id() from the
-            # failed branch's re-evaluation would record a DIFFERENT job's
-            # layout than the fetched rows' cached one — inconsistent
-            # lineage under AQE; misses would carry a stale prior-round id.)
+            # like discovered rows.
             F.lit(None).cast("int").alias("partition_id"),
         )
         return fetched_upd.unionByName(failed_upd).unionByName(discovered)

@@ -416,15 +416,16 @@ def ann_lsh_indexed_topk(spark, sf):
         float(x)
         for x in emb.where(F.col("vec_id") == 0).first()["embedding"]
     ]
-    root = tempfile.mkdtemp(prefix="ann_lsh_idx_")
-    idx = AnnIndex.build_lsh(
-        emb.where(F.col("vec_id") != 0),
-        root,
-        dim=_EMB_DIM,
-        n_planes=_N_PLANES,
-        seed=7,
-    )
-    return idx.topk(spark, qv, k=10)
+    with tempfile.TemporaryDirectory(prefix="ann_lsh_idx_") as root:
+        idx = AnnIndex.build_lsh(
+            emb.where(F.col("vec_id") != 0),
+            root,
+            dim=_EMB_DIM,
+            n_planes=_N_PLANES,
+            seed=7,
+        )
+        # topk is lazy: hold its rows before the index files go
+        return idx.topk(spark, qv, k=10).localCheckpoint()
 
 
 # --------------------------------------------------------------------------
@@ -566,11 +567,12 @@ def ann_ivf_indexed_topk(spark, sf):
     qv = [
         float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]
     ]
-    root = tempfile.mkdtemp(prefix="ann_ivf_idx_")
-    idx = AnnIndex.build_ivf(
-        emb.where(F.col("vec_id") != 0), root, centroids=cents
-    )
-    return idx.topk(spark, qv, k=10, n_probe=_N_PROBE)
+    with tempfile.TemporaryDirectory(prefix="ann_ivf_idx_") as root:
+        idx = AnnIndex.build_ivf(
+            emb.where(F.col("vec_id") != 0), root, centroids=cents
+        )
+        # topk is lazy: hold its rows before the index files go
+        return idx.topk(spark, qv, k=10, n_probe=_N_PROBE).localCheckpoint()
 
 
 # --------------------------------------------------------------------------

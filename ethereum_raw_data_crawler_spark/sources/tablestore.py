@@ -35,6 +35,7 @@ else:
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import uuid
@@ -194,6 +195,19 @@ class SnapshotStore:
                 os.path.join(self.root, f["dir"]), format="parquet"
             ).count_rows()
         return total
+
+    def partition_files(self, name: str) -> dict[str, list[str]]:
+        """``{partition value: [parquet paths]}`` of table ``name``'s one
+        ``partition_by`` column, from directory listings (no Spark job):
+        Iceberg's ``scan(filter).plan_files()``."""
+        out: dict[str, list[str]] = {}
+        for f in self.manifest()["tables"][name]["fragments"]:
+            (col,) = f["partition_by"]
+            pattern = os.path.join(self.root, f["dir"], f"{col}=*", "*.parquet")
+            for path in sorted(glob.glob(pattern)):
+                value = os.path.basename(os.path.dirname(path))[len(col) + 1 :]
+                out.setdefault(value, []).append(path)
+        return out
 
     def _read_fragments(
         self, spark: SparkSession, frags: list[dict], schema: T.StructType

@@ -58,6 +58,12 @@ def test_cli_crawl_without_dims_defaults(spark, tmp_path, capsys):
     assert rc == 0
     line = json.loads(capsys.readouterr().out.strip().splitlines()[0])
     assert line["fetched"] > 0
+    # the allow-all robots dim has one row per host, so the seeds' case and
+    # port variants of a host each enter the frontier once
+    from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
+
+    frontier = CrawlEngine.resume(spark, str(tmp_path / "store2")).frontier()
+    assert frontier.count() == frontier.select("url_canon").distinct().count()
 
 
 def test_cli_hybrid_dispatch(spark, tmp_path, capsys):

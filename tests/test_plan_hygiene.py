@@ -3,8 +3,9 @@
 * no row-at-a-time Python (BatchEvalPython) anywhere on the executor path —
   only Arrow-batched pandas UDFs (ArrowEvalPython) and MapInPandas;
 * the politeness dim joins broadcast, never shuffles;
-* corpus fetch reads only the buckets the popped batch hashes into
-  (partition pruning visible in the scan);
+* the fetch is one bucket-aligned plan at every batch size: the popped
+  rows move to the corpus buckets, and a fetch opens only the files of
+  the buckets its batch hashes into;
 * a small round's fixed cost stays small: its job and task counts, the
   seen-filter fold's width, and the per-engine constants;
 * every url is canonicalized once (one ArrowEvalPython), and an empty
@@ -257,28 +258,50 @@ def test_pop_large_k_distributed_path_matches_small_k(spark, t1_tables):
 
 
 def test_corpus_fetch_prunes_buckets(spark, t1_tables, tmp_path):
-    """The fetch join must NOT scan the whole corpus: the parquet scan of
-    the engine's corpus frame, read once per engine, takes the partition
-    filter listing only the popped batch's buckets."""
-    from ethereum_raw_data_crawler_spark.plans.rounds import CORPUS, CrawlEngine
+    """The store lists exactly the corpus files under each ``bucket=``
+    directory, and a round's fetch opens files only of the buckets its
+    batch hashes into: with every other bucket's files deleted, it fetches
+    the same rows."""
+    import glob
+    import os
 
-    tabs = t1_tables
-    eng = CrawlEngine.create(
-        spark,
-        str(tmp_path / "store"),
-        spark.createDataFrame(tabs["pages"]),
-        spark.createDataFrame(tabs["seeds"]),
-        spark.createDataFrame(tabs["robots"]),
-        spark.createDataFrame(tabs["politeness"]),
-        None,
-        CrawlConfig(batch_size=10),
-        n_buckets=16,
+    n_buckets = 16
+    eng = _t1_engine(
+        spark, t1_tables, str(tmp_path / "store"), seen_filter=None, n_buckets=n_buckets
     )
-    sel = eng._corpus.where("bucket in (1,3)")
-    plan = _plan(sel)
-    n_total = eng.store.read(spark, "corpus", CORPUS).count()
-    assert sel.count() < n_total
-    assert "bucket" in plan  # partition filter reached the scan
+    files = eng.store.partition_files("corpus")
+    on_disk: dict[str, list[str]] = {}
+    for path in glob.glob(str(tmp_path / "store/data/corpus/*/bucket=*/*.parquet")):
+        on_disk.setdefault(path.split("bucket=")[1].split(os.sep)[0], []).append(path)
+    assert {b: sorted(p) for b, p in files.items()} == {
+        b: sorted(p) for b, p in on_disk.items()
+    }
+    assert len(files) == n_buckets
+
+    pop = eng._pop(1)
+    hit = {
+        r["b"]
+        for r in pop.rows.select(F.pmod("url_hash", F.lit(n_buckets)).alias("b"))
+        .distinct()
+        .collect()
+    }
+    assert 0 < len(hit) < n_buckets
+
+    def fetched_rows():
+        fetch = eng._fetch(pop)
+        rows = sorted(
+            (r["url_canon"], r["html"], r["ext"]["text"]) for r in fetch.fetched.collect()
+        )
+        eng._drain_scratch()
+        return fetch.n_fetched, rows
+
+    want = fetched_rows()
+    assert want[0] > 0
+    for b, paths in files.items():
+        if int(b) not in hit:
+            for path in paths:
+                os.remove(path)
+    assert fetched_rows() == want
 
 
 def test_no_row_at_a_time_udf_in_package_source():
@@ -339,25 +362,6 @@ def test_every_registry_query_avoids_row_python(spark):
         assert "BatchEvalPython" not in plan, name
 
 
-def test_shj_width_bounds_build_partition():
-    """The shuffled-hash fetch join's build side must be bounded by DATA
-    volume, not cluster width: at any (n_popped, conf_width) combination
-    no partition may hold more than SHJ_BUILD_ROWS build rows, and wide
-    sessions must keep their configured parallelism."""
-    from ethereum_raw_data_crawler_spark.gates import SHJ_BUILD_ROWS, shj_width
-
-    # narrow session, huge batch: width comes from the data
-    assert shj_width(20_000_000, 2) == -(-20_000_000 // SHJ_BUILD_ROWS)
-    # wide session, same batch: session width wins (no lost parallelism)
-    assert shj_width(20_000_000, 96) == 96
-    # every combination respects the bound
-    for rows in (150_000, 1_500_000, 1_500_001, 7_777_777, 100_000_000):
-        for w in (2, 8, 32, 96):
-            parts = shj_width(rows, w)
-            assert -(-rows // parts) <= SHJ_BUILD_ROWS
-            assert parts >= w
-
-
 def test_default_driver_memory_fits_the_host(tmp_path):
     """The driver heap default is 60% of physical memory, capped at 48g:
     a fixed 48g heap let the local-mode JVM outgrow a 15 GB host and be
@@ -374,32 +378,53 @@ def test_default_driver_memory_fits_the_host(tmp_path):
     assert default_driver_memory(str(tmp_path / "missing")) == "48g"
 
 
-def test_large_pop_fetch_join_is_shj_with_widened_exchange(spark, t1_tables, tmp_path):
-    """Plan the fetch join the engine's ``_fetch`` builds, on both sides of
-    the small-batch gate: (a) a small pop broadcasts the popped side;
-    (b) a large one is a ShuffledHashJoin with the slim popped side as
-    build, and its exchange is hash-partitioned wider than the session
-    shuffle width when the batch demands it."""
+def test_fetch_is_one_bucket_aligned_plan_at_every_batch_size(
+    spark, t1_tables, tmp_path
+):
+    """The fetch ``_fetch`` builds is one plan at every pop size: one
+    Python map (MapInArrow) and no corpus scan in the JVM, so nothing
+    exchanges or broadcasts corpus rows. Its only shuffle moves the popped
+    rows onto the corpus bucketing, ``hashpartitioning(pmod(url_hash,
+    n_buckets), parts)``, with ``parts`` = ceil(n / FETCH_TASK_ROWS)
+    clamped to [1, min(n_buckets, shuffle width)]; at one part it is a
+    single-partition exchange."""
     import dataclasses
-    import re
 
     from ethereum_raw_data_crawler_spark import gates
 
-    eng = _t1_engine(spark, t1_tables, str(tmp_path / "store"), seen_filter=None)
+    n_buckets = 16
+    eng = _t1_engine(
+        spark, t1_tables, str(tmp_path / "store"), seen_filter=None, n_buckets=n_buckets
+    )
+    # checkpointed, the popped rows plan as a scan, so every exchange in
+    # the plan below is the fetch's own
     pop = eng._pop(1)
-    small = _plan(eng._fetch(pop).failed)
-    assert "BroadcastHashJoin" in small and "ShuffledHashJoin" not in small, small
-
-    # the same rows counted as a 20M-row pop on this 8-wide session:
-    # the exchange must widen to hold <= SHJ_BUILD_ROWS build rows each
-    conf_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    want = gates.shj_width(20_000_000, conf_width)
-    assert want > conf_width
-    large = _plan(eng._fetch(dataclasses.replace(pop, n=20_000_000)).failed)
-    eng._drain_scratch()
-    assert "ShuffledHashJoin" in large, large
-    widths = re.findall(r"hashpartitioning\(url_canon[^,]*, (\d+)\)", large)
-    assert str(want) in widths, large
+    pop = dataclasses.replace(pop, rows=pop.rows.localCheckpoint())
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert width < n_buckets
+    for n, parts in (
+        (pop.n, 1),
+        (2 * gates.FETCH_TASK_ROWS + 1, 3),
+        (20_000_000, width),
+    ):
+        fetch = eng._fetch(dataclasses.replace(pop, n=n))
+        plan = _plan(fetch.fetched) + _plan(fetch.failed)
+        eng._drain_scratch()
+        assert len(set(re.findall(r"MapInArrow [^\n]*", plan))) == 1, plan
+        # the only file scan is the fetch_failures dim's
+        scans = {re.sub(r"#\d+", "", c) for c in re.findall(r"FileScan parquet \[(.*?)\]", plan)}
+        assert scans == {"url_canon,fail_attempts,error_class"}, plan
+        exchanges = {
+            m.group(1)
+            for m in re.finditer(r"(?<!Broadcast)Exchange (.+?), [A-Z_]+, \[plan_id", plan)
+        }
+        assert len(exchanges) == 1, exchanges
+        (ex,) = exchanges
+        if parts == 1:  # Spark plans a one-partition repartition as this
+            assert ex == "SinglePartition", ex
+            continue
+        m = re.fullmatch(r"hashpartitioning\(pmod\(url_hash#\d+L, (\d+)\), (\d+)\)", ex)
+        assert m and (int(m[1]), int(m[2])) == (n_buckets, parts), ex
 
 
 def test_get_spark_sets_the_small_round_confs(spark):
@@ -411,12 +436,13 @@ def test_get_spark_sets_the_small_round_confs(spark):
 
 
 #: a t1 round (batch 50, Bloom filter of 64 buckets) on the 8-wide test
-#: session runs 28 jobs and 123 tasks; it ran 33 and 270 before cached
+#: session runs 23 jobs and 60 tasks; it ran 33 and 270 before cached
 #: shuffles coalesced, the filter folded in O(cores) tasks and the pop's
-#: constants were computed once per engine, and 29 and 126 while
-#: discovery still cached the robots-gated candidates
-ROUND_JOBS_MAX = 28
-ROUND_TASKS_MAX = 160
+#: constants were computed once per engine, 29 and 126 while discovery
+#: still cached the robots-gated candidates, and 28 and 123 while the
+#: fetch joined a pruned corpus scan
+ROUND_JOBS_MAX = 23
+ROUND_TASKS_MAX = 60
 
 
 def test_small_round_job_and_task_counts(spark, t1_tables, tmp_path):
@@ -478,7 +504,8 @@ def test_pop_cap_is_computed_once_per_engine(spark, t1_tables, tmp_path, monkeyp
     again, again_jobs, _ = _counted(spark, lambda: eng._pop(1))
     eng._drain_scratch()
     assert len(calls) == 1
-    assert (again.n, again.buckets) == (first.n, first.buckets)
+    assert again.n == first.n
+    assert again.keys.equals(first.keys)
     assert again_jobs <= first_jobs
     rounds.CrawlEngine.resume(spark, root)
     assert len(calls) == 2
