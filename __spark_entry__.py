@@ -15,7 +15,9 @@ tests/test_engine_oracle_equivalence.py).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
 import tempfile
 from collections.abc import Callable
@@ -44,6 +46,8 @@ def _crawl_store(spark: SparkSession):
         relaxed = tabs["politeness"].copy()
         relaxed["budget_per_round"] = 50
         root = tempfile.mkdtemp(prefix="entry_crawl_")
+        # the engine's frames read the store lazily until the process ends
+        atexit.register(shutil.rmtree, root, True)
         eng = CrawlEngine.create(
             spark,
             root,

@@ -61,7 +61,6 @@ def cmd_crawl(args) -> int:
         spark, args.store, pages, seeds, robots, politeness, None, cfg,
         egress_dir=args.egress_dir,
         track_host_graph=args.track_host_graph,
-        seen_filter=args.seen_filter,
     )
     stats = eng.run(max_rounds=args.rounds)
     for s in stats:
@@ -147,8 +146,7 @@ def cmd_delete(args) -> int:
 
 def cmd_forget(args) -> int:
     """Unlearn URLs from the seen set (takedown follow-up / recrawl-TTL):
-    deletes the seen rows and — when the store was created with
-    --seen-filter cuckoo — removes the keys from the prefilter so a
+    deletes the seen rows and rebuilds the Bloom buckets they hash to, so a
     re-discovery rides the definitely-new fast path again."""
     from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
 
@@ -156,8 +154,7 @@ def cmd_forget(args) -> int:
     eng = CrawlEngine.resume(spark, args.store)
     urls = [u.strip() for u in open(args.urls) if u.strip()]
     n = eng.forget_urls(urls)
-    print(json.dumps({"forgotten": n, "requested": len(urls),
-                      "filter": eng.seen_filter}))
+    print(json.dumps({"forgotten": n, "requested": len(urls)}))
     return 0
 
 
@@ -208,9 +205,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--default-budget", type=int, default=5)
     c.add_argument("--egress-dir", default=None,
                    help="publish per-page events here after each commit")
-    c.add_argument("--seen-filter", choices=("bloom", "cuckoo"), default="bloom",
-                   help="seen-set prefilter family: bloom (9.6 bits/URL) or "
-                        "cuckoo (deletable, ~80x lower FPR, ~1.9x bytes)")
     c.add_argument("--track-host-graph", action="store_true",
                    help="append the per-round host link graph (rescore input)")
     c.set_defaults(fn=cmd_crawl)

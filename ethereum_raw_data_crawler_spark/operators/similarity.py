@@ -211,7 +211,7 @@ class AnnIndex:
     that the scan touches only probed partitions).
 
     Rebuilds follow the same snapshot commit protocol as every table in
-    the store (sources/tablestore.py:143, operators/partitioned_filter.py): each
+    the store (sources/tablestore.py:143, operators/bloom.py): each
     build writes a fresh ``v-NNNNNN/`` directory (data + model + meta)
     and only then swaps the ``current.json`` pointer into place with an
     atomic temp + ``os.replace``. A crash anywhere mid-rebuild leaves at
@@ -287,7 +287,7 @@ class AnnIndex:
     def _publish(cls, root: str, version: int) -> None:
         """The commit point: one atomic rename, same as the store's
         manifest swap. GC runs after the swap (same placement as
-        PartitionedFilter.commit -> _gc, partitioned_filter.py)."""
+        PartitionedBloom.commit -> _gc, operators/bloom.py)."""
         import json
         import os
         import uuid
@@ -301,8 +301,8 @@ class AnnIndex:
     @classmethod
     def _gc(cls, root: str, keep: int = 2) -> None:
         """Reclaim version directories nothing can read anymore — the
-        mirror of ``PartitionedFilter._gc``
-        (operators/partitioned_filter.py): keep the newest ``keep``
+        mirror of ``PartitionedBloom._gc``
+        (operators/bloom.py): keep the newest ``keep``
         PUBLISHED versions (pointer + one step of time travel) and drop
         (a) published versions older than that and
         (b) unpublished orphans ABOVE the pointer left by a crashed

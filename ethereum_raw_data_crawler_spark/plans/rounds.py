@@ -58,12 +58,11 @@ from ethereum_raw_data_crawler_spark.functions.urls import (
     canonicalize_url,
     url_hash64,
 )
-from ethereum_raw_data_crawler_spark.operators.bloom import PartitionedBloom
-from ethereum_raw_data_crawler_spark.operators.cuckoo import PartitionedCuckoo
-from ethereum_raw_data_crawler_spark.operators.linkrank import pagerank
-from ethereum_raw_data_crawler_spark.operators.partitioned_filter import (
-    PartitionedFilter,
+from ethereum_raw_data_crawler_spark.operators.bloom import (
+    PartitionedBloom,
+    bloom_size,
 )
+from ethereum_raw_data_crawler_spark.operators.linkrank import pagerank
 from ethereum_raw_data_crawler_spark.operators.priority_pop import (
     assign_global_seq,
     pop_batch,
@@ -100,13 +99,6 @@ _TABLES = {
     "health": "append",
     "host_edges": "append",
     "frontier": "mor",
-}
-
-#: ``seen_filter`` value -> the partitioned prefilter it selects; ``None``
-#: runs with no prefilter (every candidate takes the exact anti-join)
-SEEN_FILTERS: dict[str, type[PartitionedFilter]] = {
-    "bloom": PartitionedBloom,
-    "cuckoo": PartitionedCuckoo,
 }
 
 
@@ -148,6 +140,25 @@ def corpus_frame(pages: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
+def _refuse_duplicate_hosts(robots: DataFrame) -> None:
+    """Refuse a robots dim that lists a host twice: discovery joins
+    candidates to it on ``host``, so each such row would admit the
+    candidate again and the URL would be popped and fetched twice (the
+    oracle keeps one row per host). One aggregate over the input."""
+    dup = (
+        robots.where(F.col("host").isNotNull())
+        .groupBy("host")
+        .count()
+        .where(F.col("count") > 1)
+        .first()
+    )
+    if dup is not None:
+        raise ValueError(
+            f"robots lists host {dup['host']!r} {dup['count']} times; "
+            f"give one row per host"
+        )
+
+
 # Phase records. A frame a phase caches is registered in the engine's
 # scratch list, which the round drains (unpersists) when it ends.
 @dataclass
@@ -178,7 +189,6 @@ class CrawlEngine:
         bloom_buckets: int = 64,
         compact_debt_frac: float = 0.15,
         track_host_graph: bool = False,
-        seen_filter: str | None = "bloom",
     ) -> None:
         ship_package(spark)
         self.spark = spark
@@ -205,18 +215,9 @@ class CrawlEngine:
         # O(outlinks) map-side-combined aggregation per round that a
         # crawl which never rescores shouldn't pay.
         self.track_host_graph: bool = track_host_graph
-        # seen-set prefilter family: "bloom" (default, 9.6 bits/URL),
-        # "cuckoo" (~17.8 bits/URL, ~80x lower FPR, and DELETABLE — the
-        # forget_urls unlearn path stays on the fast probe; see
-        # operators/cuckoo.py for the full trade) or None (no prefilter)
-        if seen_filter is not None and seen_filter not in SEEN_FILTERS:
-            raise ValueError(
-                f"seen_filter must be one of {sorted(SEEN_FILTERS)} or None, "
-                f"got {seen_filter!r}"
-            )
-        self.seen_filter = seen_filter
-        self._filter_cls = SEEN_FILTERS.get(seen_filter)
-        self._bloom: PartitionedFilter | None = None
+        # the seen-set prefilter (operators/bloom.py), opened by create or
+        # resume
+        self._bloom: PartitionedBloom
         self._dims: dict[str, DataFrame] = {}
         self._scratch: list[DataFrame] = []
         self._egress = EgressWriter(egress_dir) if egress_dir else None
@@ -243,16 +244,16 @@ class CrawlEngine:
         # (operators/priority_pop.py), and bench.py still passes prune_pop
         kw.pop("prune_pop", None)
         auto_buckets = "bloom_buckets" not in kw
+        _refuse_duplicate_hosts(robots)
         SnapshotStore.create(store_root, _TABLES)
         eng = cls(spark, store_root, cfg, **kw)
-        if eng._filter_cls is not None:
-            if expected_keys is None:
-                # design capacity of the seen-set: seeds × a discovery
-                # growth allowance. Per-bucket growth absorbs overshoot;
-                # this only sizes the STARTING bitmaps + bucket count.
-                expected_keys = max(int(seeds.count()) * 16, 1 << 20)
-            if auto_buckets:
-                eng.bloom_buckets = eng._filter_cls.buckets_for(expected_keys)
+        if expected_keys is None:
+            # design capacity of the seen-set: seeds × a discovery growth
+            # allowance. Per-bucket growth absorbs overshoot; this only
+            # sizes the STARTING bitmaps + bucket count.
+            expected_keys = max(int(seeds.count()) * 16, 1 << 20)
+        if auto_buckets:
+            eng.bloom_buckets = PartitionedBloom.buckets_for(expected_keys)
         with open(os.path.join(store_root, "config.json"), "w") as fh:
             json.dump(
                 {
@@ -263,17 +264,13 @@ class CrawlEngine:
                     "bloom_buckets": eng.bloom_buckets,
                     "compact_debt_frac": eng.compact_debt_frac,
                     "track_host_graph": eng.track_host_graph,
-                    "seen_filter": eng.seen_filter,
                     "canon_version": CANON_VERSION,
                 },
                 fh,
             )
-        if eng._filter_cls is not None:
-            eng._bloom = eng._filter_cls.create(
-                store_root,
-                n_buckets=eng.bloom_buckets,
-                expected_keys=expected_keys,
-            )
+        eng._bloom = PartitionedBloom.create(
+            store_root, n_buckets=eng.bloom_buckets, expected_keys=expected_keys
+        )
         txn = eng.store.transaction(-1)
         txn.append(
             "corpus", corpus_frame(pages, eng.n_buckets), partition_by=["bucket"]
@@ -334,7 +331,8 @@ class CrawlEngine:
             )
         # every key is the one create writes: a config missing one is from
         # a store older than the layout (history, health, host_edges) that
-        # this engine reads, and fails here with a KeyError
+        # this engine reads, and fails here with a KeyError. A key create
+        # no longer writes (the prefilter choice) is ignored.
         eng = cls(
             spark,
             store_root,
@@ -345,25 +343,24 @@ class CrawlEngine:
             bloom_buckets=saved["bloom_buckets"],
             compact_debt_frac=saved["compact_debt_frac"],
             track_host_graph=saved["track_host_graph"],
-            seen_filter=saved["seen_filter"],
         )
         eng._read_constants()
         if eng._egress is not None:
             # publish-after-commit redelivery: any round committed before
             # the crash but never published goes out now (at-least-once)
             eng._egress.catch_up(spark, eng.store)
-        if eng._filter_cls is not None:
-            bloom_rnd = eng._filter_cls.latest_round(store_root)
-            if bloom_rnd is None:
-                # bitmaps lost entirely: rebuild from the seen table
-                # (correctness-neutral, executor-side Spark job)
-                eng._bloom = eng._bloom_rebuild_spark()
-            else:
-                eng._bloom = eng._filter_cls.load(store_root, bloom_rnd)
-                if bloom_rnd < eng.store.round:
-                    # a crash between the manifest swap and the bloom meta
-                    # write leaves the bitmaps behind the table: catch up
-                    eng._fold_seen(eng.store.round)
+        bloom_rnd = PartitionedBloom.latest_round(store_root)
+        if bloom_rnd is None:
+            # bitmaps lost, or a store created with another prefilter or
+            # none: rebuild from the seen table (correctness-neutral,
+            # executor-side Spark job)
+            eng._bloom = eng._bloom_rebuild_spark()
+        else:
+            eng._bloom = PartitionedBloom.load(store_root, bloom_rnd)
+            if bloom_rnd < eng.store.round:
+                # a crash between the manifest swap and the bloom meta
+                # write leaves the bitmaps behind the table: catch up
+                eng._fold_seen(eng.store.round)
         return eng
 
     # ------------------------------------------------------------ table reads
@@ -414,15 +411,13 @@ class CrawlEngine:
         """Unlearn URLs from the seen set — the takedown follow-up /
         content-expiry recrawl path. Deletes the ``seen`` rows (ground
         truth: the anti-join backstop immediately treats the URLs as
-        unseen, so a re-discovery re-enters the frontier) and, when the
-        configured prefilter is deletable (``seen_filter="cuckoo"``),
-        removes the keys from the filter too so re-discoveries stay on
-        the zero-shuffle definitely-new fast path. With the Bloom
-        prefilter the row delete alone is still CORRECT — the filter
-        over-approximates and the exact anti-join sees the deletion —
-        but every future sighting of a forgotten URL pays the slow path
-        forever (bloom bits cannot be unset); that asymmetry is the
-        cuckoo filter's reason to exist (operators/cuckoo.py).
+        unseen, so a re-discovery re-enters the frontier), then rebuilds
+        the Bloom buckets the forgotten keys hash to from the remaining
+        seen rows, each at its own size, so a re-discovery takes the
+        zero-shuffle definitely-new path again (Bloom bits cannot be
+        unset). A crash between the two leaves the filter
+        over-approximating, which is still correct: the exact anti-join
+        sees the deletion.
 
         Takedown lists are human-scale (bounded like the ≤200k
         driver-side delete-key path): keys are canonicalized and hashed
@@ -442,11 +437,19 @@ class CrawlEngine:
         n = self.store.delete_where(
             self.spark, "seen", SEEN, pred, self.store.round
         )
-        if self._bloom is not None and self._bloom.deletable:
-            keys_df = self.spark.createDataFrame(
-                [(h,) for h in hashes], "url_hash long"
+        if n:
+            bloom = self._bloom
+            bks = {h % bloom.n_buckets for h in hashes}
+            bloom.rebuild_buckets(
+                self.seen().select("url_hash"),
+                "url_hash",
+                self.store.round,
+                {
+                    b: {"n_bits": e["n_bits"], "k": e["k"]}
+                    for b, e in bloom.buckets.items()
+                    if b in bks
+                },
             )
-            self._bloom.delete_keys(keys_df, "url_hash", self.store.round)
         return n
 
     def as_of(self, rnd: int, name: str, schema) -> DataFrame:
@@ -517,27 +520,23 @@ class CrawlEngine:
             .withColumn("url_hash", F.xxhash64("url_canon"))
         )
         # seen-membership flag: Bloom kills the definitely-new rows map-side;
-        # only maybe-seen rows reach the exact join against the seen table
-        # (with no filter every candidate is maybe-seen). Gated-out rows are
-        # probed too: every counter and the admitted filter AND ``seen_hit``
-        # with pass_cap & pass_robots, so their flag is never read, and
-        # probing them spares a cached split of ``gated``
+        # only maybe-seen rows reach the exact join against the seen table.
+        # Gated-out rows are probed too: every counter and the admitted
+        # filter AND ``seen_hit`` with pass_cap & pass_robots, so their flag
+        # is never read, and probing them spares a cached split of ``gated``
         seen_keys = seen.select("url_hash").withColumn("seen_hit", F.lit(True))
-        new_def, maybe = (
-            self._bloom.probe_split(
-                gated, "url_hash", self.spark, scratch=self._scratch
-            )
-            if self._bloom is not None
-            else (None, gated)
+        new_def, maybe = self._bloom.probe_split(
+            gated, "url_hash", self.spark, scratch=self._scratch
         )
-        flagged = maybe.join(seen_keys, "url_hash", "left").withColumn(
-            "seen_hit", F.coalesce(F.col("seen_hit"), F.lit(False))
-        )
-        if new_def is not None:
-            flagged = new_def.withColumn("seen_hit", F.lit(False)).unionByName(
-                flagged
+        annotated = (
+            new_def.withColumn("seen_hit", F.lit(False))
+            .unionByName(
+                maybe.join(seen_keys, "url_hash", "left").withColumn(
+                    "seen_hit", F.coalesce(F.col("seen_hit"), F.lit(False))
+                )
             )
-        annotated = flagged.cache()
+            .cache()
+        )
         self._scratch.append(annotated)
 
         stats_row = annotated.agg(
@@ -634,14 +633,14 @@ class CrawlEngine:
         self._drain_scratch()
         return stats
 
-    def _bloom_rebuild_spark(self) -> PartitionedFilter:
+    def _bloom_rebuild_spark(self) -> PartitionedBloom:
         """Rebuild the partitioned bitmaps from the seen table — one Spark
         job (repartition keys by bucket, each task writes its buckets'
         bitmap files); the driver only sees per-bucket stat rows. Sized
         from the actual seen cardinality (parquet footer row counts, no
         data read) with 2x headroom."""
         frags = self.store.manifest()["tables"]["seen"]["fragments"]
-        pb = self._filter_cls.create(
+        pb = PartitionedBloom.create(
             self.store.root,
             n_buckets=self.bloom_buckets,
             expected_keys=2 * max(self.store.fragment_rows(frags), 1),
@@ -661,8 +660,6 @@ class CrawlEngine:
         driver). Buckets past their design capacity (saturation -> FPR
         collapse) are rebuilt alone at their next size from the seen
         table."""
-        if self._bloom is None:
-            return
         frags = [
             f
             for f in self.store.manifest()["tables"]["seen"]["fragments"]
@@ -675,10 +672,18 @@ class CrawlEngine:
             self._bloom.commit(rnd)
             return
         keys = self.store._read_fragments(self.spark, frags, SEEN).select("url_hash")
-        saturated = self._bloom.add_keys(keys, "url_hash", rnd)
+        bloom = self._bloom
+        saturated = bloom.add_keys(keys, "url_hash", rnd)
         if saturated:
-            self._bloom.grow_buckets(
-                self.seen().select("url_hash"), "url_hash", rnd, saturated
+            # each rebuilt bucket is sized for twice its key count
+            bloom.rebuild_buckets(
+                self.seen().select("url_hash"),
+                "url_hash",
+                rnd,
+                {
+                    b: bloom_size(2 * bloom.buckets[b]["n_added"], bloom.fpr)
+                    for b in saturated
+                },
             )
 
     # ------------------------------------------------------------- one round
@@ -951,9 +956,7 @@ class CrawlEngine:
         """Component-health snapshot (reference: performHealthCheck,
         crawler_service.go:666-907) — gauges already in hand, no job."""
         err_frac = (n_errors / n_popped) if n_popped else 0.0
-        sat = (
-            self._bloom.estimated_saturation() if self._bloom is not None else 0.0
-        )
+        sat = self._bloom.estimated_saturation()
         # frontier delete DEBT RATIO after this commit: (debt before + this
         # round's delete fragment) / (base rows after this commit), both
         # sides from parquet footers + counts already in hand — no job.

@@ -2,8 +2,10 @@
 
 import json
 import os
+import shutil
 
 from ethereum_raw_data_crawler_spark.__main__ import main
+from ethereum_raw_data_crawler_spark.functions.urls import canonicalize_url, url_hash64
 from ethereum_raw_data_crawler_spark.sources import synth
 
 
@@ -143,8 +145,10 @@ def test_cli_delete_health_egress(spark, tmp_path, capsys):
 
 
 def test_cli_cuckoo_crawl_and_forget(spark, tmp_path, capsys):
-    """--seen-filter cuckoo end to end + the forget subcommand: seen rows
-    deleted and the deletable prefilter unlearned (operators/cuckoo.py)."""
+    """The forget subcommand on a store crawled with the cuckoo seen filter
+    (its config names ``cuckoo`` and it has no ``bloom/``): the seen row is
+    deleted, the Bloom rebuilt from ``seen`` unlearns the key, and a
+    re-discovery re-admits the URL."""
     corpus = str(tmp_path / "corpus")
     synth.write_corpus(corpus, synth.T1)
     store = str(tmp_path / "store_ck")
@@ -158,12 +162,17 @@ def test_cli_cuckoo_crawl_and_forget(spark, tmp_path, capsys):
             "--politeness", os.path.join(corpus, "politeness.parquet"),
             "--rounds", "2",
             "--batch-size", "100",
-            "--seen-filter", "cuckoo",
         ]
     )
     assert rc == 0
     lines = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
     assert lines[0]["fetched"] > 0
+    shutil.rmtree(os.path.join(store, "bloom"))
+    with open(os.path.join(store, "config.json")) as fh:
+        saved = json.load(fh)
+    saved["seen_filter"] = "cuckoo"
+    with open(os.path.join(store, "config.json"), "w") as fh:
+        json.dump(saved, fh)
 
     # pick a fetched URL out of the store and forget it via the CLI
     from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
@@ -179,4 +188,12 @@ def test_cli_cuckoo_crawl_and_forget(spark, tmp_path, capsys):
     rc = main(["forget", "--store", store, "--urls", urls_file])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out == {"forgotten": 1, "requested": 1, "filter": "cuckoo"}
+    assert out == {"forgotten": 1, "requested": 1}
+    eng = CrawlEngine.resume(spark, store)
+    key = url_hash64(canonicalize_url(victim))
+    new_def, _ = eng._bloom.probe_split(
+        spark.createDataFrame([(key,)], "url_hash long"), "url_hash", spark
+    )
+    assert new_def.count() == 1
+    cands = spark.createDataFrame([(victim, 0)], "url string, priority int")
+    assert eng.admit(cands, eng.store.round + 1)["discovered"] == 1

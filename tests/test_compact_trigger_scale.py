@@ -68,7 +68,6 @@ def test_large_batch_crawl_compacts_at_most_once_in_three_rounds(
         # max_retries high: the same 1M URLs stay eligible all 3 rounds,
         # so every round pops a full production-size batch
         CrawlConfig(batch_size=BATCH, max_retries=10, hard_fail_retries=99),
-        seen_filter=None,  # no discovery in an all-miss crawl
         compact_every=1000,  # only the health trigger may compact
     )
     stats = eng.run(max_rounds=3)

@@ -3,6 +3,8 @@ crawl trace, seen set, extracted text, and final frontier state must match
 the pure-Python reference scheduler EXACTLY under the same seed list and
 politeness budget — the north_rule equality criteria."""
 
+import re
+
 import pandas as pd
 import pytest
 
@@ -288,3 +290,16 @@ def test_determinism_across_parallelism(spark, t1_tables, tmp_path):
             spark.conf.set("spark.sql.shuffle.partitions", "8")
     assert traces[0] == traces[1]
     assert len(traces[0]) > 0
+
+
+def test_create_refuses_a_robots_dim_listing_a_host_twice(spark, t1_tables, tmp_path):
+    """Discovery joins candidates to the robots dim on host, so a host
+    listed twice would admit each of its URLs twice (popped and fetched
+    twice) where the oracle keeps one row per host: create refuses it,
+    naming the host, before it writes a store."""
+    robots = t1_tables["robots"]
+    host = robots["host"].iloc[0]
+    tabs = {**t1_tables, "robots": pd.concat([robots, robots.iloc[[0]]])}
+    with pytest.raises(ValueError, match=re.escape(repr(host))):
+        _mk_engine(spark, tmp_path, tabs, CrawlConfig(batch_size=50))
+    assert not (tmp_path / "store").exists()

@@ -65,7 +65,6 @@ def eng(spark, tmp_path):
         spark.createDataFrame(FAILURES),
         CrawlConfig(batch_size=50),
         n_buckets=4,
-        seen_filter=None,
     )
 
 

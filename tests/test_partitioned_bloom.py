@@ -1,8 +1,9 @@
-"""Partitioned seen filter, run over both kernels (Bloom and cuckoo):
-executor-side build/fold/growth as Spark jobs, bucket-aligned probe past
-the broadcast threshold with ZERO driver filter residency, atomic meta
-commit + GC, crash catch-up of the filter meta, and the NULL-predicate
-DELETE WHERE fix."""
+"""Partitioned Bloom seen filter: executor-side build/fold/growth as Spark
+jobs, bucket-aligned probe past the broadcast threshold with ZERO driver
+filter residency, atomic meta commit + GC, crash catch-up of the filter
+meta, the per-bucket rebuild from ``seen`` (``forget_urls``), and the
+NULL-predicate DELETE WHERE fix. Resume of a store without a Bloom is in
+test_cuckoo.py."""
 
 import glob
 import os
@@ -14,30 +15,34 @@ from pyspark.sql import functions as F, types as T
 
 from ethereum_raw_data_crawler_spark import gates
 from ethereum_raw_data_crawler_spark.config import CrawlConfig
-from ethereum_raw_data_crawler_spark.operators.bloom import BloomFilter
+from ethereum_raw_data_crawler_spark.functions.urls import (
+    canonicalize_url,
+    url_hash64,
+)
+from ethereum_raw_data_crawler_spark.operators.bloom import (
+    BloomFilter,
+    PartitionedBloom,
+    bloom_size,
+)
 from ethereum_raw_data_crawler_spark.plans.oracle import run_oracle
-from ethereum_raw_data_crawler_spark.plans.rounds import SEEN_FILTERS, CrawlEngine
+from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
+from ethereum_raw_data_crawler_spark.schemas import PAGES_OUT
 from ethereum_raw_data_crawler_spark.sources.tablestore import SnapshotStore
-
-KINDS = sorted(SEEN_FILTERS)
 
 
 # ------------------------------------------------ aligned probe
 
 
-@pytest.mark.parametrize(
-    "kind,n", [("bloom", 10_000_000), ("cuckoo", 200_000)], ids=KINDS
-)
-def test_partitioned_filter_aligned_probe(spark, tmp_path, monkeypatch, kind, n):
-    """Build the seen filter from n keys entirely executor-side (10M for
-    the Bloom; the cuckoo insert is costlier, so it runs small), then
+def test_partitioned_filter_aligned_probe(spark, tmp_path, monkeypatch):
+    """Build the seen filter from 10M keys entirely executor-side, then
     probe with the broadcast path disabled: the candidates repartition by
     bucket, each task loads only its buckets' files, and the DRIVER
     process never loads a filter file at all (numpy.load is poisoned
     driver-side for the duration — Python workers are separate processes
     and re-import numpy, so only a driver-side load would trip it)."""
+    n = 10_000_000
     keys = spark.range(n).select(F.xxhash64("id").alias("url_hash"))
-    pf = SEEN_FILTERS[kind].create(
+    pf = PartitionedBloom.create(
         str(tmp_path), n_buckets=64, expected_keys=2 * n, rnd=-1
     )
     saturated = pf.add_keys(keys, "url_hash", 0)
@@ -75,7 +80,7 @@ def test_partitioned_filter_aligned_probe(spark, tmp_path, monkeypatch, kind, n)
 
 
 def _kernel_split(pf, keys):
-    """The set of ``keys`` that ``pf``'s bucket kernels call maybe-seen,
+    """The set of ``keys`` that ``pf``'s bucket bitmaps call maybe-seen,
     computed driver-side from the bucket files: what the probe answers."""
     keys = np.asarray(keys, dtype=np.int64)
     bks = np.mod(keys, pf.n_buckets)
@@ -83,20 +88,19 @@ def _kernel_split(pf, keys):
     for b, e in pf.buckets.items():
         if e.get("file"):
             sel = keys[bks == b]
-            f = pf._read(os.path.join(pf.dir, e["file"]), e)
+            f = BloomFilter.read(os.path.join(pf.dir, e["file"]), e)
             maybe |= set(sel[f.contains_many(sel)].tolist())
     return maybe
 
 
 @pytest.mark.parametrize("mode", ["broadcast", "aligned"])
-@pytest.mark.parametrize("kind", KINDS)
-def test_probe_split_matches_the_kernels(spark, tmp_path, monkeypatch, kind, mode):
+def test_probe_split_matches_the_kernels(spark, tmp_path, monkeypatch, mode):
     """An empty filter tags every row definitely new without probing; a
     filled one ships only the key column to Python and splits exactly as
-    the bucket kernels answer, in both probe modes. Every column of the
+    the bucket bitmaps answer, in both probe modes. Every column of the
     candidates survives either branch."""
     n, B = 4_000, 8
-    pf = SEEN_FILTERS[kind].create(
+    pf = PartitionedBloom.create(
         str(tmp_path), n_buckets=B, expected_keys=4 * n, rnd=-1
     )
     cands = spark.range(2 * n).select(
@@ -127,24 +131,19 @@ def test_probe_split_matches_the_kernels(spark, tmp_path, monkeypatch, kind, mod
     assert all(got[k] is not None for k in got)
 
 
-#: starting bucket sizes whose design capacity 1,000 keys overrun
-TINY = {"bloom": {"n_bits": 256, "k": 3}, "cuckoo": {"nb": 256}}
-
-
-@pytest.mark.parametrize("kind", KINDS)
-def test_partitioned_filter_per_bucket_growth(spark, tmp_path, kind):
+def test_partitioned_filter_per_bucket_growth(spark, tmp_path):
     """A bucket pushed past design capacity is rebuilt ALONE at its next
     size; untouched buckets keep their files."""
-    pf = SEEN_FILTERS[kind].create(
-        str(tmp_path), n_buckets=4, size=TINY[kind], rnd=-1
-    )
+    # a starting bucket size whose design capacity 1,000 keys overrun
+    tiny = {"n_bits": 256, "k": 3}
+    pf = PartitionedBloom.create(str(tmp_path), n_buckets=4, size=tiny, rnd=-1)
     # keys all land in bucket 0: pmod(4k, 4) == 0
     keys = spark.range(1_000).select((F.col("id") * 4).alias("url_hash"))
     saturated = pf.add_keys(keys, "url_hash", 0)
     assert saturated == [0]
     before = {b: e["file"] for b, e in pf.buckets.items()}
-    pf.grow_buckets(keys, "url_hash", 0, saturated)
-    assert pf._bits(pf.buckets[0]) > pf._bits(TINY[kind])
+    pf.rebuild_buckets(keys, "url_hash", 0, {0: bloom_size(2_000)})
+    assert pf.buckets[0]["n_bits"] > tiny["n_bits"]
     assert pf.buckets[0]["file"] != before[0]
     assert not pf.saturated_buckets()
     # growth preserved membership: every key still maybe-present
@@ -152,10 +151,8 @@ def test_partitioned_filter_per_bucket_growth(spark, tmp_path, kind):
     assert new_def.count() == 0
 
 
-@pytest.mark.parametrize("kind", KINDS)
-def test_partitioned_filter_meta_is_atomic_and_gcd(spark, tmp_path, kind):
-    cls = SEEN_FILTERS[kind]
-    pf = cls.create(str(tmp_path), n_buckets=4, rnd=-1)
+def test_partitioned_filter_meta_is_atomic_and_gcd(spark, tmp_path):
+    pf = PartitionedBloom.create(str(tmp_path), n_buckets=4, rnd=-1)
     for rnd in range(5):
         keys = spark.range(rnd * 100, rnd * 100 + 100).select(
             F.col("id").alias("url_hash")
@@ -166,13 +163,13 @@ def test_partitioned_filter_meta_is_atomic_and_gcd(spark, tmp_path, kind):
     assert metas[-1].endswith("meta-000004.json")
     assert not glob.glob(os.path.join(pf.dir, ".meta.*.tmp"))
     # every surviving bucket file is referenced by a surviving meta
-    assert cls.latest_round(str(tmp_path)) == 4
-    pf2 = cls.load(str(tmp_path), 4)
+    assert PartitionedBloom.latest_round(str(tmp_path)) == 4
+    pf2 = PartitionedBloom.load(str(tmp_path), 4)
     assert pf2.buckets == pf.buckets and pf2.round == 4
     live = {e["file"] for e in pf2.buckets.values()}
     on_disk = {
         os.path.basename(f)
-        for f in glob.glob(os.path.join(pf.dir, pf.FILE_PREFIX + "*" + pf.FILE_EXT))
+        for f in glob.glob(os.path.join(pf.dir, "b*.npy"))
     }
     assert live <= on_disk
     assert pf2.n_added_total == 500
@@ -195,8 +192,7 @@ def _mk_engine(spark, tmp_path, tabs, cfg, politeness, **kw):
     )
 
 
-@pytest.mark.parametrize("kind", KINDS)
-def test_filter_meta_catchup_on_resume(spark, t1_tables, tmp_path, kind):
+def test_filter_meta_catchup_on_resume(spark, t1_tables, tmp_path):
     """A crash between the table commit and the filter meta write leaves
     the filter one round behind; resume must fold in the missed seen
     fragment (NOT a full rebuild, NOT a silent skip — a stale filter means
@@ -209,18 +205,16 @@ def test_filter_meta_catchup_on_resume(spark, t1_tables, tmp_path, kind):
         tabs["pages"], tabs["seeds"], tabs["robots"], relaxed,
         tabs["fetch_failures"], cfg,
     )
-    eng = _mk_engine(spark, tmp_path, tabs, cfg, relaxed, seen_filter=kind)
+    eng = _mk_engine(spark, tmp_path, tabs, cfg, relaxed)
     eng.run(max_rounds=2)
     last = eng.store.round
     fdir = eng._bloom.dir
     del eng
     # simulate the crash: drop the newest filter meta only
     os.unlink(os.path.join(fdir, f"meta-{last:06d}.json"))
-    cls = SEEN_FILTERS[kind]
-    assert cls.latest_round(str(tmp_path / "store")) == last - 1
+    assert PartitionedBloom.latest_round(str(tmp_path / "store")) == last - 1
 
     resumed = CrawlEngine.resume(spark, str(tmp_path / "store"))
-    assert type(resumed._bloom) is cls
     assert resumed._bloom.round == last  # caught up, not stale
     # no false negatives after catch-up: every seen key is maybe-present
     new_def, _ = resumed._bloom.probe_split(
@@ -233,6 +227,65 @@ def test_filter_meta_catchup_on_resume(spark, t1_tables, tmp_path, kind):
         for r in resumed.read_trace().orderBy("round", "seq").collect()
     ]
     assert trace == res.trace
+
+
+def test_rebuild_buckets_drops_a_bucket_left_empty(spark, tmp_path):
+    """Rebuilt buckets hold only the keys still given: one left with none
+    loses its file, so its old keys probe definitely new; a bucket not
+    rebuilt keeps its file."""
+    pf = PartitionedBloom.create(str(tmp_path), n_buckets=4, rnd=-1)
+    keys = spark.range(8).select(F.col("id").alias("url_hash"))  # 2 per bucket
+    pf.add_keys(keys, "url_hash", 0)
+    before = dict(pf.buckets)
+    survivors = keys.where(~F.col("url_hash").isin(1, 5, 6))
+    own = {b: {"n_bits": e["n_bits"], "k": e["k"]} for b, e in before.items()}
+    pf.rebuild_buckets(survivors, "url_hash", 1, {1: own[1], 2: own[2]})
+    assert 1 not in pf.buckets
+    assert pf.buckets[2]["file"] != before[2]["file"]
+    assert pf.buckets[2]["n_added"] == 1
+    assert pf.buckets[0] == before[0] and pf.buckets[3] == before[3]
+    new_def, _ = pf.probe_split(keys, "url_hash", spark)
+    assert sorted(r["url_hash"] for r in new_def.collect()) == [1, 5, 6]
+
+
+def test_engine_forget_urls_unlearns(spark, t1_tables, tmp_path):
+    """forget_urls deletes the seen row and rebuilds only the Bloom bucket
+    its key hashes to: the key probes definitely new, every remaining
+    seen key still probes maybe-seen, and a re-discovery takes the
+    definitely-new path and re-admits the URL."""
+    tabs = t1_tables
+    eng = _mk_engine(
+        spark, tmp_path, tabs, CrawlConfig(batch_size=200), tabs["politeness"]
+    )
+    eng.run(max_rounds=2)
+    victim = eng.store.read(spark, "pages_out", PAGES_OUT).select("url").first()["url"]
+    key = url_hash64(canonicalize_url(victim))
+    seen_before = eng.seen().count()
+    files_before = {b: e["file"] for b, e in eng._bloom.buckets.items()}
+
+    assert eng.forget_urls([victim]) == 1
+    assert eng.forget_urls([victim]) == 0  # nothing left to forget
+    seen = eng.seen()
+    assert seen.count() == seen_before - 1
+    changed = {
+        b for b, f in files_before.items() if eng._bloom.buckets.get(b, {}).get("file") != f
+    }
+    assert changed == {key % eng._bloom.n_buckets}
+    cand = spark.createDataFrame(pd.DataFrame({"url_hash": [key]}))
+    new_def, _ = eng._bloom.probe_split(cand, "url_hash", spark)
+    assert new_def.count() == 1
+    new_def, _ = eng._bloom.probe_split(seen.select("url_hash"), "url_hash", spark)
+    assert new_def.count() == 0
+
+    rnd = eng.store.round + 1
+    cands = spark.createDataFrame([(victim, 0)], "url string, priority int")
+    _, stats = eng._discover(cands, rnd, eng.seen())
+    tagged = eng._scratch[0]  # the probe's split, appended first
+    assert [r["_maybe_seen"] for r in tagged.collect()] == [False]
+    eng._drain_scratch()
+    assert stats["discovered"] == 1
+    assert eng.admit(cands, rnd)["discovered"] == 1
+    assert eng.seen().count() == seen_before
 
 
 # ------------------------------------------------ DELETE WHERE with NULLs
@@ -317,45 +370,19 @@ def test_delete_where_store_root_with_space(spark, tmp_path):
     assert left == {("a", 1)}
 
 
-# ------------------------------------------------ legacy bloom snapshot
-
-
-def test_bloom_load_estimates_n_added_for_legacy_snapshot(tmp_path):
-    """Snapshots saved before the n_added field must still trip
-    should_grow() near saturation (ADVICE r2, low): estimate the count
-    from the bitmap instead of defaulting to 0."""
-    rng = np.random.default_rng(5)
-    bf = BloomFilter(n_bits=1 << 10, k=5)
-    bf.add_many(rng.integers(-(2**62), 2**62, size=2_000, dtype=np.int64))
-    assert bf.should_grow()
-    legacy = str(tmp_path / "legacy.npz")
-    np.savez(legacy, words=bf.words, n_bits=bf.n_bits, k=bf.k)  # no n_added
-    loaded = BloomFilter.load(legacy)
-    assert loaded.n_added > 0
-    assert loaded.should_grow()
-
-
 # ------------------------------------------------ capacity-driven sizing
 
 
-@pytest.mark.parametrize(
-    "kind,bits_per_key,table",
-    [
-        ("bloom", 9.585, {10**6: 64, 10**9: 64, 10**10: 90, 10**11: 893}),
-        ("cuckoo", 16 / 0.9, {10**8: 64, 10**10: 166, 10**11: 1656}),
-    ],
-    ids=KINDS,
-)
-def test_buckets_for_scales_with_expected_keys(kind, bits_per_key, table):
-    """The bucket-count default follows each kernel module's docstring
+def test_buckets_for_scales_with_expected_keys():
+    """The bucket-count default follows operators/bloom.py's docstring
     sizing table: one bucket's file capped at a single task's working
     size, floor 64."""
-    cls = SEEN_FILTERS[kind]
-    assert {n: cls.buckets_for(n) for n in table} == table
+    table = {10**6: 64, 10**9: 64, 10**10: 90, 10**11: 893}
+    assert {n: PartitionedBloom.buckets_for(n) for n in table} == table
     # a bucket file never exceeds the target
     for n in (10**9, 10**10, 10**11):
-        b = cls.buckets_for(n)
-        per_bucket_bytes = n * bits_per_key / 8 / b
+        b = PartitionedBloom.buckets_for(n)
+        per_bucket_bytes = n * 9.585 / 8 / b
         assert per_bucket_bytes <= (128 << 20) + 1
 
 
@@ -384,7 +411,7 @@ def test_engine_create_defaults_buckets_from_expected_keys(
     # an explicit bloom_buckets always wins over the derivation (64 here).
     # 10^8 keys, not 10^10: 8 buckets sized for 10^10 keys are 1.8 GB
     # bitmaps each, all built at once in RAM and written at create
-    assert eng._filter_cls.buckets_for(10**8) == 64
+    assert PartitionedBloom.buckets_for(10**8) == 64
     eng2 = CrawlEngine.create(
         spark,
         str(tmp_path / "store2"),

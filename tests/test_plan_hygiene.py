@@ -8,8 +8,8 @@
   the buckets its batch hashes into;
 * a small round's fixed cost stays small: its job and task counts, the
   seen-filter fold's width, and the per-engine constants;
-* every url is canonicalized once (one ArrowEvalPython), and an empty
-  frame runs no Python.
+* every url is canonicalized once (one canonicalizer ArrowEvalPython), and
+  an empty frame runs no Python.
 """
 
 import re
@@ -112,7 +112,7 @@ def test_corpus_landing_and_discover_canonicalize_once(spark, t1_tables, tmp_pat
     corpus = corpus_frame(spark.createDataFrame(t1_tables["pages"]), 8)
     corpus.collect()
     assert len(_python_evals(_plan(corpus))) == 1
-    eng = _t1_engine(spark, t1_tables, str(tmp_path / "store"), seen_filter=None)
+    eng = _t1_engine(spark, t1_tables, str(tmp_path / "store"))
     cands = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -125,7 +125,9 @@ def test_corpus_landing_and_discover_canonicalize_once(spark, t1_tables, tmp_pat
     assert rows.count() == stats["discovered"] == 1
     plan = _plan(rows)
     eng._drain_scratch()
-    assert len(_python_evals(plan)) == 1, plan
+    # the other eval is the seen filter's probe (maybe_seen)
+    canon = [e for e in _python_evals(plan) if "canonicalize" in e]
+    assert len(canon) == 1, plan
 
 
 def test_empty_frame_runs_no_python(spark):
@@ -267,7 +269,7 @@ def test_corpus_fetch_prunes_buckets(spark, t1_tables, tmp_path):
 
     n_buckets = 16
     eng = _t1_engine(
-        spark, t1_tables, str(tmp_path / "store"), seen_filter=None, n_buckets=n_buckets
+        spark, t1_tables, str(tmp_path / "store"), n_buckets=n_buckets
     )
     files = eng.store.partition_files("corpus")
     on_disk: dict[str, list[str]] = {}
@@ -394,7 +396,7 @@ def test_fetch_is_one_bucket_aligned_plan_at_every_batch_size(
 
     n_buckets = 16
     eng = _t1_engine(
-        spark, t1_tables, str(tmp_path / "store"), seen_filter=None, n_buckets=n_buckets
+        spark, t1_tables, str(tmp_path / "store"), n_buckets=n_buckets
     )
     # checkpointed, the popped rows plan as a scan, so every exchange in
     # the plan below is the fetch's own
@@ -460,7 +462,10 @@ def test_filter_fold_runs_in_cores_tasks_and_growth_per_bucket(spark, tmp_path):
     """An add folds its buckets in at most ``defaultParallelism`` tasks —
     several buckets per task, every key still found. Growth rebuilds only
     the grown buckets, one bucket per task."""
-    from ethereum_raw_data_crawler_spark.operators.bloom import PartitionedBloom
+    from ethereum_raw_data_crawler_spark.operators.bloom import (
+        PartitionedBloom,
+        bloom_size,
+    )
 
     n_buckets, cores = 64, spark.sparkContext.defaultParallelism
     assert cores < n_buckets
@@ -476,8 +481,9 @@ def test_filter_fold_runs_in_cores_tasks_and_growth_per_bucket(spark, tmp_path):
     assert saturated  # 20k keys overrun 64 buckets of 1024 bits
     grow = saturated[:3]
     before = {b: e["file"] for b, e in pf.buckets.items()}
+    sizes = {b: bloom_size(2 * pf.buckets[b]["n_added"]) for b in grow}
     _, _, tasks = _counted(
-        spark, lambda: pf.grow_buckets(keys, "url_hash", 1, grow)
+        spark, lambda: pf.rebuild_buckets(keys, "url_hash", 1, sizes)
     )
     assert max(tasks.values()) == n_buckets, tasks
     changed = {b for b, e in pf.buckets.items() if e["file"] != before[b]}
@@ -498,7 +504,7 @@ def test_pop_cap_is_computed_once_per_engine(spark, t1_tables, tmp_path, monkeyp
         rounds, "pop_cap", lambda *a: calls.append(a) or real(*a)
     )
     root = str(tmp_path / "store")
-    eng = _t1_engine(spark, t1_tables, root, seen_filter=None)
+    eng = _t1_engine(spark, t1_tables, root)
     assert len(calls) == 1
     first, first_jobs, _ = _counted(spark, lambda: eng._pop(1))
     again, again_jobs, _ = _counted(spark, lambda: eng._pop(1))

@@ -2,6 +2,8 @@
 (takedown path), size-aware MOR delete resolution, Bloom sizing/growth,
 manifest-history time travel, no-empty-final-round, and health rows."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -12,6 +14,7 @@ from ethereum_raw_data_crawler_spark.config import CrawlConfig
 from ethereum_raw_data_crawler_spark.operators.bloom import (
     BloomFilter,
     PartitionedBloom,
+    bloom_size,
 )
 from ethereum_raw_data_crawler_spark.plans.oracle import run_oracle
 from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
@@ -130,35 +133,54 @@ def test_mor_large_delete_set_not_broadcast(spark, tmp_path, monkeypatch):
 # --------------------------------------------------------------- Bloom growth
 
 
-def test_bloom_sized_for_and_growth_keeps_fpr_low():
-    """Insert 10x the initial capacity with engine-style rebuild-on-grow:
-    FPR stays < 5% and there are never false negatives."""
+def _keys(spark, keys):
+    return spark.createDataFrame(pd.DataFrame({"url_hash": keys}))
+
+
+def test_bloom_sized_for_and_growth_keeps_fpr_low(spark, tmp_path):
+    """Insert 10x a bucket's design capacity in batches through the
+    engine's fold-then-grow path (CrawlEngine._fold_seen): the bucket
+    ends unsaturated at a larger size, its FPR stays < 5% and there are
+    never false negatives."""
     rng = np.random.default_rng(11)
-    bf = BloomFilter.sized_for(1_000, fpr=0.01)
+    pf = PartitionedBloom.create(str(tmp_path), n_buckets=1, expected_keys=1_000)
+    start_bits = pf.default_size["n_bits"]
     inserted = np.array([], dtype=np.int64)
-    for _ in range(10):
+    for rnd in range(10):
         batch = rng.integers(-(2**62), 2**62, size=1_000, dtype=np.int64)
         inserted = np.concatenate([inserted, batch])
-        bf.add_many(batch)
-        if bf.should_grow():  # the engine's rebuild path
-            bf = BloomFilter.sized_for(2 * bf.n_added, fpr=0.01)
-            bf.add_many(inserted)
+        saturated = pf.add_keys(_keys(spark, batch), "url_hash", rnd)
+        if saturated:
+            pf.rebuild_buckets(
+                _keys(spark, inserted),
+                "url_hash",
+                rnd,
+                {b: bloom_size(2 * pf.buckets[b]["n_added"]) for b in saturated},
+            )
+    assert not pf.saturated_buckets()
+    entry = pf.buckets[0]
+    assert entry["n_bits"] > start_bits and entry["n_added"] == len(inserted)
+    bf = BloomFilter.read(os.path.join(pf.dir, entry["file"]), entry)
     assert bf.contains_many(inserted).all()  # no false negatives, ever
     fresh = rng.integers(-(2**62), 2**62, size=20_000, dtype=np.int64)
     fpr = bf.contains_many(fresh).mean()
     assert fpr < 0.05, fpr
-    assert bf.n_bits > BloomFilter.sized_for(1_000).n_bits
 
 
-def test_fixed_bloom_saturates_without_growth():
-    """Control: the round-1 fixed-size behavior really was the failure
-    mode the growth path fixes."""
+def test_fixed_bloom_saturates_without_growth(spark, tmp_path):
+    """Control: without growth a fixed-size bucket saturates — its FPR
+    collapses and ``saturated_buckets`` names it — the failure mode the
+    growth path fixes."""
     rng = np.random.default_rng(12)
-    bf = BloomFilter(n_bits=1 << 10, k=5)
-    bf.add_many(rng.integers(-(2**62), 2**62, size=5_000, dtype=np.int64))
+    pf = PartitionedBloom.create(
+        str(tmp_path), n_buckets=1, size={"n_bits": 1 << 10, "k": 5}
+    )
+    keys = rng.integers(-(2**62), 2**62, size=5_000, dtype=np.int64)
+    assert pf.add_keys(_keys(spark, keys), "url_hash", 0) == [0]
+    assert pf.estimated_saturation() > 0.5
     fresh = rng.integers(-(2**62), 2**62, size=5_000, dtype=np.int64)
-    assert bf.contains_many(fresh).mean() > 0.5  # saturated: FPR collapsed
-    assert bf.should_grow()
+    _, maybe = pf.probe_split(_keys(spark, fresh), "url_hash", spark)
+    assert maybe.count() / len(fresh) > 0.5  # saturated: FPR collapsed
 
 
 def test_engine_bloom_grows_mid_crawl(spark, t1_tables, tmp_path):
